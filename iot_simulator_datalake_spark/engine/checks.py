@@ -13,9 +13,18 @@ README-documented expectation policies:
   inline during a model build via :func:`expect`.
 
 Pass criterion everywhere: the violation query returns 0 rows.
-At scale the count is bounded with ``limit(n+1)`` so a check never
-scans more than it must once violations exist; the violation DataFrame
-itself is lazy and fully pushdown-optimizable.
+
+Cost model.  The generic tests carry what they check as plain data
+(:class:`Generic`), so :meth:`Engine.test` evaluates them fused: every
+``not_null`` / ``accepted_values`` on a relation is one conditional
+count in a single aggregate pass, and each ``unique`` key is one
+grouped pass that the row-level counts ride along in
+(:func:`count_violations`).  Their counts are exact; samples are
+fetched only for checks that failed.  Every other check — singular,
+relationship, freshness, hand-built — runs alone through
+:meth:`Check.run`, whose count is bounded with ``limit(n+1)`` so it
+never scans more than it must once violations exist.  Violation
+DataFrames stay lazy and fully pushdown-optimizable.
 """
 
 from __future__ import annotations
@@ -28,7 +37,7 @@ from typing import TYPE_CHECKING, Any
 from pyspark.sql import functions as F
 
 if TYPE_CHECKING:  # pragma: no cover
-    from pyspark.sql import DataFrame
+    from pyspark.sql import Column, DataFrame
     from .runner import Engine
 
 
@@ -43,16 +52,66 @@ class OnViolation(enum.Enum):
 class CheckResult:
     name: str
     passed: bool
-    violations: int          # capped at sample cap + 1 for scale safety
+    #: exact for generic checks fused by Engine.test; capped at the
+    #: sample cap + 1 for checks run alone (Check.run)
+    violations: int
     sample: list[dict]
+
+
+def _ref(df: "DataFrame", column: str) -> "Column":
+    """``column`` of ``df``: a top-level name taken literally (so a
+    name containing a dot is not read as a struct path), anything else
+    as a column path."""
+    if column in df.columns:
+        return F.col("`" + column.replace("`", "``") + "`")
+    return F.col(column)
+
+
+@dataclass(frozen=True)
+class Generic:
+    """What a generic test checks, as plain data.  Columns are built
+    per DataFrame, never stored: a Column belongs to the JVM that made
+    it."""
+    kind: str                # "not_null" | "accepted_values" | "unique"
+    column: str
+    values: tuple = ()       # accepted_values only
+
+    def violating(self, df: "DataFrame") -> "Column":
+        """Row-level violation predicate (not_null, accepted_values)."""
+        c = _ref(df, self.column)
+        if self.kind == "not_null":
+            return c.isNull()
+        if self.kind == "accepted_values":
+            return ~c.isin(list(self.values)) & c.isNotNull()
+        raise ValueError(f"{self.kind} is not a row-level check")
+
+    def violations(self, df: "DataFrame") -> "DataFrame":
+        if self.kind != "unique":
+            return df.filter(self.violating(df))
+        # aggregate under an unambiguous alias: groupBy(col).count() on
+        # a column itself NAMED "count" yields two "count" columns and
+        # the filter raises AMBIGUOUS_REFERENCE instead of evaluating
+        return (df.groupBy(_ref(df, self.column))
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .filter(F.col("__n") > 1))
 
 
 @dataclass
 class Check:
-    """A named violation query over a materialized relation."""
+    """A named violation query over a materialized relation.
+
+    Generic tests set ``generic`` and derive ``builder`` from it; every
+    other check supplies its own ``builder``."""
     name: str
     relation: str            # qualified model name the check targets
-    builder: Callable[["DataFrame"], "DataFrame"]
+    builder: Callable[["DataFrame"], "DataFrame"] | None = None
+    generic: Generic | None = None
+
+    def __post_init__(self) -> None:
+        if self.builder is None:
+            if self.generic is None:
+                raise ValueError(f"check {self.name} needs a builder")
+            self.builder = self.generic.violations
 
     def violations(self, engine: "Engine") -> "DataFrame":
         return self.builder(engine.table(self.relation))
@@ -63,37 +122,70 @@ class Check:
             name=self.name, passed=not rows, violations=len(rows),
             sample=[r.asDict(recursive=True) for r in rows[:max_sample]])
 
+    def result(self, engine: "Engine", violations: int,
+               max_sample: int = 5) -> CheckResult:
+        """Result for an already-counted check: the sample is fetched
+        only when it failed."""
+        rows = (self.violations(engine).limit(max_sample).collect()
+                if violations else [])
+        return CheckResult(
+            name=self.name, passed=not violations, violations=violations,
+            sample=[r.asDict(recursive=True) for r in rows])
+
+
+def count_violations(df: "DataFrame",
+                     generics: Sequence[Generic]) -> list[int]:
+    """Exact violation counts of generic checks on one relation, in
+    ``generics`` order, in one collect per ``unique`` key (one in all
+    when there is none).
+
+    The row-level checks compile to conditional counts in one
+    aggregate pass (the :func:`~.metrics.metrics_frame` idiom).  Each
+    ``unique`` key is a ``groupBy(key)`` that counts keys with n > 1,
+    the NULL key included; the row-level counts ride along in the
+    first of these passes as per-group partial counts.
+    """
+    rows = [i for i, g in enumerate(generics) if g.kind != "unique"]
+    flags = [F.count(F.when(generics[i].violating(df), 1)).alias(f"__r{i}")
+             for i in rows]
+    keys = list(dict.fromkeys(g.column for g in generics
+                              if g.kind == "unique"))
+    counts = df.agg(*flags).first().asDict() if not keys else {}
+    for n, key in enumerate(keys):
+        ride = rows if n == 0 else []
+        # the key is re-aliased so no column name of the relation can
+        # clash with the aggregate's own output names
+        per_key = df.groupBy(_ref(df, key).alias("__k")).agg(
+            F.count(F.lit(1)).alias("__n"), *flags[:len(ride)])
+        counts.update(per_key.agg(
+            F.count(F.when(F.col("__n") > 1, 1)).alias(f"__u{n}"),
+            *[F.coalesce(F.sum(f"__r{i}"), F.lit(0)).alias(f"__r{i}")
+              for i in ride]).first().asDict())
+    return [counts[f"__u{keys.index(g.column)}"] if g.kind == "unique"
+            else counts[f"__r{i}"] for i, g in enumerate(generics)]
+
 
 # -- generic tests (⇔ dbt schema tests) -----------------------------------
 
 def not_null(relation: str, column: str) -> Check:
     """iot_events_models.yml:9-27 — violation = rows with NULL column."""
-    return Check(
-        name=f"not_null__{relation}__{column}", relation=relation,
-        builder=lambda df: df.filter(F.col(column).isNull()))
+    return Check(name=f"not_null__{relation}__{column}", relation=relation,
+                 generic=Generic("not_null", column))
 
 
 def unique(relation: str, column: str) -> Check:
     """_gold_core_models.yml:9-22 — violation = key values occurring >1×
     (two-phase hash aggregate; map-side combine keeps it scalable)."""
-    # aggregate under an unambiguous alias: groupBy(col).count() on a
-    # column itself NAMED "count" yields two "count" columns and the
-    # filter raises AMBIGUOUS_REFERENCE instead of evaluating
-    return Check(
-        name=f"unique__{relation}__{column}", relation=relation,
-        builder=lambda df: (df.groupBy(column)
-                            .agg(F.count(F.lit(1)).alias("__n"))
-                            .filter(F.col("__n") > 1)))
+    return Check(name=f"unique__{relation}__{column}", relation=relation,
+                 generic=Generic("unique", column))
 
 
 def accepted_values(relation: str, column: str,
                     values: Sequence[Any]) -> Check:
     """iot_events_models.yml:17-32 — violation = non-null values ∉ list."""
-    vals = list(values)
     return Check(
         name=f"accepted_values__{relation}__{column}", relation=relation,
-        builder=lambda df: df.filter(
-            (~F.col(column).isin(vals)) & F.col(column).isNotNull()))
+        generic=Generic("accepted_values", column, tuple(values)))
 
 
 def relationship(relation: str, column: str, to_relation: str,

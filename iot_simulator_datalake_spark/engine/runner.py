@@ -9,8 +9,10 @@ Materializations (dbt_project.yml:11-19):
 
 - ``view``            → temp view + in-memory handle (no write)
 - ``table``           → parquet overwrite into the warehouse dir, read
-                        back (so downstream reads scan columnar storage
-                        with pushdown, like a real table)
+                        back with the written frame's schema (so
+                        downstream reads scan columnar storage with
+                        pushdown, like a real table, and no inference
+                        job runs)
 - ``streaming_table`` → Structured Streaming triggered (availableNow)
                         run with a checkpoint dir → exactly-once
                         incremental append (⇔ DLT streaming table,
@@ -33,11 +35,12 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import TYPE_CHECKING, Any
 
-from .checks import Check, CheckResult
+from .checks import Check, CheckResult, count_violations
 from .model import Model, ModelContext, Registry
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql.types import StructType
 
 
 def _install_version(vdir: Path, final: Path) -> None:
@@ -96,6 +99,16 @@ def vacuum_table_versions(path: str | Path, keep_current: bool = True
         shutil.rmtree(p, ignore_errors=True)
         dropped.append(p.name)
     return dropped
+
+
+def _read_back(spark: "SparkSession", schema: "StructType",
+               vdir: Path) -> "DataFrame":
+    """Read a version dir just written from a frame with ``schema``,
+    without a schema-inference job.  As with any schema-given read of a
+    partitioned dir, partition columns go last and their directory
+    values are parsed as the declared types (the rule
+    streaming/runner.py applies to streaming tables)."""
+    return spark.read.schema(schema).parquet(str(vdir))
 
 
 class ContractViolation(ValueError):
@@ -263,7 +276,7 @@ class Engine:
                     # register OUR version dir, not the symlink: this
                     # run's downstream reads stay consistent even if a
                     # concurrent run retargets the link mid-query
-                    df = self.spark.read.parquet(str(vdir))
+                    df = _read_back(self.spark, df.schema, vdir)
         self.register(m.qualified_name, df)
 
     def run(self, select: list[str] | None = None,
@@ -369,7 +382,7 @@ class Engine:
         finally:
             self.spark.conf.set(key, prev)
         _install_version(vdir, path)
-        out = self.spark.read.parquet(str(vdir))
+        out = _read_back(self.spark, df.schema, vdir)
         self.register(m.qualified_name, out)
         return out
 
@@ -383,12 +396,34 @@ class Engine:
              persist: bool = False) -> list[CheckResult]:
         """Run every registered check; pass ⇔ violation query returns 0
         rows (the reference's universal criterion, SURVEY §5.1).
+        Results come back in registration order.
+
+        The generic checks (``not_null``, ``accepted_values``,
+        ``unique``) are fused per relation: one aggregate pass for the
+        row-level ones, one grouped pass per ``unique`` key, with the
+        row-level counts riding along in the first
+        (:func:`~.checks.count_violations`).  Their ``violations`` is
+        the exact count, and a sample is fetched only for a failed
+        check.  Every other check runs alone through ``Check.run``,
+        its count capped at ``max_sample + 1``.
 
         ``persist=True`` appends one audit row per check to
         ``<warehouse>/_audit/check_results`` (⇔ dbt's test-result
         artifacts), so quality history survives across runs.
         """
-        results = [c.run(self, max_sample=max_sample) for c in self.checks]
+        done: dict[int, CheckResult] = {}
+        fused: dict[str, list[int]] = {}
+        for i, c in enumerate(self.checks):
+            if c.generic is None:
+                done[i] = c.run(self, max_sample=max_sample)
+            else:
+                fused.setdefault(c.relation, []).append(i)
+        for rel, idx in fused.items():
+            counts = count_violations(
+                self.table(rel), [self.checks[i].generic for i in idx])
+            for i, n in zip(idx, counts):
+                done[i] = self.checks[i].result(self, n, max_sample)
+        results = [done[i] for i in range(len(self.checks))]
         if persist and results:
             import time as _time
             audit = self.spark.createDataFrame(

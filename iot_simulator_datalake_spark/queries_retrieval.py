@@ -101,8 +101,8 @@ def bm25_topk(spark: "SparkSession", sf_dir: str) -> "DataFrame":
           .select("doc_id", F.split("text", " ").alias("toks"))
           .select("doc_id",
                   F.size("toks").cast("long").alias("dl"),
-                  *[F.expr(f"cast(size(filter(toks, x -> x = '{t}'))"
-                           f" as long)").alias(f"tf_{i}")
+                  *[F.size(F.filter("toks", lambda x: x == F.lit(t)))
+                    .cast("long").alias(f"tf_{i}")
                     for i, t in enumerate(terms)])
           .cache())
     g = d2.groupBy().agg(
@@ -472,9 +472,11 @@ def hybrid_search_rrf(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     ``bm25_from_postings``, no corpus tokenize at query time; the ANN
     family's broadcast-probe scan — swap in the IVF/LSH route
     unchanged), each
-    cut to depth {depth} BEFORE fusion, so the full-outer fusion join
-    is depth-sized regardless of corpus size, and the fused score is
-    an integer sum of per-ranking reciprocal terms (rank ties are
+    cut to depth {depth} BEFORE fusion.  Fusion is a union of the two
+    branches' per-doc contributions (reciprocal term + rank) and ONE
+    groupBy(doc_id) aggregate over those ≤2·depth rows, so it is
+    depth-sized regardless of corpus size, and the fused score is an
+    integer sum of per-ranking reciprocal terms (rank ties are
     impossible by construction, so RRF is bit-stable).
     """
     depth, kk = _RRF["depth"], _RRF["k"]

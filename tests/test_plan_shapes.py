@@ -175,6 +175,25 @@ def test_q22_broadcast_scalar_and_anti_join(spark):
     assert "PushedFilters: [" in plan
 
 
+def test_q5_selective_first_branch_matches_broadcast_chain(
+        spark, monkeypatch):
+    """customer is broadcastable at every test SF, so q5 takes its
+    broadcast-chain shape; a zero hint gate forces the selective-first
+    shape that runs at real scale.  Both must return the same rows."""
+    import re
+
+    def run():
+        df = REGISTRY["tpch_q5_local_volume"].fn(spark, SF)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return sorted(map(tuple, df.collect())), re.sub(r"#\d+L?", "", plan)
+
+    chain, chain_plan = run()
+    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_GATE", "0")
+    selective, selective_plan = run()
+    assert selective_plan != chain_plan      # the other branch ran
+    assert chain and selective == chain
+
+
 def test_quantize_int8_is_map_only(spark):
     plan = plan_of(spark, "embedding_quantize_int8")
     # pure column transform: no shuffle anywhere in the plan

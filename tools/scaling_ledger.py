@@ -39,8 +39,12 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     out = subprocess.run(
         [sys.executable, str(REPO / "bench.py")], env=env,
         capture_output=True, text=True, check=True)
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    parsed = json.loads(line)
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if not lines:
+        raise SystemExit(
+            f"bench.py at SPARK_GRAFT_CPUS={cpus} printed no JSON line; "
+            f"stderr tail:\n{out.stderr[-2000:]}")
+    parsed = json.loads(lines[-1])
     parsed["_cpus"] = cpus
     parsed["_wall_sec"] = round(time.monotonic() - t0, 1)
     parsed["_steal_jiffies"] = steal_jiffies() - s0
@@ -52,22 +56,31 @@ def main(argv: list[str]) -> int:
     cpus_list = [int(c) for c in argv[2:]] or [8, 32]
     runs = {c: run_bench(sf_dir, c) for c in cpus_list}
     lo, hi = min(cpus_list), max(cpus_list)
-    ratios = {
-        q: round(runs[lo]["queries"][q] / runs[hi]["queries"][q], 2)
-        for q in runs[hi]["queries"]}
+    t_lo, t_hi = runs[lo]["queries"], runs[hi]["queries"]
+    # a query timed at 0 s (or missing from one run) has no ratio:
+    # list it instead of dividing by it
+    zero = sorted(q for q in t_hi if not t_lo.get(q) or not t_hi[q])
+    ratios = {q: round(t_lo[q] / t_hi[q], 2)
+              for q in t_hi if q not in zero}
     ledger = {
         "replica_dir": sf_dir,
         "cpus": cpus_list,
         "ratio_low_over_high": ratios,
+        "zero_time_queries": zero,
         "total_sec": {c: runs[c]["value"] for c in cpus_list},
         "runs": runs,
     }
     Path(out_path).write_text(json.dumps(ledger, indent=1))
     for q, r in sorted(ratios.items(), key=lambda kv: kv[1]):
         print(f"{q:32s} t{lo}/t{hi} = {r:5.2f} "
-              f"({runs[lo]['queries'][q]:.2f}s / {runs[hi]['queries'][q]:.2f}s)")
+              f"({t_lo[q]:.2f}s / {t_hi[q]:.2f}s)")
+    for q in zero:
+        print(f"{q:32s} skipped: zero time "
+              f"({t_lo.get(q)}s / {t_hi[q]}s)")
+    total = (f"{runs[lo]['value'] / runs[hi]['value']:.2f}"
+             if runs[hi]["value"] else "n/a")
     print(f"totals: t{lo}={runs[lo]['value']}s t{hi}={runs[hi]['value']}s "
-          f"ratio={runs[lo]['value']/runs[hi]['value']:.2f}")
+          f"ratio={total}")
     return 0
 
 
