@@ -16,38 +16,27 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..session import memo
+
 
 def _as_double(v: Column) -> Column:
     return v.cast("array<double>")
 
 
-#: Per-process memo of NAME-KEYED vector expressions (optimization
-#: r12, same pattern/lifecycle as operators.dedup._EXPR_MEMO): the
-#: zip_with/aggregate folds cost real py4j latency to BUILD —
-#: measured 129 ms per cosine_micro and 35 ms per l2_norm — and the
-#: similarity operators rebuild them on every query construction.
-#: Expressions here are unresolved, alias-free (callers alias), and
-#: reference only the given column names, so reuse across plans is
-#: safe.
-_EXPR_MEMO: dict = {}
+# The name-keyed folds below go through session.memo (optimization
+# r12): building them costs real py4j latency — measured 129 ms per
+# cosine_micro and 35 ms per l2_norm — on every similarity query build.
 
 
 def l2_norm_named(col_name: str) -> Column:
     """l2_norm over a named column — memoized per name."""
-    key = ("l2", col_name)
-    c = _EXPR_MEMO.get(key)
-    if c is None:
-        c = _EXPR_MEMO[key] = l2_norm(F.col(col_name))
-    return c
+    return memo(("l2", col_name), lambda: l2_norm(F.col(col_name)))
 
 
 def cosine_micro_named(a_name: str, b_name: str) -> Column:
     """cosine_micro over two named columns — memoized per name pair."""
-    key = ("cosu", a_name, b_name)
-    c = _EXPR_MEMO.get(key)
-    if c is None:
-        c = _EXPR_MEMO[key] = cosine_micro(F.col(a_name), F.col(b_name))
-    return c
+    return memo(("cosu", a_name, b_name),
+                lambda: cosine_micro(F.col(a_name), F.col(b_name)))
 
 
 def scored_units_named(a_name: str, b_name: str,
@@ -56,13 +45,9 @@ def scored_units_named(a_name: str, b_name: str,
     the brute-force scorer's expression, memoized per name tuple
     (norms are precomputed per side, so the pair loop runs ONE fold)."""
     from .units import to_units
-    key = ("score_u", a_name, b_name, a_norm, b_norm)
-    c = _EXPR_MEMO.get(key)
-    if c is None:
-        c = _EXPR_MEMO[key] = to_units(
-            dot(F.col(a_name), F.col(b_name)) /
-            (F.col(a_norm) * F.col(b_norm)), 6)
-    return c
+    return memo(("score_u", a_name, b_name, a_norm, b_norm),
+                lambda: to_units(dot(F.col(a_name), F.col(b_name)) /
+                                 (F.col(a_norm) * F.col(b_norm)), 6))
 
 
 def dot(a: Column, b: Column) -> Column:

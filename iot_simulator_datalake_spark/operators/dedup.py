@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import ngrams, tokens
+from ..session import memo
 
 
 def exact_dedup(df: DataFrame, content_col: str, key_col: str,
@@ -72,29 +73,18 @@ def window_dedup(df: DataFrame, keys: list[str],
 #: hex chars per signature slice: 5 hex = 20 bits per surrogate
 _SLICE = 5
 
-#: Per-process memo of the parameter-pure Column expressions the
-#: MinHash operators rebuild on every call (optimization r12, guide §5
-#: driver work): each F.* call is one or more py4j round-trips
-#: (~0.3–0.5 ms each), and the shingle / signature / band-key
-#: expressions cost ~590 round-trips per build — ~0.2 s of pure driver
-#: latency per dedup query construction, paid again for every bench
-#: pass and every dependent pipeline.  The memoized Columns are
-#: UNRESOLVED, exprId-free expression trees (aliases are applied by
-#: the caller, so every plan gets fresh exprIds): immutable, reusable
-#: across any DataFrame with the referenced column names, and tied
-#: only to the process-lifetime py4j gateway — the same lifecycle as
-#: queries.load's schema memo.
-_EXPR_MEMO: dict = {}
+# The MinHash operators' parameter-pure Column expressions go through
+# session.memo (optimization r12, guide §5 driver work): the shingle /
+# signature / band-key expressions cost ~590 py4j round-trips
+# (~0.3–0.5 ms each) per build — ~0.2 s of driver latency per dedup
+# query construction, paid again for every bench pass.
 
 
 def _shingle_expr(text_col: str, shingle_n: int) -> Column:
     """explode(ngrams(tokens(text_col), shingle_n)) — memoized."""
-    key = ("shingle", text_col, shingle_n)
-    c = _EXPR_MEMO.get(key)
-    if c is None:
-        c = F.explode(ngrams(tokens(F.col(text_col)), shingle_n))
-        _EXPR_MEMO[key] = c
-    return c
+    return memo(("shingle", text_col, shingle_n),
+                lambda: F.explode(ngrams(tokens(F.col(text_col)),
+                                         shingle_n)))
 
 
 def minhash_signatures(df: DataFrame, text_col: str, key_col: str, *,
@@ -147,15 +137,11 @@ def _sigs_from_exploded(ex: DataFrame, n_hashes: int,
     minhash_lsh_pairs serve the Jaccard denominator straight from the
     cached signature relation instead of paying a second aggregate
     (exchange) over the candidate-restricted shingle rows."""
-    key = ("sigaggs", n_hashes)
-    memo = _EXPR_MEMO.get(key)
-    if memo is None:
-        memo = (F.md5(F.col("s")),
-                [F.min(F.substring("h", i * _SLICE + 1, _SLICE))
-                 for i in range(n_hashes)],
-                F.count(F.lit(1)))
-        _EXPR_MEMO[key] = memo
-    h, mins, cnt = memo
+    h, mins, cnt = memo(("sigaggs", n_hashes), lambda: (
+        F.md5(F.col("s")),
+        [F.min(F.substring("h", i * _SLICE + 1, _SLICE))
+         for i in range(n_hashes)],
+        F.count(F.lit(1))))
     hashed = ex.select("key", h.alias("h"))
     aggs = [m.alias(f"sig_{i}") for i, m in enumerate(mins)]
     if with_size:
@@ -180,17 +166,12 @@ def _band_key_col(n_hashes: int, bands: int) -> Column:
         raise ValueError(f"n_hashes={n_hashes} must divide evenly into "
                          f"bands={bands} (got remainder {n_hashes % bands}"
                          f" — trailing signatures would be ignored)")
-    key = ("bandkeys", n_hashes, bands)
-    c = _EXPR_MEMO.get(key)
-    if c is None:
-        rows_per_band = n_hashes // bands
-        c = F.array(*[
-            F.md5(F.concat_ws("|", F.lit(str(b)),
-                              *[F.col(f"sig_{b * rows_per_band + r}")
-                                for r in range(rows_per_band)]))
-            for b in range(bands)])
-        _EXPR_MEMO[key] = c
-    return c
+    rows_per_band = n_hashes // bands
+    return memo(("bandkeys", n_hashes, bands), lambda: F.array(*[
+        F.md5(F.concat_ws("|", F.lit(str(b)),
+                          *[F.col(f"sig_{b * rows_per_band + r}")
+                            for r in range(rows_per_band)]))
+        for b in range(bands)]))
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str, key_col: str, *,

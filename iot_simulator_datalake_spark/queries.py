@@ -28,7 +28,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .operators.hints import maybe_broadcast
-from .session import tune_session
+from .session import memo, tune_session
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -37,32 +37,17 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
 
-#: (sf_dir, table) → inferred schema, memoized for the process lifetime
-#: (optimization r11).  Every bare ``spark.read.parquet`` runs a
-#: 1-task footer-read JOB at DataFrame-construction time to infer the
-#: schema; a 6-table query paid six of those serial ~35 ms jobs (plus
-#: scheduling gaps) per build, three builds per bench run.  Passing an
-#: explicit schema skips the job entirely.  This memoizes METADATA
-#: only (the schema a catalog/metastore would serve at production
-#: scale — the driver's tables are immutable fixtures), never data or
-#: results; the first read of each table still infers from the footer,
-#: so the nanosAsLong/NTZ dtype branches below see exactly what bare
-#: inference would see.
-_SCHEMA_MEMO: dict = {}
-
-
 def raw_schema(spark: "SparkSession", sf_dir: str, name: str):
     """RAW parquet schema of one driver table (pre any ts conversion),
-    served from the same process-lifetime memo as :func:`load` — the
-    streaming twins need it to declare their file-source schema, and
-    re-inferring it per query build paid one footer-read job each
-    (optimization r11)."""
+    memoized per path (optimization r11).  Every bare
+    ``spark.read.parquet`` runs a 1-task footer-read JOB to infer the
+    schema; a 6-table query paid six serial ~35 ms jobs per build, and
+    an explicit schema skips them.  METADATA only (what a catalog would
+    serve — the driver's tables are immutable fixtures); the first read
+    still infers from the footer, so :func:`load`'s nanosAsLong/NTZ
+    dtype branches see exactly what bare inference would see."""
     path = f"{sf_dir}/{name}.parquet"
-    sch = _SCHEMA_MEMO.get(path)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[path] = sch
-    return sch
+    return memo(path, lambda: spark.read.parquet(path).schema)
 
 
 def load(spark: "SparkSession", sf_dir: str, name: str) -> "DataFrame":
@@ -80,13 +65,8 @@ def load(spark: "SparkSession", sf_dir: str, name: str) -> "DataFrame":
             spark._sg_tuned = True
         except Exception:  # pragma: no cover - frozen session wrapper
             pass
-    path = f"{sf_dir}/{name}.parquet"
-    sch = _SCHEMA_MEMO.get(path)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_MEMO[path] = df.schema
-    else:
-        df = spark.read.schema(sch).parquet(path)
+    df = (spark.read.schema(raw_schema(spark, sf_dir, name))
+          .parquet(f"{sf_dir}/{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) parquet read via nanosAsLong → convert to µs
         # timestamp exactly like DuckDB does (truncating division).

@@ -14,7 +14,6 @@ twin of engine_pipeline_fact.
 
 from __future__ import annotations
 
-import tempfile
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Window as W
@@ -26,6 +25,7 @@ from .pipeline.corpus_models import (CORPUS, attach_corpus_checks,
                                      build_corpus_registry)
 from .queries import load, q
 from .queries_ext import O_TOKENS
+from .session import scratch
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -80,7 +80,7 @@ def engine_corpus_pipeline(spark: "SparkSession",
     each doc contributes one piece per block it spans, so the count is
     derivable in closed form for the oracle while fully exercising the
     explode path Spark-side."""
-    workdir = tempfile.mkdtemp(prefix="corpus_pipeline_")
+    workdir = scratch("corpus_pipeline_")
     eng = Engine(spark, build_corpus_registry(),
                  config={"documents_path": f"{sf_dir}/documents.parquet"},
                  warehouse=f"{workdir}/wh")

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from .functions.text import LANG_LEXICONS, ngrams, tokens
 from .queries import load, q
 from .queries_ext import O_TOKENS, o_lex_array
+from .session import memo, scratch
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import Column, DataFrame, SparkSession
@@ -373,27 +374,17 @@ def gopher_quality_rules(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     return _gopher_rules(load(spark, sf_dir, "documents"))
 
 
-#: Per-process memo of _gopher_rules' parameter-pure heavy expressions
-#: (optimization r12, same pattern and lifecycle as
-#: operators.dedup._EXPR_MEMO): the tokenizer, stopword array, and the
-#: three interpreted-fold expressions cost ~0.15 s of py4j round-trips
-#: per build; they reference only column names and constants, carry no
-#: exprIds (aliases are applied per call), and are reused across every
-#: build in the process.
-_GOPHER_EXPR_MEMO: dict = {}
+# _gopher_rules' heavy expressions go through session.memo
+# (optimization r12): the tokenizer, stopword array and three
+# interpreted folds cost ~0.15 s of py4j round-trips per build.
 
 
 def _gopher_rules(d: "DataFrame") -> "DataFrame":
     """Core of :func:`gopher_quality_rules` over any (doc_id, text)
     relation — shared with the curation Engine DAG."""
-    memo = _GOPHER_EXPR_MEMO
-    toks = memo.get("toks")
-    if toks is None:
-        toks = memo["toks"] = tokens(F.col("text"))
-    stop_arr = memo.get("stop_arr")
-    if stop_arr is None:
-        stop_arr = memo["stop_arr"] = F.array(
-            *[F.lit(w) for w in sorted(LANG_LEXICONS["en"])])
+    toks = memo("toks", lambda: tokens(F.col("text")))
+    stop_arr = memo("stop_arr", lambda: F.array(
+        *[F.lit(w) for w in sorted(LANG_LEXICONS["en"])]))
     # top_k (max single-token multiplicity) is a PER-ROW property of
     # the token array, so it is computed map-side as the longest run in
     # the sorted array (optimization r11): the previous shape exploded
@@ -406,33 +397,27 @@ def _gopher_rules(d: "DataFrame") -> "DataFrame":
     # codegen'd expression; the fold does one comparison per token.
     # Measured sf0.1 (clean-steal passes): 0.96 s → 0.53 s, and the
     # plan drops from 6 Exchange nodes + a join to ZERO exchanges.
-    top_k = memo.get("top_k")
-    if top_k is None:
-        run_next = lambda acc, x: F.when(x == acc.prev, acc.run + F.lit(1)) \
-                                   .otherwise(F.lit(1))
-        top_k = memo["top_k"] = F.aggregate(
-            F.array_sort("toks"),
-            F.struct(F.lit("").alias("prev"),
-                     F.lit(0).cast("int").alias("run"),
-                     F.lit(0).cast("int").alias("best")),
-            lambda acc, x: F.struct(
-                x.alias("prev"), run_next(acc, x).alias("run"),
-                F.greatest(acc.best, run_next(acc, x)).alias("best")),
-            lambda acc: acc.best).cast("bigint")
-    mean_len = memo.get("mean_len")
-    if mean_len is None:
-        # raw IEEE quotients of exact ints (no ROUND): identical
-        # bits in Spark and DuckDB, immune to the HALF_UP
-        # boundary hazard a 4-digit ROUND carries
-        mean_len = memo["mean_len"] = (
-            F.aggregate("toks", F.lit(0).cast("bigint"),
-                        lambda acc, x: acc + F.length(x)).cast("double") /
-            F.size("toks"))
-    alpha = memo.get("alpha")
-    if alpha is None:
-        alpha = memo["alpha"] = (
-            F.size(F.filter("toks", lambda x: x.rlike("[a-z]")))
-            .cast("double") / F.size("toks"))
+    run_next = lambda acc, x: F.when(
+        x == acc.prev, acc.run + F.lit(1)).otherwise(F.lit(1))
+    top_k = memo("top_k", lambda: F.aggregate(
+        F.array_sort("toks"),
+        F.struct(F.lit("").alias("prev"),
+                 F.lit(0).cast("int").alias("run"),
+                 F.lit(0).cast("int").alias("best")),
+        lambda acc, x: F.struct(
+            x.alias("prev"), run_next(acc, x).alias("run"),
+            F.greatest(acc.best, run_next(acc, x)).alias("best")),
+        lambda acc: acc.best).cast("bigint"))
+    # raw IEEE quotients of exact ints (no ROUND): identical bits in
+    # Spark and DuckDB, immune to the HALF_UP boundary hazard a 4-digit
+    # ROUND carries
+    mean_len = memo("mean_len", lambda: (
+        F.aggregate("toks", F.lit(0).cast("bigint"),
+                    lambda acc, x: acc + F.length(x)).cast("double") /
+        F.size("toks")))
+    alpha = memo("alpha", lambda: (
+        F.size(F.filter("toks", lambda x: x.rlike("[a-z]")))
+        .cast("double") / F.size("toks")))
     base = (d.select("doc_id", toks.alias("toks"))
             .filter(F.size("toks") > 0)
             .select(
@@ -1685,11 +1670,10 @@ def incremental_bigram_lm_equals_batch(spark: "SparkSession", sf_dir: str
     (O(corpus)).  Smoothing (|V|, c1) derives from the maintained c2
     at read time, so the incremental path shares the scorer verbatim.
     """
-    import tempfile
     from .engine.incremental import IncrementalAggTable, MergeableAgg
     d = load(spark, sf_dir, "documents")
     t = IncrementalAggTable(
-        spark, tempfile.mkdtemp(prefix="inc_lm_") + "/state",
+        spark, scratch("inc_lm_") + "/state",
         keys=["prev", "cur"],
         metrics=[MergeableAgg("n2", lambda: F.count(F.lit(1)),
                               lambda c: F.sum(F.col(c)))])
@@ -1804,11 +1788,10 @@ def engine_curation_pipeline(spark: "SparkSession", sf_dir: str
     the gate.  Same oracle as ``curation_funnel_report`` — the DAG
     must produce byte-identical results to the single-plan query,
     proving materialization boundaries don't change semantics."""
-    import tempfile
     from .engine import Engine
     from .pipeline.curation_models import (attach_curation_checks,
                                            build_curation_registry)
-    workdir = tempfile.mkdtemp(prefix="curation_pipeline_")
+    workdir = scratch("curation_pipeline_")
     eng = Engine(spark, build_curation_registry(),
                  config={"documents_path": f"{sf_dir}/documents.parquet"},
                  warehouse=f"{workdir}/wh")

@@ -9,7 +9,6 @@ not just a query result.
 
 from __future__ import annotations
 
-import tempfile
 from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
@@ -17,6 +16,7 @@ from pyspark.sql import functions as F
 from .engine.incremental import IncrementalAggTable, mergeable_metrics
 from .operators.scd import ApplyChanges
 from .queries import load, oavg, osum, q
+from .session import scratch
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +40,7 @@ def incremental_rollup_equals_batch(spark: "SparkSession",
     state swap) — the merged state must hash-equal the one-shot SQL."""
     e = load(spark, sf_dir, "events")
     t = IncrementalAggTable(
-        spark, tempfile.mkdtemp(prefix="inc_rollup_") + "/state",
+        spark, scratch("inc_rollup_") + "/state",
         keys=["event_type"], metrics=mergeable_metrics("value"))
     t.refresh(e.filter(F.col("ts") < _SPLIT))
     t.refresh(e.filter(F.col("ts") >= _SPLIT))
@@ -66,7 +66,7 @@ def apply_changes_equals_batch(spark: "SparkSession",
     e = (load(spark, sf_dir, "events")
          .select("user_id", "event_id", "ts", "event_type"))
     ac = ApplyChanges(
-        spark, tempfile.mkdtemp(prefix="apply_ch_") + "/state",
+        spark, scratch("apply_ch_") + "/state",
         key="user_id", order_col="ts", tiebreak="event_id")
     ac.apply(e.filter(F.col("ts") < _SPLIT))
     ac.apply(e.filter(F.col("ts") >= _SPLIT))
@@ -100,7 +100,7 @@ def incremental_join_rollup_equals_batch(spark: "SparkSession",
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
     t = IncrementalJoinAggTable(
-        spark, tempfile.mkdtemp(prefix="inc_join_") + "/state",
+        spark, scratch("inc_join_") + "/state",
         keys=["o_custkey"],
         metrics=[m for m in mergeable_metrics("o_totalprice")
                  if m.name in ("n", "sum")])
@@ -160,7 +160,7 @@ def dbt_snapshot_equals_batch(spark: "SparkSession",
                 .select("user_id", "event_type", "ts"))
 
     snap = SnapshotTable(
-        spark, tempfile.mkdtemp(prefix="dbt_snap_") + "/state",
+        spark, scratch("dbt_snap_") + "/state",
         unique_key="user_id", strategy="timestamp", updated_at="ts")
     snap.run(latest(e.filter(F.col("ts") < _SPLIT)))
     snap.run(latest(e)) 

@@ -13,13 +13,13 @@ layout failed to prune — the scale property is part of the contract).
 
 from __future__ import annotations
 
-import tempfile
 from pathlib import Path
 from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
 from .queries import dsum, load, osum, q
+from .session import scratch
 from .stagecache import source_digest as _source_digest
 from .stagecache import stage_once as _stage_once
 
@@ -124,7 +124,7 @@ def snapshot_changes(spark: "SparkSession", sf_dir: str) -> "DataFrame":
              .withColumn("status",
                          F.when(F.col("order_id") % 10 == 2, F.lit("X"))
                          .otherwise(F.col("status"))))
-    tbl = Path(tempfile.mkdtemp(prefix="snap_cdf_")) / "orders_slice"
+    tbl = Path(scratch("snap_cdf_")) / "orders_slice"
     v0 = write_snapshot(v0_df, tbl)
     v1 = write_snapshot(v1_df, tbl)
     return (snapshot_diff(spark, tbl, v0, v1, keys=("order_id",))

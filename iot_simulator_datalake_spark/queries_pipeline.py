@@ -13,7 +13,6 @@ standalone query expression.
 
 from __future__ import annotations
 
-import tempfile
 from pathlib import Path
 from typing import TYPE_CHECKING
 
@@ -22,6 +21,7 @@ from pyspark.sql import functions as F
 from .engine import Engine
 from .pipeline import build_registry
 from .queries import load, q
+from .session import scratch
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -69,7 +69,7 @@ def _export_landing(spark: "SparkSession", sf_dir: str) -> Path:
         flag.alias("quality_flag"),
         F.lit("unit").alias("unit"),
         F.col("value"))
-    workdir = Path(tempfile.mkdtemp(prefix="engine_pipeline_"))
+    workdir = Path(scratch("engine_pipeline_"))
     raw.write.mode("overwrite").json(str(workdir / "landing"))
     return workdir
 
@@ -315,7 +315,7 @@ def simulator_streaming_rollup(spark: "SparkSession",
     from .sources.simulator import register
 
     register(spark)
-    out = tempfile.mkdtemp(prefix="sim_stream_") 
+    out = scratch("sim_stream_")
     stream = (spark.readStream.format("iot_simulator")
               .option("max_events", _SIM["n_events"])
               .option("n_devices", _SIM["n_devices"]).load())
@@ -456,12 +456,10 @@ def orc_roundtrip_rollup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     orders round-trip through ORC (zlib) and aggregate — the gate that
     the non-parquet columnar path preserves types and values exactly.
     ORC carries its own schema, so the read needs none."""
-    import tempfile
-
     from .sources.files import read_file_batch
 
     o = load(spark, sf_dir, "orders")
-    land = tempfile.mkdtemp(prefix="orc_rt_") + "/orders_orc"
+    land = scratch("orc_rt_") + "/orders_orc"
     o.write.mode("overwrite").format("orc").save(land)
     back = read_file_batch(spark, land, "orc")
     return (back.groupBy(F.col("o_orderpriority").alias("priority"))
@@ -479,12 +477,10 @@ def csv_roundtrip_rollup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     at 100 TB you never re-infer per file), then the typed read must
     reproduce the parquet numbers exactly.  Timestamps ride ISO-8601
     text; money survives because the rollup quantizes to cents."""
-    import tempfile
-
     from .sources.files import infer_csv_schema, read_csv_batch
 
     o = load(spark, sf_dir, "orders")
-    land = tempfile.mkdtemp(prefix="csv_rt_") + "/orders_csv"
+    land = scratch("csv_rt_") + "/orders_csv"
     (o.write.mode("overwrite").option("header", True)
      .option("timestampFormat", "yyyy-MM-dd HH:mm:ss").csv(land))
     schema = infer_csv_schema(spark, land, land + "/_schema.json")
@@ -512,14 +508,13 @@ def sql_project_pipeline(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     gold rollup hash-matched against the restated SQL.  This gates the
     migration path: a user's existing dbt model tree runs on this
     engine with their files, not a rewrite."""
-    import tempfile
     import textwrap
     from pathlib import Path
 
     from .engine import Engine
     from .engine.sqlproject import load_sql_project
 
-    root = Path(tempfile.mkdtemp(prefix="sqlproj_")) / "models"
+    root = Path(scratch("sqlproj_")) / "models"
     (root / "bronze").mkdir(parents=True)
     (root / "silver").mkdir()
     (root / "gold").mkdir()
@@ -548,7 +543,7 @@ def sql_project_pipeline(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     load(spark, sf_dir, "events").createOrReplaceTempView("landing__events")
     reg = load_sql_project(root, config_vars={"min_value": 1})
     eng = Engine(spark, reg,
-                 warehouse=tempfile.mkdtemp(prefix="sqlproj_wh_"))
+                 warehouse=scratch("sqlproj_wh_"))
     eng.run()
     return eng.table("gold.gold_event_rollup")
 

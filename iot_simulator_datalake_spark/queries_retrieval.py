@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from .queries import load, q
 from .queries_ext import _O_COS, _O_EMB
 from .operators.similarity import brute_force_topk, lsh_bucket_topk
+from .session import memo
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -177,10 +178,6 @@ def inverted_index_postings(spark: "SparkSession", sf_dir: str) -> "DataFrame":
                      F.col("doc_id"))), ",").alias("postings")))
 
 
-#: index root → (postings schema, (N, Σdl)) — see _bm25_index memo note
-_INDEX_MEMO: dict = {}
-
-
 def _bm25_index(spark: "SparkSession", sf_dir: str):
     """Stage the tf-bearing serving index ONCE per corpus fingerprint:
     ``postings`` (term, segment, doc_id, tf, dl) term-range-partitioned
@@ -213,23 +210,17 @@ def _bm25_index(spark: "SparkSession", sf_dir: str):
          .write.mode("overwrite").parquet(str(tmp / "stats")))
 
     root = stage_once(sf_dir, "documents", "bm25_index", _build)
-    # Per-process memo of the index schema and the 1-row stats
-    # (optimization r11): the root path is content-addressed
-    # (source digest × recipe digest — stagecache.stage_once), so both
-    # are immutable per root.  Without it every build of
-    # bm25_from_postings / hybrid_search_rrf paid two parquet
-    # footer-inference jobs plus a 1-row collect job before the real
-    # query ran; with it, later builds inline (N, Σdl) from the memo
-    # and read postings with an explicit schema — zero pre-query jobs.
-    memo = _INDEX_MEMO.get(str(root))
-    if memo is None:
-        p = spark.read.parquet(str(root / "postings"))
+    # The index schema and 1-row stats are memoized per root, which is
+    # content-addressed (stage_once), so both are immutable per root
+    # (optimization r11).  Without it every build of bm25_from_postings
+    # / hybrid_search_rrf paid two footer-inference jobs plus a 1-row
+    # collect job before the real query ran; now zero pre-query jobs.
+    def _index_meta():
         st = spark.read.parquet(str(root / "stats")).collect()[0]
-        memo = (p.schema, (st["n"], st["sumdl"]))
-        _INDEX_MEMO[str(root)] = memo
-    else:
-        p = spark.read.schema(memo[0]).parquet(str(root / "postings"))
-    return p, memo[1]
+        return (spark.read.parquet(str(root / "postings")).schema,
+                (st["n"], st["sumdl"]))
+    schema, stats = memo(str(root), _index_meta)
+    return spark.read.schema(schema).parquet(str(root / "postings")), stats
 
 
 @q("bm25_from_postings", ("F9", "W3", "A1"), bench=True, oracle=_BM25_SQL)

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from .functions.units import to_units
 from .queries import load, oavg, osum, q, raw_schema
 from .queries_llmprep import _o_hash_bucket
+from .session import scratch
 from .streaming.runner import run_stream_available_now
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -421,7 +422,6 @@ def streaming_interval_join_left(spark: "SparkSession",
     (watermark + interval) per key — plus one tombstone row per
     evicted unmatched click; the heartbeat pattern costs one row per
     source per trigger, independent of data size."""
-    import tempfile
 
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     raw_schema = raw.schema
@@ -434,7 +434,7 @@ def streaming_interval_join_left(spark: "SparkSession",
         from datetime import timedelta
         return max_ts + timedelta(hours=h)
 
-    land = tempfile.mkdtemp(prefix="ij_left_")
+    land = scratch("ij_left_")
     raw.coalesce(1).write.mode("overwrite").parquet(f"{land}/0_base.parquet")
     for i, hours in enumerate((10, 20), start=1):
         hb = spark.createDataFrame(
@@ -718,15 +718,13 @@ def streaming_apply_changes(spark: "SparkSession",
     O(batch + state-keys); checkpointed source offsets give exactly-
     once across restarts (test_streaming covers the two-wave rerun).
     """
-    import tempfile
-
     from .operators.scd import ApplyChanges
 
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     raw_schema = raw.schema
     ts_is_long = dict(raw.dtypes).get("ts") == "bigint"
 
-    land = tempfile.mkdtemp(prefix="apply_stream_")
+    land = scratch("apply_stream_")
     for i in range(3):
         (raw.filter(F.col("event_id") % 3 == i).coalesce(1)
          .write.mode("overwrite").parquet(f"{land}/slice_{i}.parquet"))
@@ -740,7 +738,7 @@ def streaming_apply_changes(spark: "SparkSession",
     changes = stream.select("user_id", "event_id", "ts", "event_type")
 
     ac = ApplyChanges(
-        spark, tempfile.mkdtemp(prefix="apply_stream_state_") + "/state",
+        spark, scratch("apply_stream_state_") + "/state",
         key="user_id", order_col="ts", tiebreak="event_id")
     writer = (changes.writeStream
               .foreachBatch(lambda df, epoch: ac.apply(df, epoch))
@@ -917,14 +915,12 @@ def streaming_incremental_join_rollup(spark: "SparkSession",
     O(batch + state-keys), the dim is consulted only at read, and a
     dim change between batches would need zero reprocessing.
     """
-    import tempfile
-
     from .engine.incremental import (IncrementalJoinAggTable,
                                      mergeable_metrics)
     from .queries import load
 
     o = load(spark, sf_dir, "orders")
-    land = tempfile.mkdtemp(prefix="inc_join_stream_")
+    land = scratch("inc_join_stream_")
     for i in range(3):
         (o.filter(F.col("o_orderkey") % 3 == i).coalesce(1)
          .write.mode("overwrite").parquet(f"{land}/slice_{i}.parquet"))
@@ -933,7 +929,7 @@ def streaming_incremental_join_rollup(spark: "SparkSession",
               .option("recursiveFileLookup", "true")
               .option("maxFilesPerTrigger", 1).parquet(land))
     t = IncrementalJoinAggTable(
-        spark, tempfile.mkdtemp(prefix="inc_join_stream_state_") + "/state",
+        spark, scratch("inc_join_stream_state_") + "/state",
         keys=["o_custkey"],
         metrics=[m for m in mergeable_metrics("o_totalprice")
                  if m.name in ("n", "sum")])
@@ -981,13 +977,11 @@ def streaming_quantile_sketch(spark: "SparkSession",
     would keep the engine's epoch-replay guard
     (engine/incremental.py); the availableNow gate run is
     single-epoch by construction."""
-    import tempfile
-
     from .operators.qsketch import bottom_k, sample_quantiles, sketch_hash
     from .queries_stats import _QSK
 
     e = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    land = tempfile.mkdtemp(prefix="qsk_stream_")
+    land = scratch("qsk_stream_")
     for i in range(3):
         (e.filter(F.col("event_id") % 3 == i).coalesce(1)
          .write.mode("overwrite").parquet(f"{land}/slice_{i}.parquet"))
@@ -995,7 +989,7 @@ def streaming_quantile_sketch(spark: "SparkSession",
     stream = (spark.readStream.schema(e.schema)
               .option("recursiveFileLookup", "true")
               .option("maxFilesPerTrigger", 1).parquet(land))
-    root = tempfile.mkdtemp(prefix="qsk_state_")
+    root = scratch("qsk_state_")
     state: dict = {"dir": None, "v": 0}
 
     def _merge(batch, _epoch):
@@ -1174,12 +1168,11 @@ def streaming_late_data_drop(spark: "SparkSession",
     shuffle into state, and per-batch cost is O(batch + open windows).
     tests/test_streaming_late.py guards the pinned semantics and that
     the demo is non-degenerate (drops > 0, holdback > 0)."""
-    import tempfile
 
     e = (load(spark, sf_dir, "events")
          .filter(F.col("ts").isNotNull())
          .select("ts", "value", "event_id"))
-    land = tempfile.mkdtemp(prefix="late_stream_")
+    land = scratch("late_stream_")
     stage_late_replay(spark, e, land)
 
     stream = (spark.readStream.schema(e.schema)

@@ -5,14 +5,23 @@ The reference delegates session/cluster config to Databricks
 Here the equivalent knobs live in one place.  Tests and bench share one
 session; the driver may pass its own session, in which case
 :func:`tune_session` applies the runtime-settable subset (timezone,
-AQE, shuffle partitions) without restarting the JVM.
+AQE, shuffle partitions) without restarting the JVM.  State scoped to
+one JVM lives here too: :func:`memo` and :func:`scratch`.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+from pathlib import Path
+from typing import Callable
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from .stagecache import stage_root, sweep_dead_pids
 
 #: Runtime-settable confs applied to ANY session we are handed (driver's
 #: included).  Session timezone is pinned to UTC so timestamp-derived
@@ -74,6 +83,15 @@ def tune_session(spark: SparkSession,
     return spark
 
 
+def driver_memory(phys_bytes: int) -> str:
+    """Default ``spark.driver.memory``: half the host's RAM, within
+    1–48 GiB.  The other half is for the JVM's off-heap use and the
+    Python driver and workers (a fixed 48g heap on a 15 GiB host grew
+    until the kernel OOM-killed it)."""
+    mib = phys_bytes // 2 // 2**20
+    return f"{max(1024, min(48 * 1024, mib))}m"
+
+
 def get_spark(app_name: str = "iot_simulator_datalake_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the shared local session.
@@ -88,7 +106,9 @@ def get_spark(app_name: str = "iot_simulator_datalake_spark",
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_DRIVER_MEM", driver_memory(os.sysconf("SC_PHYS_PAGES")
+                                              * os.sysconf("SC_PAGE_SIZE"))))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
     )
@@ -114,3 +134,63 @@ def get_spark(app_name: str = "iot_simulator_datalake_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return tune_session(spark, shuffle_partitions)
+
+
+_MEMO: dict = {}
+_gateway = None     # the py4j gateway _MEMO and _scratch_root belong to
+_scratch_root: Path | None = None
+
+
+def _jvm_scope() -> None:
+    """Drop the memo and the scratch root if the gateway was replaced.
+    Pure Python (no py4j round-trip): one attribute read."""
+    global _gateway
+    gw = SparkContext._gateway
+    if gw is not _gateway:
+        _MEMO.clear()
+        _drop_scratch()
+        _gateway = gw
+
+
+def memo(key, build: Callable):
+    """``build()``, computed once per live JVM and ``key`` (keys are
+    shared by all call sites).
+
+    For parameter-pure objects that cost py4j round-trips to construct
+    and are reused by every later query build: unresolved, exprId-free
+    Columns (callers alias them, so each plan gets fresh exprIds),
+    parquet schemas, staged-index stats.  A Column is a handle into the
+    JVM that built it, so when ``SparkContext._gateway`` is replaced
+    (gateway shut down, session rebuilt in-process) every entry is
+    dropped.  A plain ``spark.stop()`` keeps the gateway and the memo.
+    Threads racing on a missing key may both build it; either result
+    is valid."""
+    _jvm_scope()
+    v = _MEMO.get(key)
+    if v is None:
+        v = _MEMO[key] = build()
+    return v
+
+
+def scratch(prefix: str) -> str:
+    """A fresh dir for a query's sinks, checkpoints or landing files,
+    under ``lake_stage/scratch-pid<pid>``.  Nothing is deleted when the
+    caller returns (its DataFrames read the dir lazily); the root goes
+    when the gateway is replaced or the process exits, and a killed
+    process's root is swept by the next process that makes one."""
+    global _scratch_root
+    _jvm_scope()
+    if _scratch_root is None:
+        root = stage_root() / f"scratch-pid{os.getpid()}"
+        root.mkdir(parents=True, exist_ok=True)
+        sweep_dead_pids(root.parent, "scratch-pid*", keep=root)
+        _scratch_root = root
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
+
+
+@atexit.register
+def _drop_scratch() -> None:
+    global _scratch_root
+    if _scratch_root is not None:
+        shutil.rmtree(_scratch_root, ignore_errors=True)
+        _scratch_root = None

@@ -118,28 +118,38 @@ def _recipe_digest(build: Callable) -> str:
     return h.hexdigest()[:8]
 
 
+def stage_root() -> Path:
+    """``<tmp>/lake_stage``, home of every staged and scratch dir."""
+    return Path(tempfile.gettempdir()) / _ROOT
+
+
+def sweep_dead_pids(base: Path, pattern: str, keep: Path) -> None:
+    """Remove ``base/pattern`` dirs named ``…pid<N>`` whose process is
+    gone: every invocation is a new process, so without this each run
+    strands its per-pid dirs — the cross-invocation disk leak this
+    module exists to stop, re-created one pid at a time.  A LIVE pid
+    (including a reused one) has /proc/<pid> and is never touched;
+    non-Linux (no /proc) skips the sweep."""
+    if not Path("/proc").is_dir():
+        return
+    for p in base.glob(pattern):
+        pid = p.name.rsplit("pid", 1)[-1]
+        if (p != keep and pid.isdigit()
+                and not Path(f"/proc/{pid}").exists()):
+            shutil.rmtree(p, ignore_errors=True)
+
+
 def scratch_dir(sf_dir: str, table: str, tag: str) -> Path:
     """Deterministic-per-(source, process) scratch directory for sinks
     that OVERWRITE on every invocation (runtime-filter demos, stream
     drains).  Reuse within a process stops the old per-call ``mkdtemp``
     leak (bench warm + 3 timed passes = one process); the pid suffix
     keeps concurrent sessions from overwriting each other's dir while
-    one of them is mid-read."""
-    base = Path(tempfile.gettempdir()) / _ROOT
+    one of them is mid-read.  Dead-pid dirs of the same tag are swept."""
+    base = stage_root()
     d = base / f"{tag}-{source_digest(sf_dir, table)}-pid{os.getpid()}"
     d.mkdir(parents=True, exist_ok=True)
-    # GC dead-pid scratch siblings of the SAME tag: every invocation
-    # is a new process, so without this each run strands a full
-    # drain/demo output under its own pid dir — the cross-invocation
-    # disk leak this module exists to stop, re-created one pid at a
-    # time.  A LIVE pid (including a reused one) has /proc/<pid> and
-    # is never touched; non-Linux (no /proc) skips the sweep.
-    if Path("/proc").is_dir():
-        for p in base.glob(f"{tag}-*-pid*"):
-            pid = p.name.rsplit("pid", 1)[-1]
-            if (p != d and pid.isdigit()
-                    and not Path(f"/proc/{pid}").exists()):
-                shutil.rmtree(p, ignore_errors=True)
+    sweep_dead_pids(base, f"{tag}-*-pid*", keep=d)
     return d
 
 
@@ -159,8 +169,7 @@ def stage_once(sf_dir: str, table: str, tag: str,
     """
     src_digest = source_digest(sf_dir, table)  # stats every source
     #                          file — compute once, reuse for the GC
-    dest = (Path(tempfile.gettempdir()) / _ROOT
-            / f"{tag}-{src_digest}-r{_recipe_digest(build)}")
+    dest = stage_root() / f"{tag}-{src_digest}-r{_recipe_digest(build)}"
     if (dest / "_STAGED").exists():
         return dest
     dest.parent.mkdir(parents=True, exist_ok=True)

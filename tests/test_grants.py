@@ -6,7 +6,6 @@ enforcement, audit log, and the python-vs-relational semantic lock."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -136,11 +135,11 @@ def _two_model_registry():
     return r
 
 
-def test_engine_run_authorized(spark):
+def test_engine_run_authorized(spark, tmp_path):
     reg = full_reg("etl")
     eng = Engine(spark, _two_model_registry(),
                  config={"catalog": "dev_catalog"},
-                 warehouse=tempfile.mkdtemp(prefix="grants_wh_"),
+                 warehouse=tmp_path / "wh",
                  grants=reg, run_as="etl")
     eng.run()
     assert eng.table("silver.agg").collect()[0]["s"] == 20
@@ -151,7 +150,7 @@ def test_engine_run_authorized(spark):
                                               "MODIFY"}
 
 
-def test_engine_run_denied_without_modify(spark):
+def test_engine_run_denied_without_modify(spark, tmp_path):
     reg = full_reg("etl")
     # revoke-by-rebuild: same grants minus MODIFY on silver
     reg2 = GrantRegistry()
@@ -162,7 +161,7 @@ def test_engine_run_denied_without_modify(spark):
                        g.securable)
     eng = Engine(spark, _two_model_registry(),
                  config={"catalog": "dev_catalog"},
-                 warehouse=tempfile.mkdtemp(prefix="grants_wh_"),
+                 warehouse=tmp_path / "wh",
                  grants=reg2, run_as="etl")
     with pytest.raises(PermissionError, match="MODIFY"):
         eng.run()
@@ -170,9 +169,9 @@ def test_engine_run_denied_without_modify(spark):
     assert any(not r["allowed"] for r in reg2.audit)
 
 
-def test_engine_without_grants_unchanged(spark):
+def test_engine_without_grants_unchanged(spark, tmp_path):
     eng = Engine(spark, _two_model_registry(),
-                 warehouse=tempfile.mkdtemp(prefix="grants_wh_"))
+                 warehouse=tmp_path / "wh")
     eng.run()
     assert eng.table("silver.agg").collect()[0]["s"] == 20
 
