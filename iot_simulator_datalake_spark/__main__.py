@@ -73,15 +73,19 @@ def main(argv: list[str] | None = None) -> int:
         from .engine import maintenance, skipping
         from .session import get_spark
         spark = get_spark("iot-lake-optimize")
-        if len(args.cluster_by) == 1:
-            n = maintenance.cluster(spark, args.path, args.cluster_by)
-            print(f"  clustered on {args.cluster_by[0]}: {n} files")
-        elif len(args.cluster_by) >= 2:
-            n = maintenance.zorder(spark, args.path, args.cluster_by)
-            print(f"  z-ordered on {args.cluster_by}: {n} files")
-        else:
-            n = maintenance.compact(spark, args.path)
-            print(f"  compacted: {n} files")
+        try:
+            if len(args.cluster_by) == 1:
+                n = maintenance.cluster(spark, args.path, args.cluster_by)
+                print(f"  clustered on {args.cluster_by[0]}: {n} files")
+            elif len(args.cluster_by) >= 2:
+                n = maintenance.zorder(spark, args.path, args.cluster_by)
+                print(f"  z-ordered on {args.cluster_by}: {n} files")
+            else:
+                n = maintenance.compact(spark, args.path)
+                print(f"  compacted: {n} files")
+        except ValueError as e:     # e.g. a streaming table's dir
+            print(f"optimize: {e}", file=sys.stderr)
+            return 2
         if args.stats:
             n = skipping.build_stats_manifest(args.path, args.stats)
             print(f"  stats manifest: {n} files indexed")

@@ -2,11 +2,16 @@
 DLT-managed ``OPTIMIZE`` the reference relies on (README_DBT.md:103-104,
 227 "Automatic ... VACUUM, OPTIMIZE").
 
-Streaming sinks append one file per micro-batch per partition; at
-100 TB that degrades scans (file-listing cost, tiny row groups, no
-row-group pruning).  Compaction rewrites a table directory to
-size-targeted files.  It is the one maintenance task a triggered-mode
-lakehouse must schedule.  Engine-managed (symlink) tables rewrite as
+Streaming tables append ⌈batch bytes / split size⌉ files per
+micro-batch (per partition value; streaming/runner.py), so every
+refresh adds at least one file; at 100 TB that degrades scans
+(file-listing cost, tiny row groups, no row-group pruning).  Compaction
+rewrites a table directory to size-targeted files.  It is the one
+maintenance task a triggered-mode lakehouse must schedule.  A
+streaming table's own directory is refused (see
+:func:`_refuse_streaming_table`): its ``_spark_metadata`` sink log is
+the table's file list, and a rewrite without it wedges the next
+refresh.  Engine-managed (symlink) tables rewrite as
 new version dirs through the runner's protocol — superseded versions
 persist for in-flight readers until ``runner.vacuum_table_versions``
 reclaims them (the Delta OPTIMIZE + VACUUM retention contract); plain
@@ -38,6 +43,7 @@ def compact(spark: "SparkSession", path: str | Path,
     compact per-partition automatically (coalesce preserves the
     partition columns through the rewrite's partitionBy discovery)."""
     src = Path(path)
+    _refuse_streaming_table(src)
     _restore_precompact(src)
     n_files, total = table_file_stats(src)
     n_target = max(1, -(-total // target_file_bytes))
@@ -69,6 +75,7 @@ def cluster(spark: "SparkSession", path: str | Path, cols: list[str],
     would put one hot key's whole mass in one file.
     """
     src = Path(path)
+    _refuse_streaming_table(src)
     _restore_precompact(src)
     _, total = table_file_stats(src)
     n_target = max(1, -(-total // target_file_bytes))
@@ -77,6 +84,19 @@ def cluster(spark: "SparkSession", path: str | Path, cols: list[str],
                  .sortWithinPartitions(*cols))
     _atomic_rewrite(src, clustered)
     return table_file_stats(src)[0]
+
+
+def _refuse_streaming_table(src: Path) -> None:
+    """A streaming table's files are listed by its ``_spark_metadata``
+    sink log, which readers trust over the directory.  A rewrite
+    leaves the log out, so the sink's next batch starts a log that
+    lacks its earlier entries and every later read fails
+    (``IllegalStateException: …/_spark_metadata/0 doesn't exist``)."""
+    if (src / "_spark_metadata").exists():
+        raise ValueError(
+            f"refusing to rewrite {src}: it is a streaming table (it "
+            f"holds _spark_metadata, the sink log that lists its "
+            f"files); a rewrite would break its next refresh")
 
 
 def _restore_precompact(src: Path) -> None:
@@ -184,6 +204,7 @@ def zorder(spark: "SparkSession", path: str | Path, cols: list[str],
     from pyspark.sql import functions as F
 
     src = Path(path)
+    _refuse_streaming_table(src)
     _restore_precompact(src)
     _, total = table_file_stats(src)
     n_target = max(1, -(-total // target_file_bytes))

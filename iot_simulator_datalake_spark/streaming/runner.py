@@ -12,7 +12,12 @@ propagation (ST2) across repeated runs.
 Scale note: the parquet streaming sink appends one commit per
 micro-batch; with availableNow Spark splits the backlog into
 maxFilesPerTrigger-sized batches, so state stays bounded no matter how
-large the landing directory has grown.
+large the landing directory has grown.  Each micro-batch is written as
+⌈batch bytes / ``spark.sql.files.maxPartitionBytes``⌉ files, never more
+than its input splits, so a small refresh lands as one file, not one
+per core — the file sizing the reference's platform does for its
+streaming tables (README_DBT.md:103-104, 227).  The size comes from
+the micro-batch plan's statistics, so no job runs.
 """
 
 from __future__ import annotations
@@ -56,30 +61,65 @@ def materialize_streaming_table(spark: "SparkSession", stream_df: "DataFrame",
     if not stream_df.isStreaming:
         raise ValueError("materialize_streaming_table needs a streaming "
                          "DataFrame (use spark.readStream)")
+    sink = _parquet_file_sink(spark, path, partition_by)
+
+    def write_batch(batch_df: "DataFrame", batch_id: int) -> None:
+        sink.addBatch(batch_id, batch_df.coalesce(_file_count(batch_df))._jdf)
+
     writer = (stream_df.writeStream
-              .format("parquet")
+              .foreachBatch(write_batch)
               .outputMode("append")
-              .option("path", str(path))
               .option("checkpointLocation", str(checkpoint)))
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    path.mkdir(parents=True, exist_ok=True)
     run_stream_available_now(writer, timeout_sec=timeout_sec)
-    # Zero-input first run: no micro-batch ever wrote a parquet file,
-    # so schema inference on the (pre-created, empty) dir would raise
-    # AnalysisException — return an empty batch frame with the STREAM's
-    # schema instead, so empty landing dirs / no-new-data re-runs are
-    # clean no-ops for downstream models.
-    if not any(p.suffix == ".parquet" for p in path.rglob("*")):
-        return spark.createDataFrame([], stream_df.schema)
     # Read back with the STREAM's schema rather than letting inference
-    # run and casting after it.  Two reasons: (a) partitioned read-back
-    # moves partition columns last and re-types them via directory-value
-    # inference, so the non-empty and zero-input paths returned
-    # DIFFERENT schemas; (b) a cast AFTER inference is lossy — a string
+    # run and casting after it.  Three reasons: (a) a zero-input run
+    # wrote no parquet file, and inference on the empty dir would raise
+    # — with a given schema it is an empty frame with the stream's
+    # columns, so empty landing dirs / no-new-data re-runs are clean
+    # no-ops for downstream models; (b) partitioned read-back moves
+    # partition columns last and re-types them via directory-value
+    # inference; (c) a cast AFTER inference is lossy — a string
     # partition value like '0123' infers as int 123 and casts back to
     # '123' (and '1.50' → '1.5'), silently corrupting numeric-looking
     # string keys.  A user-specified schema makes Spark parse the
     # directory values directly as the declared type (no inference) and
     # pins the column order.
     return spark.read.schema(stream_df.schema).parquet(str(path))
+
+
+def batch_bytes(batch_df: "DataFrame") -> int:
+    """Estimated size of a foreachBatch micro-batch, read from plan
+    statistics so no job runs: the batch is a ``LogicalRDD`` carrying
+    its origin plan's stats (for a file source, the batch's file
+    bytes).  A source without size stats reports Spark's default size
+    (effectively unbounded)."""
+    return int(batch_df._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+
+
+def _file_count(batch_df: "DataFrame") -> int:
+    """Files to write a micro-batch as: ⌈bytes / split size⌉, at least
+    one, clamped to the JVM int range ``coalesce`` takes.  ``coalesce``
+    never raises the partition count, so a batch keeps at most its own
+    input splits."""
+    split = (batch_df._jdf.sparkSession().sessionState().conf()
+             .filesMaxPartitionBytes())
+    return min(2**31 - 1, max(1, -(-batch_bytes(batch_df) // split)))
+
+
+def _parquet_file_sink(spark: "SparkSession", path: Path,
+                       partition_by: tuple[str, ...]):
+    """Spark's own parquet streaming sink on ``path`` — the one
+    ``writeStream.format("parquet")`` builds.  Its ``_spark_metadata``
+    log is the table's commit record: ``addBatch`` skips a batchId it
+    already holds (replay after a crash) and readers list only the
+    files it committed."""
+    jvm = spark._jvm
+    utils = jvm.org.apache.spark.api.python.PythonUtils
+    # Spark 4.x moved the class into ``.sinks`` (3.x: ``streaming``)
+    return jvm.org.apache.spark.sql.execution.streaming.sinks.FileStreamSink(
+        spark._jsparkSession, str(path),
+        jvm.org.apache.spark.sql.execution.datasources.parquet
+        .ParquetFileFormat(),
+        utils.toSeq(list(partition_by)),
+        utils.toScalaMap({"path": str(path)}))

@@ -151,3 +151,46 @@ def test_compact_engine_symlink_table_twice(spark, tmp_path):
     assert spark.read.parquet(str(tbl)).count() == 200
     vacuum_table_versions(tbl)
     assert os.path.exists(tbl)                    # current survives
+
+
+def test_maintenance_refuses_streaming_table(spark, tmp_path, capsys):
+    """Rewriting a streaming table's dir dropped its _spark_metadata
+    sink log: the next drain then wrote _spark_metadata/2 alone and
+    every later read raised IllegalStateException.  compact, cluster,
+    zorder and the CLI optimize must refuse the dir and leave it
+    refreshable."""
+    from datetime import datetime
+
+    import pytest
+
+    from conftest import write_iot_events
+    from iot_simulator_datalake_spark.__main__ import main
+    from iot_simulator_datalake_spark.engine.maintenance import (
+        cluster, zorder)
+    from iot_simulator_datalake_spark.streaming.runner import (
+        materialize_streaming_table)
+
+    landing, out, ck = tmp_path / "land", tmp_path / "bronze", tmp_path / "ck"
+    write_iot_events(landing, n_events=200, n_files=2, seed=61)
+    schema = spark.read.json(str(landing)).schema
+
+    def drain():
+        sdf = spark.readStream.schema(schema).json(str(landing))
+        return materialize_streaming_table(spark, sdf, out, ck)
+
+    drain()
+    write_iot_events(landing, n_events=100, n_files=1, seed=62,
+                     start=datetime(2024, 5, 1))
+    assert drain().count() == 300
+    for rewrite in (lambda: compact(spark, out, target_file_bytes=1 << 30),
+                    lambda: cluster(spark, out, ["device_id"]),
+                    lambda: zorder(spark, out, ["value"])):
+        with pytest.raises(ValueError, match="_spark_metadata"):
+            rewrite()
+    assert main(["optimize", str(out)]) == 2
+    assert "_spark_metadata" in capsys.readouterr().err
+
+    write_iot_events(landing, n_events=50, n_files=1, seed=63,
+                     start=datetime(2024, 6, 1))
+    assert drain().count() == 350
+    assert spark.read.schema(schema).parquet(str(out)).count() == 350
