@@ -9,7 +9,7 @@ micro-batch through ``foreachBatch``:
 
     new_partials = batch.groupBy(keys).agg(partials)
     merged = (old_state ∪ new_partials).groupBy(keys).agg(combine)
-    atomically swap the state table
+    atomically swap the state table (engine/publish.py's staged swap)
 
 Derived metrics (avg = sum/count) are computed in the *read view*, never
 stored — so merging stays associative and exactly-once (the foreachBatch
@@ -32,7 +32,7 @@ from typing import TYPE_CHECKING, Callable, Sequence
 
 from pyspark.sql import functions as F
 
-from ..operators.scd import _atomic_swap_write, _restore_crashed_swap
+from .publish import _atomic_swap_write, read_state
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -78,12 +78,6 @@ class IncrementalAggTable:
 
     # -- state ------------------------------------------------------------
 
-    def _state(self) -> "DataFrame | None":
-        _restore_crashed_swap(self.path)
-        if not (self.path / "_SUCCESS").exists():
-            return None
-        return self.spark.read.parquet(str(self.path))
-
     def _last_epoch(self) -> int | None:
         """Epoch id folded into the CURRENT state (travels inside the
         state dir so the epoch swaps atomically with the data)."""
@@ -97,12 +91,9 @@ class IncrementalAggTable:
 
     def _write_state(self, df: "DataFrame",
                      epoch_id: int | None = None) -> None:
-        # shared staged-swap with crash-window recovery (a crash
-        # between its two renames used to leave .old as the ONLY
-        # state copy, which the next refresh rmtree'd — silently
-        # rebuilding counts/sums from one micro-batch); the _epoch
-        # replay guard is written via finalize so it swaps atomically
-        # WITH the data
+        # shared staged swap with crash-window recovery (engine/
+        # publish.py); the _epoch replay guard is written via finalize
+        # so it swaps atomically WITH the data
         def _mark(tmp: Path) -> None:
             if epoch_id is not None:
                 (tmp / "_epoch").write_text(str(epoch_id))
@@ -136,7 +127,7 @@ class IncrementalAggTable:
             epoch_id = self._last_epoch()
         partials = batch.groupBy(*self.keys).agg(
             *[m.partial().alias(m.name) for m in self.metrics])
-        state = self._state()
+        state = read_state(self.spark, self.path)
         if state is not None:
             partials = state.unionByName(partials)
         merged = partials.groupBy(*self.keys).agg(
@@ -149,7 +140,7 @@ class IncrementalAggTable:
 
     def read(self) -> "DataFrame":
         """Read view: partials + derived metrics (avg = sum/n)."""
-        state = self._state()
+        state = read_state(self.spark, self.path)
         if state is None:
             raise FileNotFoundError(f"no state at {self.path}; refresh first")
         have = {m.name for m in self.metrics}
@@ -197,7 +188,7 @@ class IncrementalJoinAggTable(IncrementalAggTable):
         partials to ``final_keys`` (drawn from dim_cols ∪ state keys).
         The state's first key must be ``join_key``."""
         from ..operators.hints import maybe_broadcast
-        state = self._state()
+        state = read_state(self.spark, self.path)
         if state is None:
             raise FileNotFoundError(f"no state at {self.path}; refresh first")
         joined = state.join(

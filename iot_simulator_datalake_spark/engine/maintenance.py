@@ -11,17 +11,21 @@ maintenance task a triggered-mode lakehouse must schedule.  A
 streaming table's own directory is refused (see
 :func:`_refuse_streaming_table`): its ``_spark_metadata`` sink log is
 the table's file list, and a rewrite without it wedges the next
-refresh.  Engine-managed (symlink) tables rewrite as
-new version dirs through the runner's protocol — superseded versions
-persist for in-flight readers until ``runner.vacuum_table_versions``
-reclaims them (the Delta OPTIMIZE + VACUUM retention contract); plain
-directories use a self-contained staged swap with crash recovery.
+refresh.  Rewrites publish through engine/publish.py, like every other
+table write: engine-managed (symlink) tables as a new version dir —
+superseded versions persist for in-flight readers until
+``publish.vacuum_table_versions`` reclaims them (the Delta OPTIMIZE +
+VACUUM retention contract) — and plain directories through the shared
+staged swap, whose crash recovery every entry point runs first.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
 from typing import TYPE_CHECKING
+
+from .publish import (_atomic_swap_write, _install_version,
+                      _restore_crashed_swap, new_version_dir)
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import SparkSession
@@ -44,7 +48,7 @@ def compact(spark: "SparkSession", path: str | Path,
     partition columns through the rewrite's partitionBy discovery)."""
     src = Path(path)
     _refuse_streaming_table(src)
-    _restore_precompact(src)
+    _restore_crashed_swap(src)
     n_files, total = table_file_stats(src)
     n_target = max(1, -(-total // target_file_bytes))
     if n_files <= n_target:
@@ -76,7 +80,7 @@ def cluster(spark: "SparkSession", path: str | Path, cols: list[str],
     """
     src = Path(path)
     _refuse_streaming_table(src)
-    _restore_precompact(src)
+    _restore_crashed_swap(src)
     _, total = table_file_stats(src)
     n_target = max(1, -(-total // target_file_bytes))
     df = spark.read.parquet(str(src))
@@ -99,64 +103,25 @@ def _refuse_streaming_table(src: Path) -> None:
             f"files); a rewrite would break its next refresh")
 
 
-def _restore_precompact(src: Path) -> None:
-    """Crash-window recovery for the plain-directory swap below: a
-    crash between ``src.rename(.precompact)`` and the stage promote
-    leaves ``.precompact`` as the only complete copy — restore it
-    instead of letting the next rewrite rmtree it.  Called by every
-    maintenance entry point BEFORE reading the table."""
-    import shutil
-    old = src.with_suffix(".precompact")
-    if not (src / "_SUCCESS").exists() and (old / "_SUCCESS").exists():
-        shutil.rmtree(src, ignore_errors=True)
-        old.rename(src)
-
-
 def _atomic_rewrite(src: Path, df) -> None:
     """Rewrite ``src`` from ``df``, preserving hive-style partition
-    columns — two shapes depending on what ``src`` IS:
-
-    - **engine-managed table (a SYMLINK per runner._install_version)**:
-      write a new version dir beside it and atomically repoint the
-      link.  The old in-place swap was doubly wrong here — rmtree
-      silently refuses symlinks (leaking the superseded version and
-      wedging the SECOND rewrite with ENOTDIR) and a crash between its
-      renames left the live path absent.  Version install keeps the
-      path resolvable at every instant; superseded versions are
-      reclaimed by ``vacuum_table_versions``.
-
-    - **plain directory**: staged in-place swap (self-contained — no
-      sibling artifacts, which stage_once's cache layout depends on),
-      with the ``.precompact`` crash window recovered on the next
-      entry via :func:`_restore_precompact`."""
-    import shutil
-    import uuid
-
+    columns.  An engine-managed table (a symlink) gets a new version
+    dir and a retargeted link, so the path resolves at every instant;
+    a plain directory is rewritten in place by the staged swap (it must
+    stay a real dir: ``stage_once`` layouts are read by path)."""
     part_cols = sorted({seg.split("=", 1)[0]
                         for p in src.rglob("*.parquet")
                         for seg in p.relative_to(src).parts[:-1]
                         if "=" in seg})
-
-    def write_to(path: Path) -> None:
-        writer = df.write.mode("overwrite")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(str(path))
-
-    if src.is_symlink():
-        from .runner import _install_version
-        vdir = src.with_name(f"{src.name}.v-maint-{uuid.uuid4().hex[:8]}")
-        write_to(vdir)
-        _install_version(vdir, src)
+    if not src.is_symlink():
+        _atomic_swap_write(df, src, partition_by=part_cols)
         return
-    tmp = src.with_suffix(".compacting")
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_to(tmp)
-    old = src.with_suffix(".precompact")
-    shutil.rmtree(old, ignore_errors=True)
-    src.rename(old)
-    tmp.rename(src)
-    shutil.rmtree(old, ignore_errors=True)
+    vdir = new_version_dir(src)
+    writer = df.write
+    if part_cols:
+        writer = writer.partitionBy(*part_cols)
+    writer.parquet(str(vdir))
+    _install_version(vdir, src)
 
 
 def _morton_key(cols: list[str], bits: int = 16):
@@ -205,7 +170,7 @@ def zorder(spark: "SparkSession", path: str | Path, cols: list[str],
 
     src = Path(path)
     _refuse_streaming_table(src)
-    _restore_precompact(src)
+    _restore_crashed_swap(src)
     _, total = table_file_stats(src)
     n_target = max(1, -(-total // target_file_bytes))
     df = spark.read.parquet(str(src))

@@ -1,0 +1,157 @@
+"""Table publication: how a rewritten table becomes visible and how a
+crash midway heals.  The only module that knows the on-disk publish
+layout.  Siblings are named from the table's FULL name
+(``<name>.v-<8 hex>``, ``.ln-<hex>``, ``.staging``, ``.old``), so
+tables sharing a stem never share one.
+
+- **version install** (engine tables): write a :func:`new_version_dir`,
+  then :func:`_install_version` retargets the table's symlink.
+- **staged swap** (state tables, plain dirs such as ``stage_once``
+  layouts, which must stay real dirs): :func:`_atomic_swap_write`;
+  every reader and writer first runs :func:`_restore_crashed_swap`.
+
+``_STEP_HOOK`` is the crash seam (tests/test_crash_injection.py):
+called after each externally visible step of both protocols; always
+None in production.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import uuid
+from pathlib import Path
+from typing import TYPE_CHECKING, Sequence
+
+if TYPE_CHECKING:  # pragma: no cover
+    from pyspark.sql import DataFrame, SparkSession
+
+_STEP_HOOK = None
+
+
+def _step(name: str) -> None:
+    if _STEP_HOOK is not None:
+        _STEP_HOOK(name)
+
+
+def _sibling(path: Path, suffix: str) -> Path:
+    return path.with_name(path.name + suffix)
+
+
+def new_version_dir(path: Path) -> Path:
+    """A fresh ``<table>.v-<8 hex>`` dir name beside ``path``."""
+    return _sibling(path, f".v-{uuid.uuid4().hex[:8]}")
+
+
+def _install_version(vdir: Path, final: Path) -> None:
+    """Install a fully-written version dir as ``final`` — concurrent-
+    writer AND concurrent-reader safe (VERDICT r2 #3).
+
+    Spark's own ``mode("overwrite")`` deletes the target then writes
+    into it, so two simultaneous writers interleave part files into one
+    corrupt table — and even staged-write-then-rename breaks concurrent
+    READERS, whose resolved file listings dangle when the dir under
+    them is replaced (observed: FileNotFound task failures in the
+    concurrent-run test).  So ``final`` is a SYMLINK, atomically
+    retargeted (symlink + rename(2) over the old link): writers
+    serialize to last-committer-wins, and superseded version dirs stay
+    on disk so any in-flight reader keeps a consistent snapshot.  The
+    engine registers its OWN version dir for same-run downstream reads
+    (retarget-immune); fresh readers of the table path resolve the
+    link to the newest complete version.  Old versions are reclaimed
+    by :func:`vacuum_table_versions` once quiesced, or by
+    ``drop_warehouse`` — the local analog of Delta's VACUUM retention.
+    For a full commit history + time travel use ``snapshot_keep``
+    (the OCC commit log in engine/snapshots.py).
+
+    Migration: if ``final`` is a real directory from an older layout,
+    it is renamed into a version dir first (readers of the path itself
+    see one brief ENOENT window during this one-time conversion).
+    """
+    if final.exists() and not final.is_symlink():
+        legacy = _sibling(final, f".v-legacy-{uuid.uuid4().hex[:8]}")
+        try:
+            os.rename(final, legacy)
+        except OSError:
+            pass                    # another writer already converted it
+    _step("install:legacy-converted")
+    tmp = _sibling(final, f".ln-{uuid.uuid4().hex[:8]}")
+    os.symlink(vdir.name, tmp)      # relative: version dirs sit beside
+    _step("install:tmp-linked")
+    os.replace(tmp, final)          # atomic over an existing symlink
+    _step("install:replaced")
+
+
+def vacuum_table_versions(path: str | Path) -> list[str]:
+    """Delete superseded ``<table>.v-*`` version dirs (everything not
+    targeted by the current symlink).  Call only when no reader may
+    still hold the old versions — same contract as Delta VACUUM with
+    retention 0."""
+    final = Path(path)
+    current = os.readlink(final) if final.is_symlink() else None
+    dropped = []
+    for p in final.parent.glob(f"{final.name}.v-*"):
+        if p.name != current:
+            shutil.rmtree(p, ignore_errors=True)
+            dropped.append(p.name)
+    return dropped
+
+
+def _restore_crashed_swap(path: Path) -> None:
+    """Recover from a crash INSIDE a previous staged swap: between
+    moving the live dir to ``.old`` and promoting the stage, the only
+    complete copy of the state lives at ``.old``.  Readers and writers
+    call this first — without it, the next write would ``rmtree(.old)``
+    the sole surviving copy and silently rebuild the state from one
+    batch (total tombstone/history loss)."""
+    old = _sibling(path, ".old")
+    if not (path / "_SUCCESS").exists() and (old / "_SUCCESS").exists():
+        shutil.rmtree(path, ignore_errors=True)  # absent or incomplete
+        old.rename(path)
+
+
+def _atomic_swap_write(df: "DataFrame", path: Path, finalize=None,
+                       partition_by: Sequence[str] = ()) -> None:
+    """Write ``df`` over the dir at ``path`` via the staged-rename
+    protocol (stage → move live to .old → promote stage → drop .old),
+    with crash-window recovery on entry.  ONE definition shared by the
+    state tables (operators/scd.py, engine/incremental.py) and
+    maintenance's plain-dir rewrites — the swap's failure modes are
+    subtle enough that drifting copies were themselves review
+    findings, twice.  ``finalize(tmp_dir)`` runs after the stage is
+    fully written and before it is promoted — for markers that must
+    swap atomically WITH the data (e.g. the incremental tables'
+    ``_epoch`` replay guard).  ``partition_by`` writes the stage
+    hive-partitioned."""
+    _restore_crashed_swap(path)
+    _step("swap:restored")
+    tmp = _sibling(path, ".staging")
+    shutil.rmtree(tmp, ignore_errors=True)
+    _step("swap:stage-cleared")
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(str(tmp))
+    _step("swap:staged")
+    if finalize is not None:
+        finalize(tmp)
+    _step("swap:finalized")
+    old = _sibling(path, ".old")
+    shutil.rmtree(old, ignore_errors=True)
+    _step("swap:old-cleared")
+    if path.exists():
+        path.rename(old)
+    _step("swap:live-moved")
+    tmp.rename(path)
+    _step("swap:promoted")
+    shutil.rmtree(old, ignore_errors=True)
+    _step("swap:old-dropped")
+
+
+def read_state(spark: "SparkSession", path: Path) -> "DataFrame | None":
+    """The state table at ``path`` after crash recovery, or None if no
+    complete state was ever published."""
+    _restore_crashed_swap(path)
+    if not (path / "_SUCCESS").exists():
+        return None
+    return spark.read.parquet(str(path))

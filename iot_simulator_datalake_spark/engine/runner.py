@@ -8,11 +8,12 @@ do all optimization (SURVEY §4 — zero custom optimizer rules needed).
 Materializations (dbt_project.yml:11-19):
 
 - ``view``            → temp view + in-memory handle (no write)
-- ``table``           → parquet overwrite into the warehouse dir, read
-                        back with the written frame's schema (so
-                        downstream reads scan columnar storage with
-                        pushdown, like a real table, and no inference
-                        job runs)
+- ``table``           → parquet into a new version dir, published by
+                        retargeting the table's symlink
+                        (engine/publish.py), read back with the
+                        written frame's schema (so downstream reads
+                        scan columnar storage with pushdown, like a
+                        real table, and no inference job runs)
 - ``streaming_table`` → Structured Streaming triggered (availableNow)
                         run with a checkpoint dir → exactly-once
                         incremental append (⇔ DLT streaming table,
@@ -29,7 +30,6 @@ from __future__ import annotations
 import os
 import shutil
 import time
-import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -37,68 +37,11 @@ from typing import TYPE_CHECKING, Any
 
 from .checks import Check, CheckResult, count_violations
 from .model import Model, ModelContext, Registry
+from .publish import _install_version, new_version_dir
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
     from pyspark.sql.types import StructType
-
-
-def _install_version(vdir: Path, final: Path) -> None:
-    """Install a fully-written version dir as ``final`` — concurrent-
-    writer AND concurrent-reader safe (VERDICT r2 #3).
-
-    Spark's own ``mode("overwrite")`` deletes the target then writes
-    into it, so two simultaneous writers interleave part files into one
-    corrupt table — and even staged-write-then-rename breaks concurrent
-    READERS, whose resolved file listings dangle when the dir under
-    them is replaced (observed: FileNotFound task failures in the
-    concurrent-run test).  So ``final`` is a SYMLINK, atomically
-    retargeted (symlink + rename(2) over the old link): writers
-    serialize to last-committer-wins, and superseded version dirs stay
-    on disk so any in-flight reader keeps a consistent snapshot.  The
-    engine registers its OWN version dir for same-run downstream reads
-    (retarget-immune); fresh readers of the table path resolve the
-    link to the newest complete version.  Old versions are reclaimed
-    by :func:`vacuum_table_versions` once quiesced, or by
-    ``drop_warehouse`` — the local analog of Delta's VACUUM retention.
-    For a full commit history + time travel use ``snapshot_keep``
-    (the OCC commit log in engine/snapshots.py).
-
-    Migration: if ``final`` is a real directory from an older layout,
-    it is renamed into a version dir first (readers of the path itself
-    see one brief ENOENT window during this one-time conversion).
-    """
-    from ..operators.scd import _step  # shared crash-injection seam
-    if final.exists() and not final.is_symlink():
-        legacy = final.with_name(f"{final.name}.v-legacy-"
-                                 f"{uuid.uuid4().hex[:8]}")
-        try:
-            os.rename(final, legacy)
-        except OSError:
-            pass                    # another writer already converted it
-    _step("install:legacy-converted")
-    tmp = final.with_name(f"{final.name}.ln-{uuid.uuid4().hex[:8]}")
-    os.symlink(vdir.name, tmp)      # relative: version dirs sit beside
-    _step("install:tmp-linked")
-    os.replace(tmp, final)          # atomic over an existing symlink
-    _step("install:replaced")
-
-
-def vacuum_table_versions(path: str | Path, keep_current: bool = True
-                          ) -> list[str]:
-    """Delete superseded ``<table>.v-*`` version dirs (everything not
-    targeted by the current symlink).  Call only when no reader may
-    still hold the old versions — same contract as Delta VACUUM with
-    retention 0."""
-    final = Path(path)
-    current = os.readlink(final) if final.is_symlink() else None
-    dropped = []
-    for p in final.parent.glob(f"{final.name}.v-*"):
-        if keep_current and p.name == current:
-            continue
-        shutil.rmtree(p, ignore_errors=True)
-        dropped.append(p.name)
-    return dropped
 
 
 def _read_back(spark: "SparkSession", schema: "StructType",
@@ -265,8 +208,7 @@ class Engine:
                     # the table symlink: concurrent engine.run()s
                     # serialize to complete snapshots and in-flight
                     # readers keep theirs (see _install_version)
-                    vdir = path.with_name(
-                        f"{path.name}.v-{uuid.uuid4().hex[:8]}")
+                    vdir = new_version_dir(path)
                     writer.parquet(str(vdir))
                     if deferred is None:
                         _install_version(vdir, path)
@@ -368,7 +310,7 @@ class Engine:
         # server-side copy on object stores), dynamic-overwrite only
         # the matched partitions inside the copy, then atomically
         # retarget the symlink like any other write.
-        vdir = path.with_name(f"{path.name}.v-{uuid.uuid4().hex[:8]}")
+        vdir = new_version_dir(path)
         if path.exists():
             shutil.copytree(path.resolve(), vdir,
                             copy_function=os.link)

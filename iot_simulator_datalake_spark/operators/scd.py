@@ -1,79 +1,23 @@
 """SCD Type 1 current-state from CDC change streams ([DOC] W1 surface:
 README_DBT.md:103,171-182,242-244 — "CDC deduplication with
 ROW_NUMBER()", soft deletes via ``_is_deleted``), plus the continuously
-maintained variant (⇔ DLT ``APPLY CHANGES INTO``)."""
+maintained variant (⇔ DLT ``APPLY CHANGES INTO``).  The stored state
+tables publish through engine/publish.py's staged swap and read back
+through its crash-recovering ``read_state``."""
 
 from __future__ import annotations
 
-import shutil
 from pathlib import Path
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..engine.publish import _atomic_swap_write, read_state
 from .dedup import window_dedup
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import SparkSession
-
-
-#: Crash-injection seam (tests/test_crash_injection.py): when set,
-#: called with a step name AFTER each externally-visible effect of the
-#: staged-swap / version-install protocols; the harness raises from it
-#: to simulate a kill at every step and then asserts read-and-write
-#: healing.  Always None in production.
-_STEP_HOOK = None
-
-
-def _step(name: str) -> None:
-    if _STEP_HOOK is not None:
-        _STEP_HOOK(name)
-
-
-def _restore_crashed_swap(path: Path) -> None:
-    """Recover from a crash INSIDE a previous atomic swap: between
-    ``path.rename(.old)`` and ``tmp.rename(path)`` the only complete
-    copy of the state lives at ``.old``.  Readers and writers call this
-    first — without it, the next write would ``rmtree(.old)`` the sole
-    surviving copy and silently rebuild the state from one batch
-    (total tombstone/history loss)."""
-    old = path.with_suffix(".old")
-    if not (path / "_SUCCESS").exists() and (old / "_SUCCESS").exists():
-        shutil.rmtree(path, ignore_errors=True)  # absent or incomplete
-        old.rename(path)
-
-
-def _atomic_swap_write(df: DataFrame, path: Path, finalize=None) -> None:
-    """Write ``df`` over the state at ``path`` via the staged-rename
-    protocol (stage → move live to .old → promote stage → drop .old),
-    with crash-window recovery on entry.  ONE definition shared by
-    every staged-swap state table (this module's operators and
-    engine/incremental.py) — the swap's failure modes are subtle
-    enough that drifting copies were themselves review findings, twice.
-    ``finalize(tmp_dir)`` runs after the stage is fully written and
-    before it is promoted — for markers that must swap atomically WITH
-    the data (e.g. the incremental tables' ``_epoch`` replay guard)."""
-    _restore_crashed_swap(path)
-    _step("swap:restored")
-    tmp = path.with_suffix(".staging")
-    shutil.rmtree(tmp, ignore_errors=True)
-    _step("swap:stage-cleared")
-    df.write.mode("overwrite").parquet(str(tmp))
-    _step("swap:staged")
-    if finalize is not None:
-        finalize(tmp)
-    _step("swap:finalized")
-    old = path.with_suffix(".old")
-    shutil.rmtree(old, ignore_errors=True)
-    _step("swap:old-cleared")
-    if path.exists():
-        path.rename(old)
-    _step("swap:live-moved")
-    tmp.rename(path)
-    _step("swap:promoted")
-    shutil.rmtree(old, ignore_errors=True)
-    _step("swap:old-dropped")
 
 
 def scd1_current(changes: DataFrame, key: str, order_col: str = "op_ts",
@@ -123,14 +67,8 @@ class ApplyChanges:
         self.key, self.order_col = key, order_col
         self.tiebreak, self.deleted_col = tiebreak, deleted_col
 
-    def _state(self) -> DataFrame | None:
-        _restore_crashed_swap(self.path)
-        if not (self.path / "_SUCCESS").exists():
-            return None
-        return self.spark.read.parquet(str(self.path))
-
     def apply(self, changes: DataFrame, epoch_id: int | None = None) -> None:
-        state = self._state()
+        state = read_state(self.spark, self.path)
         merged = changes if state is None else \
             state.unionByName(changes, allowMissingColumns=True)
         order = [F.col(self.order_col).desc()]
@@ -142,7 +80,7 @@ class ApplyChanges:
         _atomic_swap_write(current, self.path)
 
     def read(self, include_deleted: bool = False) -> DataFrame:
-        state = self._state()
+        state = read_state(self.spark, self.path)
         if state is None:
             raise FileNotFoundError(f"no state at {self.path}; apply first")
         if include_deleted or self.deleted_col not in state.columns:
@@ -218,12 +156,6 @@ class SnapshotTable:
         self.key, self.strategy = unique_key, strategy
         self.updated_at, self.check_cols = updated_at, check_cols or []
 
-    def _state(self) -> "DataFrame | None":
-        _restore_crashed_swap(self.path)
-        if not (self.path / "_SUCCESS").exists():
-            return None
-        return self.spark.read.parquet(str(self.path))
-
     def _write(self, df: "DataFrame") -> None:
         _atomic_swap_write(df, self.path)
 
@@ -231,7 +163,7 @@ class SnapshotTable:
         src = source.withColumn("dbt_valid_from", F.col(self.updated_at)) \
                     .withColumn("dbt_valid_to",
                                 F.lit(None).cast("timestamp"))
-        state = self._state()
+        state = read_state(self.spark, self.path)
         if state is None:
             self._write(src.localCheckpoint(eager=True))
             return
@@ -276,7 +208,7 @@ class SnapshotTable:
         self._write(new_state.localCheckpoint(eager=True))
 
     def read(self, current_only: bool = False) -> "DataFrame":
-        state = self._state()
+        state = read_state(self.spark, self.path)
         if state is None:
             raise FileNotFoundError(f"no snapshot at {self.path}")
         return (state.filter(F.col("dbt_valid_to").isNull())

@@ -172,12 +172,10 @@ def memo(key, build: Callable):
     return v
 
 
-def scratch(prefix: str) -> str:
-    """A fresh dir for a query's sinks, checkpoints or landing files,
-    under ``lake_stage/scratch-pid<pid>``.  Nothing is deleted when the
-    caller returns (its DataFrames read the dir lazily); the root goes
-    when the gateway is replaced or the process exits, and a killed
-    process's root is swept by the next process that makes one."""
+def scratch_root() -> Path:
+    """This process's ``lake_stage/scratch-pid<pid>``.  It goes when the
+    gateway is replaced or the process exits, and a killed process's
+    root is swept by the next process that makes one."""
     global _scratch_root
     _jvm_scope()
     if _scratch_root is None:
@@ -185,7 +183,14 @@ def scratch(prefix: str) -> str:
         root.mkdir(parents=True, exist_ok=True)
         sweep_dead_pids(root.parent, "scratch-pid*", keep=root)
         _scratch_root = root
-    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
+    return _scratch_root
+
+
+def scratch(prefix: str) -> str:
+    """A fresh dir for a query's sinks, checkpoints or landing files,
+    under :func:`scratch_root`; it outlives the call (its DataFrames
+    read the dir lazily)."""
+    return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
 
 
 @atexit.register

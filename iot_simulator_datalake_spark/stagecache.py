@@ -13,7 +13,6 @@ it.
 from __future__ import annotations
 
 import hashlib
-import os
 import shutil
 import tempfile
 import uuid
@@ -143,13 +142,12 @@ def scratch_dir(sf_dir: str, table: str, tag: str) -> Path:
     """Deterministic-per-(source, process) scratch directory for sinks
     that OVERWRITE on every invocation (runtime-filter demos, stream
     drains).  Reuse within a process stops the old per-call ``mkdtemp``
-    leak (bench warm + 3 timed passes = one process); the pid suffix
-    keeps concurrent sessions from overwriting each other's dir while
-    one of them is mid-read.  Dead-pid dirs of the same tag are swept."""
-    base = stage_root()
-    d = base / f"{tag}-{source_digest(sf_dir, table)}-pid{os.getpid()}"
-    d.mkdir(parents=True, exist_ok=True)
-    sweep_dead_pids(base, f"{tag}-*-pid*", keep=d)
+    leak (bench warm + 3 timed passes = one process).  It lives under
+    the process's scratch root (``session.scratch_root``), so it goes
+    when the process does and concurrent sessions never share it."""
+    from .session import scratch_root   # session imports this module
+    d = scratch_root() / f"{tag}-{source_digest(sf_dir, table)}"
+    d.mkdir(exist_ok=True)
     return d
 
 

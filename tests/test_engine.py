@@ -227,7 +227,7 @@ def test_concurrent_engine_runs_serialize(spark, tmp_path):
                  if ".ln-" in p.name or ".tmp" in p.name]
     assert not leftovers
     # vacuum reclaims every non-current version and reads still work
-    from iot_simulator_datalake_spark.engine.runner import (
+    from iot_simulator_datalake_spark.engine.publish import (
         vacuum_table_versions)
     for sub in ("silver/base", "gold/agg"):
         vacuum_table_versions(tmp_path / "wh" / sub)

@@ -38,6 +38,11 @@ SCRATCH_QUERIES = (
     "streaming_quantile_sketch", "streaming_late_data_drop",
     "snapshot_changes",
 )
+#: queries whose sinks go to ``stagecache.scratch_dir`` (no mkdtemp)
+SCRATCH_DIR_QUERIES = (
+    "runtime_bloom_filter_join", "streaming_topk_users_hourly",
+    "streaming_dedup_rollup_rocksdb",
+)
 
 
 def _run(prog: str, tmp_path: Path) -> dict:
@@ -87,8 +92,9 @@ print(json.dumps({{"first": first, "second": counts()}}))
 
 
 def test_scratch_dirs_leave_tmpdir_clean(tmp_path):
-    """Every query that writes scratch dirs leaves nothing in TMPDIR
-    once its process exits, apart from ``stage_once`` layouts
+    """Every query that writes scratch dirs (``session.scratch`` or
+    ``stagecache.scratch_dir``) leaves nothing in TMPDIR once its
+    process exits, apart from ``stage_once`` layouts
     (``lake_stage/<tag>-<digest>-r<recipe>``, a cross-invocation cache
     by design)."""
     prog = f"""
@@ -108,14 +114,14 @@ def mkdtemp(*args, **kwargs):
 tempfile.mkdtemp = mkdtemp
 spark = get_spark("tmpdir-hygiene", shuffle_partitions=4)
 made = {{}}
-for n in {SCRATCH_QUERIES!r}:
+for n in {SCRATCH_QUERIES + SCRATCH_DIR_QUERIES!r}:
     before = len(calls)
     full_mat(REGISTRY[n].fn(spark, {SF!r}))
     made[n] = len(calls) - before
 print(json.dumps(made))
 """
     made = _run(prog, tmp_path)
-    assert [n for n, k in made.items() if k < 1] == []
+    assert [n for n in SCRATCH_QUERIES if made[n] < 1] == []
     left = sorted(str(p.relative_to(tmp_path / "tmp"))
                   for p in (tmp_path / "tmp").iterdir())
     assert left in ([], ["lake_stage"])

@@ -131,13 +131,13 @@ def test_zorder_prunes_on_both_dimensions(spark, tmp_path):
 
 
 def test_compact_engine_symlink_table_twice(spark, tmp_path):
-    """Engine-managed tables are SYMLINKS (runner._install_version);
+    """Engine-managed tables are SYMLINKS (publish._install_version);
     the old in-place swap wedged the SECOND rewrite with ENOTDIR and
     leaked versions.  Compaction must now install new version dirs and
     stay repeatable."""
     import os
     from iot_simulator_datalake_spark.engine.maintenance import compact
-    from iot_simulator_datalake_spark.engine.runner import (
+    from iot_simulator_datalake_spark.engine.publish import (
         _install_version, vacuum_table_versions)
     tbl = tmp_path / "t"
     v0 = tmp_path / "t.v-0000"

@@ -373,29 +373,38 @@ def test_recipe_digest_stable_across_processes():
 
 
 def test_scratch_dir_gcs_dead_pid_siblings(tmp_path, monkeypatch):
-    """Dead-pid scratch dirs of the same tag are swept on the next
-    scratch_dir call; the caller's own dir and live/foreign names
-    survive."""
+    """scratch_dir dirs live under the process's scratch root, so they
+    go with it: a killed process's root (and every tag dir in it) is
+    swept when the next process makes its root; the caller's own root
+    and a live process's root survive."""
+    import os
     import pathlib
 
+    from iot_simulator_datalake_spark import session
     from iot_simulator_datalake_spark import stagecache as sc
 
     monkeypatch.setattr(sc.tempfile, "gettempdir", lambda: str(tmp_path))
+    # a private scope: the shared session's root is back untouched when
+    # monkeypatch restores these
+    monkeypatch.setattr(session, "_MEMO", {})
+    monkeypatch.setattr(session, "_gateway", None)
+    monkeypatch.setattr(session, "_scratch_root", None)
     src = tmp_path / "src"
     (src / "t.parquet").mkdir(parents=True)
     (src / "t.parquet" / "part-0").write_text("x")
     base = tmp_path / "lake_stage"
-    base.mkdir()
     dig = sc.source_digest(str(src), "t")
-    dead = base / f"demo-{dig}-pid999999999"   # no such /proc entry
-    dead.mkdir()
-    other_tag = base / f"other-{dig}-pid999999999"
-    other_tag.mkdir()
+    dead = base / "scratch-pid999999999"        # no such /proc entry
+    (dead / f"demo-{dig}").mkdir(parents=True)
+    live = base / "scratch-pid1"
+    live.mkdir()
     d = sc.scratch_dir(str(src), "t", "demo")
-    assert d.exists()
+    assert d == base / f"scratch-pid{os.getpid()}" / f"demo-{dig}"
+    assert d.is_dir()
+    assert sc.scratch_dir(str(src), "t", "demo") == d   # reused
     if pathlib.Path("/proc").is_dir():
-        assert not dead.exists()               # dead sibling swept
-    assert other_tag.exists()                  # different tag untouched
+        assert not dead.exists()               # dead root swept
+    assert live.exists()                       # live pid untouched
 
 
 def test_recipe_digest_canonicalizes_nested_frozensets():
