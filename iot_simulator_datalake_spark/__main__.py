@@ -1,6 +1,7 @@
 """CLI: ``python -m iot_simulator_datalake_spark run|test|docs|lineage|
 optimize`` — run/test mirror the reference job's two steps (``dbt run``
-then ``dbt test``, resources/jobs.yml:30-33; O5 in SURVEY §2.10);
+then ``dbt test``, resources/jobs.yml:30-33; O5 in SURVEY §2.10) and
+append their events to ``<warehouse>/_event_log/events.jsonl``;
 docs/lineage expose the catalog + impact-analysis relations (the dbt
 docs analog); optimize compacts / clusters / z-orders a table dir."""
 
@@ -95,6 +96,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     from .engine import Engine
+    from .engine.eventlog import attach_event_log
     from .pipeline import attach_reference_checks, build_registry
     from .session import get_spark
 
@@ -110,6 +112,9 @@ def main(argv: list[str] | None = None) -> int:
                  config={"iot_events_path": args.landing,
                          "warehouse": args.warehouse},
                  warehouse=args.warehouse)
+    log = attach_event_log(
+        eng, eng.warehouse / "_event_log" / "events.jsonl")
+    print(f"  event log: {log.path}")
     result = eng.run(select=args.select, atomic_publish=args.atomic)
     for qn in result.materialized:
         print(f"  materialized {qn} [{result.seconds[qn]:.2f}s]")

@@ -188,6 +188,25 @@ def accepted_values(relation: str, column: str,
         generic=Generic("accepted_values", column, tuple(values)))
 
 
+@dataclass
+class _Relationship(Check):
+    """A check whose violation query reads two relations (child, parent)."""
+    column: str = ""
+    to_relation: str = ""
+    to_column: str = ""
+
+    def __post_init__(self) -> None:
+        """No ``builder``: :meth:`violations` replaces it."""
+
+    def violations(self, engine: "Engine") -> "DataFrame":
+        from ..operators.hints import maybe_broadcast
+        child = engine.table(self.relation)
+        parent = engine.table(self.to_relation).select(
+            F.col(self.to_column).alias(self.column)).distinct()
+        return child.filter(F.col(self.column).isNotNull()).join(
+            maybe_broadcast(parent), on=self.column, how="left_anti")
+
+
 def relationship(relation: str, column: str, to_relation: str,
                  to_column: str) -> Check:
     """Referential integrity (J3, README_DBT.md:247): child keys with no
@@ -195,21 +214,10 @@ def relationship(relation: str, column: str, to_relation: str,
     is provably a dim (hints.maybe_broadcast; a hard F.broadcast here
     would force a scale-factor-proportional parent's distinct key set
     through the driver — the exact failure the hints doctrine bans)."""
-    def build(df: "DataFrame") -> "DataFrame":
-        raise RuntimeError("relationship checks need engine context")
-    chk = Check(name=f"relationship__{relation}__{column}__{to_relation}",
-                relation=relation, builder=build)
-
-    def violations(engine: "Engine") -> "DataFrame":
-        from ..operators.hints import maybe_broadcast
-        child = engine.table(relation)
-        parent = engine.table(to_relation).select(
-            F.col(to_column).alias(column)).distinct()
-        return child.filter(F.col(column).isNotNull()).join(
-            maybe_broadcast(parent), on=column, how="left_anti")
-
-    chk.violations = violations  # type: ignore[method-assign]
-    return chk
+    return _Relationship(
+        name=f"relationship__{relation}__{column}__{to_relation}",
+        relation=relation, column=column, to_relation=to_relation,
+        to_column=to_column)
 
 
 def singular(name: str, relation: str,

@@ -5,12 +5,15 @@ observability surface: per-table materialization timing, expectation
 metrics, streaming progress).
 
 One JSONL file per engine instance; every record carries
-``(ts, event_type, payload)``.  Three producers:
+``(ts, event_type, payload)``.  :class:`EventLog` is a sink that two
+producers write to:
 
-- :meth:`EventLog.model_event` — per-model materialization outcome
-  (wired through :func:`attach_event_log`)
-- :meth:`EventLog.check_event` — data-quality results, incl. violation
-  counts (the DLT expectation-metrics analog)
+- :class:`~.runner.Engine`, when its ``event_log`` is set
+  (:func:`attach_event_log`): ``run_started``, one
+  ``model_materialized`` per model as it finishes (``status`` ok or
+  failed, with its ``error``), ``run_finished`` or ``run_failed``, and
+  one ``check_result`` per check per ``test()`` — the persisted check
+  history (the DLT expectation-metrics analog)
 - :class:`ProgressListener` — Structured Streaming query progress
   (rows/sec, batch duration, state size) via the public
   ``StreamingQueryListener`` API
@@ -52,10 +55,18 @@ class EventLog:
         with self._lock, self.path.open("a") as f:
             f.write(line + "\n")
 
+    @staticmethod
+    def _seconds(seconds: float) -> float:
+        return round(seconds, 3)        # logged at ms resolution
+
     def model_event(self, qualified_name: str, seconds: float,
                     status: str = "ok", **extra: Any) -> None:
         self.emit("model_materialized", model=qualified_name,
-                  seconds=round(seconds, 3), status=status, **extra)
+                  seconds=self._seconds(seconds), status=status, **extra)
+
+    def run_finished(self, seconds: dict[str, float]) -> None:
+        self.emit("run_finished", n_models=len(seconds),
+                  total_seconds=self._seconds(sum(seconds.values())))
 
     def check_event(self, check_name: str, passed: bool,
                     n_violations: int, **extra: Any) -> None:
@@ -70,38 +81,10 @@ def read_event_log(spark: "SparkSession", path: str | Path) -> "DataFrame":
 
 
 def attach_event_log(engine: "Engine", path: str | Path) -> EventLog:
-    """Wire an event log into an Engine: every ``run()`` materialization
-    and every ``test()`` check result is recorded.
-
-    Decorates the engine's ``run``/``test`` (no Engine subclass needed:
-    the log is an observer, not a behavior change)."""
-    log = EventLog(path)
-    orig_run, orig_test = engine.run, engine.test
-
-    def run(select=None, **kwargs):
-        # pass EVERY other run() kwarg through (atomic_publish, future
-        # additions) — an observer wrapper must not narrow the API
-        log.emit("run_started", models=select or "all")
-        try:
-            result = orig_run(select, **kwargs)
-        except Exception as e:
-            log.emit("run_failed", error=repr(e))
-            raise
-        for qn in result.materialized:
-            log.model_event(qn, result.seconds.get(qn, 0.0))
-        log.emit("run_finished", n_models=len(result.materialized),
-                 total_seconds=round(sum(result.seconds.values()), 3))
-        return result
-
-    def test(max_sample: int = 5, persist: bool = False):
-        results = orig_test(max_sample=max_sample, persist=persist)
-        for r in results:
-            log.check_event(r.name, r.passed, r.violations)
-        return results
-
-    engine.run, engine.test = run, test
-    engine.event_log = log
-    return log
+    """Point ``engine``'s event sink at a JSONL file at ``path`` (appended
+    to if it exists) and return the sink."""
+    engine.event_log = EventLog(path)
+    return engine.event_log
 
 
 class ProgressListener(StreamingQueryListener):

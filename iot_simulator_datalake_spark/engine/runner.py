@@ -23,6 +23,10 @@ Materializations (dbt_project.yml:11-19):
 Independent models materialize concurrently (thread pool over DAG waves
 ⇔ dbt ``threads: 8``, profiles.yml:14).  Spark's scheduler interleaves
 their jobs.
+
+``run`` and ``test`` write their own run, model and check events to
+``Engine.event_log`` when it is set (engine/eventlog.py); a model's
+logged ``seconds`` is its ``RunResult.seconds``.
 """
 
 from __future__ import annotations
@@ -113,6 +117,8 @@ class Engine:
         self.run_as = run_as
         self._relations: dict[str, "DataFrame"] = {}
         self.checks: list[Check] = []
+        #: event sink (engine/eventlog.EventLog); None emits nothing
+        self.event_log = None
 
     # -- namespace ---------------------------------------------------------
 
@@ -237,26 +243,43 @@ class Engine:
         history IS the isolation mechanism); streaming/bucketed sinks
         install eagerly and are documented out of the atomic scope.
         """
+        log = self.event_log
+        if log is not None:
+            log.emit("run_started", models=select or "all")
         deferred: list | None = [] if atomic_publish else None
         result = RunResult()
         try:
             self._run_waves(select, deferred, result)
-        except Exception:
-            if deferred:
-                for vdir, _ in deferred:
-                    shutil.rmtree(vdir, ignore_errors=True)
+            while deferred:     # an installed dir leaves the list
+                _install_version(*deferred.pop(0))
+        except Exception as e:
+            for vdir, _ in deferred or ():
+                shutil.rmtree(vdir, ignore_errors=True)
+            if log is not None:
+                log.emit("run_failed", error=repr(e))
             raise
-        if deferred:
-            for vdir, path in deferred:
-                _install_version(vdir, path)
+        if log is not None:
+            log.run_finished(result.seconds)
         return result
 
     def _run_waves(self, select, deferred, result: RunResult) -> None:
-        for wave in self.registry.levels(select):
-            def one(m: Model) -> tuple[str, float]:
-                t0 = time.monotonic()
+        log = self.event_log
+
+        def one(m: Model) -> tuple[str, float]:
+            t0 = time.monotonic()
+            try:
                 self._materialize(m, deferred)
-                return m.qualified_name, time.monotonic() - t0
+            except Exception as e:
+                if log is not None:
+                    log.model_event(m.qualified_name, time.monotonic() - t0,
+                                    status="failed", error=repr(e))
+                raise
+            dt = time.monotonic() - t0
+            if log is not None:
+                log.model_event(m.qualified_name, dt)
+            return m.qualified_name, dt
+
+        for wave in self.registry.levels(select):
             if len(wave) == 1:
                 outs = [one(wave[0])]
             else:
@@ -334,8 +357,7 @@ class Engine:
         self.checks.append(check)
         return check
 
-    def test(self, max_sample: int = 5,
-             persist: bool = False) -> list[CheckResult]:
+    def test(self, max_sample: int = 5) -> list[CheckResult]:
         """Run every registered check; pass ⇔ violation query returns 0
         rows (the reference's universal criterion, SURVEY §5.1).
         Results come back in registration order.
@@ -349,9 +371,9 @@ class Engine:
         check.  Every other check runs alone through ``Check.run``,
         its count capped at ``max_sample + 1``.
 
-        ``persist=True`` appends one audit row per check to
-        ``<warehouse>/_audit/check_results`` (⇔ dbt's test-result
-        artifacts), so quality history survives across runs.
+        With an ``event_log`` attached, each result is also appended to
+        it as a ``check_result`` event (⇔ dbt's test-result artifacts),
+        so quality history survives across runs.
         """
         done: dict[int, CheckResult] = {}
         fused: dict[str, list[int]] = {}
@@ -366,14 +388,9 @@ class Engine:
             for i, n in zip(idx, counts):
                 done[i] = self.checks[i].result(self, n, max_sample)
         results = [done[i] for i in range(len(self.checks))]
-        if persist and results:
-            import time as _time
-            audit = self.spark.createDataFrame(
-                [(r.name, r.passed, r.violations, _time.time())
-                 for r in results],
-                "check string, passed boolean, violations long, run_ts double")
-            audit.coalesce(1).write.mode("append").parquet(
-                str(self.warehouse / "_audit" / "check_results"))
+        if self.event_log is not None:
+            for r in results:
+                self.event_log.check_event(r.name, r.passed, r.violations)
         return results
 
     # -- docs --------------------------------------------------------------

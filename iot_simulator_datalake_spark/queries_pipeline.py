@@ -22,6 +22,7 @@ from .engine import Engine
 from .pipeline import build_registry
 from .queries import load, q
 from .session import scratch
+from .streaming.runner import run_stream_available_now
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -112,20 +113,21 @@ def engine_pipeline_fact_streaming(spark: "SparkSession",
 # DAG lineage closure ([EXT] — impact analysis over the Engine registry)
 # =========================================================================
 
+def _production_models():
+    """``(dag, model)`` for every model of both production DAGs."""
+    from .pipeline.corpus_models import build_corpus_registry
+    for dag, reg in (("iot", build_registry(streaming=False)),
+                     ("corpus", build_corpus_registry())):
+        for m in reg:
+            yield dag, m
+
+
 def _lineage_edges() -> list[tuple[str, str]]:
     """(upstream, downstream) edges of both production DAGs, derived
     from the same ``Model.depends_on`` metadata the Engine schedules
     from — so query and oracle share one source of truth."""
-    from .pipeline.corpus_models import build_corpus_registry
-    edges = []
-    for reg in (build_registry(streaming=False), build_corpus_registry()):
-        ms = reg.models if hasattr(reg, "models") else {
-            m.name: m for m in reg.toposort()}
-        for m in (ms.values() if hasattr(ms, "values") else ms):
-            qual = f"{m.layer}.{m.name}" if "." not in m.name else m.name
-            for dep in (m.depends_on or ()):
-                edges.append((dep, qual))
-    return sorted(set(edges))
+    return sorted({(dep, m.qualified_name)
+                   for _, m in _production_models() for dep in m.depends_on})
 
 
 def _lineage_oracle() -> str:
@@ -188,18 +190,9 @@ def pipeline_lineage_closure(spark: "SparkSession",
 # =========================================================================
 
 def _catalog_rows() -> list[tuple]:
-    from .pipeline.corpus_models import build_corpus_registry
-    rows = []
-    for dag, reg in (("iot", build_registry(streaming=False)),
-                     ("corpus", build_corpus_registry())):
-        ms = reg.models if hasattr(reg, "models") else {
-            m.name: m for m in reg.toposort()}
-        for m in (ms.values() if hasattr(ms, "values") else ms):
-            qual = f"{m.layer}.{m.name}" if "." not in m.name else m.name
-            rows.append((dag, qual, m.layer, str(m.materialization),
-                         len(m.depends_on or ()),
-                         ",".join(sorted(m.depends_on or ()))))
-    return sorted(rows)
+    return sorted((dag, m.qualified_name, m.layer, str(m.materialization),
+                   len(m.depends_on), ",".join(sorted(m.depends_on)))
+                  for dag, m in _production_models())
 
 
 def _catalog_oracle() -> str:
@@ -225,11 +218,9 @@ def pipeline_catalog(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     metadata, so catalog drift (a model added without docs, a
     materialization change) breaks the gate — docs-as-code, enforced.
     """
-    rows = _catalog_rows()
     return spark.createDataFrame(
-        rows, "dag string, model string, layer string, "
-              "materialization string, n_deps int, deps string") \
-        .withColumn("n_deps", F.col("n_deps").cast("int"))
+        _catalog_rows(), "dag string, model string, layer string, "
+                         "materialization string, n_deps int, deps string")
 
 
 # =========================================================================
@@ -270,6 +261,17 @@ GROUP BY 1, 2
 """
 
 
+def _sim_silver_rollup(raw: "DataFrame") -> "DataFrame":
+    """Simulator rows through the silver quality filter into the hourly
+    per-sensor rollup."""
+    silver = raw.filter(
+        F.lower(F.trim("quality_flag")).isin("good", "suspect"))
+    return (silver.groupBy("sensor_type", F.hour("timestamp").alias("hour"))
+            .agg(F.count(F.lit(1)).alias("n_events"),
+                 F.sum(F.round(F.col("value") * 100).cast("long"))
+                 .cast("long").alias("sum_cents")))
+
+
 @q("simulator_silver_rollup", ("S1", "S2", "P5", "A6"),
    oracle=_sim_oracle())
 def simulator_silver_rollup(spark: "SparkSession",
@@ -287,18 +289,10 @@ def simulator_silver_rollup(spark: "SparkSession",
     from .sources.simulator import register
 
     register(spark)
-    raw = (spark.read.format("iot_simulator")
-           .option("n_events", _SIM["n_events"])
-           .option("n_devices", _SIM["n_devices"])
-           .load())
-    silver = raw.filter(
-        F.lower(F.trim("quality_flag")).isin("good", "suspect"))
-    return (silver.groupBy(
-                "sensor_type",
-                F.hour("timestamp").alias("hour"))
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.sum(F.round(F.col("value") * 100).cast("long"))
-                 .cast("long").alias("sum_cents")))
+    return _sim_silver_rollup(spark.read.format("iot_simulator")
+                              .option("n_events", _SIM["n_events"])
+                              .option("n_devices", _SIM["n_devices"])
+                              .load())
 
 
 @q("simulator_streaming_rollup", ("S1", "ST1", "ST3", "A6"),
@@ -319,20 +313,11 @@ def simulator_streaming_rollup(spark: "SparkSession",
     stream = (spark.readStream.format("iot_simulator")
               .option("max_events", _SIM["n_events"])
               .option("n_devices", _SIM["n_devices"]).load())
-    qr = (stream.writeStream.format("parquet")
-          .option("path", out + "/data")
-          .option("checkpointLocation", out + "/ck")
-          .trigger(availableNow=True).start())
-    qr.awaitTermination(180)
-    raw = spark.read.parquet(out + "/data")
-    silver = raw.filter(
-        F.lower(F.trim("quality_flag")).isin("good", "suspect"))
-    return (silver.groupBy(
-                "sensor_type",
-                F.hour("timestamp").alias("hour"))
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.sum(F.round(F.col("value") * 100).cast("long"))
-                 .cast("long").alias("sum_cents")))
+    run_stream_available_now(
+        stream.writeStream.format("parquet")
+        .option("path", out + "/data")
+        .option("checkpointLocation", out + "/ck"), timeout_sec=180)
+    return _sim_silver_rollup(spark.read.parquet(out + "/data"))
 
 
 @q("expectations_quarantine", ("P9", "P7", "P8"), oracle="""

@@ -84,8 +84,13 @@ def test_expect_observed_scan_free_metrics(spark):
     assert obs.get == {"n_violations": 2, "n_rows": 4}
 
 
-def test_persisted_audit_results(spark, tmp_path):
-    from iot_simulator_datalake_spark.engine import Engine, Registry, model
+def test_check_history_in_event_log(spark, tmp_path):
+    """The event log is the persisted check history: each test() appends
+    one check_result row per check, in registration order, and nothing
+    else is written under the warehouse."""
+    import json
+
+    from iot_simulator_datalake_spark.engine.eventlog import EventLog
 
     r = Registry()
 
@@ -94,15 +99,19 @@ def test_persisted_audit_results(spark, tmp_path):
         return ctx.spark.createDataFrame([(1,), (None,)], "id int")
 
     e = Engine(spark, r, warehouse=tmp_path / "wh")
+    e.event_log = EventLog(tmp_path / "events.jsonl")
     e.run()
     e.add_check(not_null("silver.t", "id"))
-    e.test(persist=True)
-    e.test(persist=True)            # second run appends
-    audit = spark.read.parquet(str(tmp_path / "wh" / "_audit" /
-                                   "check_results"))
-    rows = audit.collect()
-    assert len(rows) == 2
-    assert all(not r["passed"] and r["violations"] == 1 for r in rows)
+    e.add_check(unique("silver.t", "id"))
+    e.test()
+    e.test()            # second run appends
+    rows = [rec for line in
+            (tmp_path / "events.jsonl").read_text().splitlines()
+            if (rec := json.loads(line))["event_type"] == "check_result"]
+    assert [(x["check"], x["passed"], x["n_violations"]) for x in rows] == [
+        ("not_null__silver.t__id", False, 1),
+        ("unique__silver.t__id", True, 0)] * 2
+    assert not (tmp_path / "wh").exists()
 
 
 def test_partitioned_table_sink(spark, tmp_path):

@@ -8,12 +8,27 @@ from __future__ import annotations
 from iot_simulator_datalake_spark.__main__ import main
 
 
+def _registry_models() -> set[str]:
+    from iot_simulator_datalake_spark.pipeline import build_registry
+    from iot_simulator_datalake_spark.pipeline.corpus_models import (
+        build_corpus_registry)
+    return {m.qualified_name for reg in (build_registry(streaming=False),
+                                         build_corpus_registry())
+            for m in reg}
+
+
 def test_docs_lists_all_models(capsys):
+    """One printed row per model of both registries, keyed by qualified
+    name: bronze and silver models share a bare name (iot_events,
+    documents), and neither may overwrite the other."""
     assert main(["docs"]) == 0
     out = capsys.readouterr().out
-    for model in ("bronze.iot_events", "silver.iot_events",
-                  "gold.fact_iot_events", "gold.packed_sequences"):
-        assert model in out
+    # the model column of each row (a model named only in another row's
+    # deps does not count)
+    listed = [line.split()[1] for line in out.splitlines()
+              if line.startswith("  [")]
+    assert sorted(listed) == sorted(_registry_models())
+    assert len(listed) == 9
 
 
 def test_lineage_prints_edges(capsys):
@@ -76,3 +91,28 @@ def test_docs_manifest(spark, tmp_path):
     assert silver["depends_on"] == ["bronze.iot_events"]
     import json
     json.dumps(man)   # fully serializable
+
+
+def test_cli_test_writes_event_log(spark, tmp_path, capsys):
+    """`test` logs by default: the run's models and the reference checks
+    land in <warehouse>/_event_log/events.jsonl, whose path is printed."""
+    import json
+    from conftest import write_iot_events
+
+    land, wh = tmp_path / "iot_events", tmp_path / "wh"
+    write_iot_events(land, n_events=400, n_files=2)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        rc = main(["test", "--batch", "--landing", str(land),
+                   "--warehouse", str(wh)])
+    finally:
+        spark.conf.set(key, prev)
+    assert rc == 0
+    path = wh / "_event_log" / "events.jsonl"
+    assert f"event log: {path}" in capsys.readouterr().out
+    kinds = [json.loads(line)["event_type"]
+             for line in path.read_text().splitlines()]
+    assert kinds.count("model_materialized") == 5
+    assert kinds.count("check_result") == 11
+    assert kinds.count("run_finished") == 1

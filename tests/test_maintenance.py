@@ -93,9 +93,12 @@ def test_zorder_prunes_on_both_dimensions(spark, tmp_path):
         build_stats_manifest, prune_files)
 
     def fresh(path):
+        # b independent of a: every a group holds all 200 b values, so
+        # a file cluster(a) writes (whole a groups, range-partitioned)
+        # spans all of b whatever the range-partition sample
         df = spark.range(40_000).select(
             (F.col("id") % 200).alias("a"),
-            ((F.col("id") * 7919) % 200).alias("b"))
+            (F.floor(F.col("id") / 200) % 200).alias("b"))
         df.repartition(16).write.mode("overwrite").parquet(str(path))
 
     lex = tmp_path / "lex"

@@ -396,3 +396,28 @@ def test_rocksdb_dedup_twin_restores_provider_conf(spark):
     out = streaming_dedup_rollup_rocksdb(spark, "/root/testdata/sf0.001")
     assert out.count() > 0
     assert spark.conf.get(key, None) == before
+
+
+def test_streams_drain_only_through_runner():
+    """Every package stream is started and awaited by
+    ``streaming/runner.run_stream_available_now``, which raises when the
+    query does not drain in time.  A bare ``awaitTermination(t)``
+    returns False on a timeout and, if unchecked, lets a caller read a
+    partial sink while the query still runs."""
+    import ast
+    from pathlib import Path
+
+    import iot_simulator_datalake_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    runner = root / "streaming" / "runner.py"
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        if path == runner:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("awaitTermination", "trigger")):
+                sites.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert sites == []

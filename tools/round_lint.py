@@ -80,10 +80,9 @@ ALLOW: dict[str, str] = {
     "tpch_q14_promo_revenue": _TPCH_RATIO,
     # file-scoped entries (``file.py:fn``) for sites outside the
     # hash-compared surface entirely:
-    "eventlog.py:model_event": ("builtin round of wall-clock seconds "
-                                "in the run event log — human-facing "
-                                "telemetry, never hash-compared"),
-    "eventlog.py:run": ("same: run_finished total_seconds telemetry"),
+    "eventlog.py:_seconds": ("builtin round of wall-clock seconds in "
+                             "the run event log — human-facing "
+                             "telemetry, never hash-compared"),
 }
 
 
