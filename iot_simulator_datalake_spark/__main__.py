@@ -109,8 +109,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         registry = build_registry(streaming=not args.batch)
     eng = Engine(spark, registry,
-                 config={"iot_events_path": args.landing,
-                         "warehouse": args.warehouse},
+                 config={"iot_events_path": args.landing},
                  warehouse=args.warehouse)
     log = attach_event_log(
         eng, eng.warehouse / "_event_log" / "events.jsonl")

@@ -7,8 +7,8 @@ Reference equivalences (files under /root/reference):
   ``{{ config(...) }}`` block (e.g. bronze_iot_events.sql:1-6).
 - ``depends_on`` / ``ctx.ref()``    ⇔  ``{{ ref('x') }}`` DAG edges
   (fact_iot_events.sql:7-14).
-- ``LayerConfig`` resolution        ⇔  dbt_project.yml:9-19 layer defaults
-  overridden per-model.
+- ``ctx.stream()`` / ``ctx.this()`` ⇔  ``STREAM(ref('x'))``
+  (silver_iot_events.sql:10-12) / dbt's ``{{ this }}``.
 - ``Engine.run()``                  ⇔  ``dbt run`` (resources/jobs.yml:32).
 - ``Engine.test()``                 ⇔  ``dbt test`` (resources/jobs.yml:33).
 - ``GrantRegistry`` + run_as        ⇔  the Unity Catalog GRANT surface

@@ -6,6 +6,8 @@ SQL file (reference: models/**/*.sql; DAG edges via ``ref()``, e.g.
 fact_iot_events.sql:7-14).  Materialization ∈ {view, table,
 streaming_table} mirrors dbt_project.yml:11-19 +
 ``config(materialized=...)`` overrides (bronze_iot_events.sql:2).
+A builder reads upstreams through ``ctx.ref``/``ctx.stream`` and its
+own published table through ``ctx.this``; the engine wires the paths.
 """
 
 from __future__ import annotations
@@ -16,6 +18,8 @@ from graphlib import TopologicalSorter
 from typing import TYPE_CHECKING, Any
 
 if TYPE_CHECKING:  # pragma: no cover
+    from pathlib import Path
+
     from pyspark.sql import DataFrame, SparkSession
 
 MATERIALIZATIONS = ("view", "table", "streaming_table")
@@ -71,9 +75,12 @@ class Model:
 
 
 class ModelContext:
-    """What a builder sees: the session, resolved config vars, and
-    ``ref()`` for upstream lookups (⇔ dbt's ``{{ ref(...) }}`` /
-    ``{{ var(...) }}`` compile-time substitutions, §2.10 O1/O3)."""
+    """What a builder sees: the session, resolved config vars, and the
+    engine-wired reads (⇔ dbt's ``{{ ref(...) }}`` / ``{{ var(...) }}``
+    / ``{{ this }}`` compile-time substitutions, §2.10 O1/O3, and DLT's
+    ``STREAM(ref(...))``).  Builders only declare what they read; where
+    upstream tables and per-model state files live is the engine's
+    business, so only this class touches the engine."""
 
     def __init__(self, spark: "SparkSession", engine: Any, model: Model):
         self.spark = spark
@@ -88,6 +95,41 @@ class ModelContext:
                 f"not declared in depends_on={self.model.depends_on} — "
                 "declare it so the DAG stays accurate")
         return self._engine.table(qualified_name)
+
+    def stream(self, qualified_name: str) -> "DataFrame":
+        """``STREAM(ref(name))`` (silver_iot_events.sql:10-12).
+
+        From a ``streaming_table`` model: an incremental stream over the
+        upstream streaming table's directory, with the upstream's
+        REGISTERED schema — a zero-input upstream run leaves no parquet
+        files, and inference on the empty dir would raise.  The
+        calling model's checkpoint makes the read exactly-once.  From a
+        ``table``/``view`` model: ``ref(name)``, the batch rendering of
+        the same DAG."""
+        df = self.ref(qualified_name)
+        if self.model.materialization != "streaming_table":
+            return df
+        up = self._engine.registry[qualified_name]
+        if up.materialization != "streaming_table":
+            # a table's dir is a symlink retargeted on every rewrite:
+            # a stream over it breaks on the next version install
+            raise ValueError(
+                f"model {self.model.qualified_name} streams "
+                f"{qualified_name}, a {up.materialization!r}; only a "
+                "streaming_table can be streamed from")
+        return (self.spark.readStream.schema(df.schema)
+                .parquet(str(self._engine.table_path(up))))
+
+    def this(self) -> "DataFrame | None":
+        """``{{ this }}``: this model's currently published table, or
+        ``None`` before its first run."""
+        path = self._engine.table_path(self.model)
+        return self.spark.read.parquet(str(path)) if path.exists() else None
+
+    def state_path(self, kind: str) -> "Path":
+        """This model's ``kind`` state file under the warehouse (see
+        ``Engine.state_path``)."""
+        return self._engine.state_path(self.model, kind)
 
     def var(self, key: str, default: Any = None) -> Any:
         return self._engine.config.get(key, default)

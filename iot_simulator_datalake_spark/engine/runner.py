@@ -18,7 +18,11 @@ Materializations (dbt_project.yml:11-19):
                         run with a checkpoint dir → exactly-once
                         incremental append (⇔ DLT streaming table,
                         bronze_iot_events.sql:2,8-9); see
-                        streaming/runner.py
+                        streaming/runner.py.  Its builder reads an
+                        upstream streaming table with ``ctx.stream``;
+                        its checkpoint and schema store sit at
+                        ``Engine.state_path``, so no builder names a
+                        warehouse path
 
 Independent models materialize concurrently (thread pool over DAG waves
 ⇔ dbt ``threads: 8``, profiles.yml:14).  Spark's scheduler interleaves
@@ -138,6 +142,16 @@ class Engine:
     def table_path(self, m: Model) -> Path:
         return self.warehouse / (m.schema or m.layer) / m.name
 
+    def state_path(self, m: Model, kind: str) -> Path:
+        """Where model ``m`` keeps its ``kind`` state: ``checkpoint`` →
+        ``_checkpoints/<qn>`` (the streaming checkpoint dir), ``schema``
+        → ``_schemas/<qn>.json`` (an inferred source schema).  Named by
+        concatenation: ``with_suffix`` would eat ``.<name>`` of the
+        qualified name."""
+        subdir, suffix = {"checkpoint": ("_checkpoints", ""),
+                          "schema": ("_schemas", ".json")}[kind]
+        return self.warehouse / subdir / (m.qualified_name + suffix)
+
     # -- materialization ---------------------------------------------------
 
     def _authorize(self, m: Model) -> None:
@@ -173,7 +187,7 @@ class Engine:
             df = materialize_streaming_table(
                 spark=self.spark, stream_df=stream_df,
                 path=self.table_path(m),
-                checkpoint=self.warehouse / "_checkpoints" / m.qualified_name,
+                checkpoint=self.state_path(m, "checkpoint"),
                 partition_by=m.partition_by)
         else:
             df = m.builder(ctx)

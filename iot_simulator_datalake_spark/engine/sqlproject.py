@@ -14,11 +14,11 @@ use, rendered with regex + literal-eval — no Jinja engine needed):
 - ``{{ source('src', 'tbl') }}`` → pre-registered view ``src__tbl``
   (the caller registers landing views before ``run()``)
 - ``{{ var('name', default) }}`` → engine config vars
-- ``STREAM( x )``               → x  (batch rendering: incremental
-  table-to-table streaming is the PYTHON pipeline's job —
-  pipeline/iot_models.py runs the real readStream path; the SQL loader
-  renders a consistent batch view of the same DAG, which is also what
-  `dbt run` on a non-DLT target does with STREAM refs)
+- ``STREAM( x )``               → x  (batch rendering: the loader
+  renders ``streaming_table`` models as tables, and from a table
+  ``ModelContext.stream`` is ``ref`` — the same batch view of the DAG
+  `dbt run` gives STREAM refs on a non-DLT target; the real readStream
+  path is ``ModelContext.stream`` from a streaming_table model)
 - ``STREAM read_files('<path>', format => '<fmt>')`` (Databricks Auto
   Loader table function, `bronze_iot_events.sql:12-15`) → a landing
   view the model's builder materializes on first run via the engine's
@@ -244,8 +244,7 @@ def load_sql_project(models_dir: str | Path,
             return builder
 
         def make_incremental_builder(full_sql: str, inc_sql: str,
-                                     landing_views: list, qn: str,
-                                     view_name: str):
+                                     landing_views: list, view_name: str):
             """dbt incremental: first run = full build; later runs
             render is_incremental()=true with {{ this }} bound to the
             existing table and APPEND the delta (expressed as
@@ -256,19 +255,16 @@ def load_sql_project(models_dir: str | Path,
             inc = make_builder(inc_sql, landing_views)
 
             def builder(ctx):
-                eng = ctx._engine
-                path = eng.table_path(eng.registry[qn])
-                if Path(path).exists():
-                    prior = ctx.spark.read.parquet(str(path))
+                prior = ctx.this()
+                if prior is not None:
                     prior.createOrReplaceTempView(view_name)
                     return prior.unionByName(inc(ctx))
                 return plain(ctx)
             return builder
 
-        qn = f"{eff_schema[stem]}.{stem}"
         if mat == "incremental":
             builder = make_incremental_builder(sql, incr_sql, landings,
-                                               qn, this_view)
+                                               this_view)
             mat, note = "table", " [incremental]"
         else:
             builder = make_builder(sql, landings)

@@ -10,8 +10,11 @@ Reference sources (under /root/reference/models):
 
 Materializations follow dbt_project.yml:9-19 + per-model overrides:
 bronze/silver are streaming tables (batch mode available for tests),
-gold is batch tables.  The landing path comes from the config var
-``iot_events_path`` (⇔ dbt_project.yml:6-7 ``{{ var("iot_events_path") }}``).
+gold is batch tables.  Silver reads bronze with ``ctx.stream`` (⇔
+``STREAM(ref(...))``) in both modes; the engine owns the stream's
+source path, the checkpoint and bronze's schema store.  The landing
+path comes from the config var ``iot_events_path`` (⇔
+dbt_project.yml:6-7 ``{{ var("iot_events_path") }}``).
 
 Scale notes: silver's filter + 7-column projection push down to the
 bronze parquet scan (Catalyst PushDownPredicates/ColumnPruning);
@@ -51,10 +54,8 @@ def build_registry(streaming: bool = True) -> Registry:
     def bronze_iot_events(ctx: ModelContext) -> "DataFrame":
         path = ctx.var("iot_events_path")
         if streaming:
-            store = ctx.var("schema_store",
-                            f"{ctx.var('warehouse', '/tmp/iot_lake_warehouse')}"
-                            f"/_schemas/bronze.iot_events.json")
-            df = read_json_stream(ctx.spark, path, schema_store=store)
+            df = read_json_stream(ctx.spark, path,
+                                  schema_store=ctx.state_path("schema"))
         else:
             df = read_json_batch(ctx.spark, path)
         # P1: SELECT * passthrough (bronze_iot_events.sql:10-11); add the
@@ -73,23 +74,11 @@ def build_registry(streaming: bool = True) -> Registry:
            description="Cleansed 7-column contract "
                        "(silver_iot_events.sql:13-22)")
     def silver_iot_events(ctx: ModelContext) -> "DataFrame":
-        if streaming:
-            # S3: incremental table-to-table read (silver_iot_events.sql:10-12
-            # `STREAM(ref('bronze_iot_events'))`) — stream over bronze's
-            # parquet output dir; checkpoint makes it exactly-once.
-            from ..engine.runner import Engine  # typing only
-            engine: "Engine" = ctx._engine
-            bronze_model = engine.registry["bronze.iot_events"]
-            bronze_path = engine.table_path(bronze_model)
-            # schema from the REGISTERED relation, not a fresh dir read:
-            # a zero-input bronze run leaves no parquet files, and
-            # schema inference on the empty dir would raise
-            schema = ctx.ref("bronze.iot_events").schema
-            src = ctx.spark.readStream.schema(schema).parquet(str(bronze_path))
-        else:
-            src = ctx.ref("bronze.iot_events")
+        # S3: incremental table-to-table read (silver_iot_events.sql:10-12
+        # `STREAM(ref('bronze_iot_events'))`); a batch ref in batch mode
         return (
-            src.select(                                 # P2/P3 projection+cast
+            ctx.stream("bronze.iot_events")
+            .select(                                    # P2/P3 projection+cast
                 F.col("device_id"),
                 F.col("location_id"),
                 F.col("timestamp").cast("timestamp").alias("timestamp"),  # F1

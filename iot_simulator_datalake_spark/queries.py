@@ -67,12 +67,21 @@ def load(spark: "SparkSession", sf_dir: str, name: str) -> "DataFrame":
             pass
     df = (spark.read.schema(raw_schema(spark, sf_dir, name))
           .parquet(f"{sf_dir}/{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    return normalize_ts(spark, df, name)
+
+
+def normalize_ts(spark: "SparkSession", df: "DataFrame",
+                 name: str) -> "DataFrame":
+    """``events.ts`` as a µs instant, for a batch or a streaming read of
+    the raw parquet (:func:`load`, ``queries_streaming._stream_source``);
+    every other table passes through unchanged."""
+    dtype = dict(df.dtypes).get("ts") if name == "events" else None
+    if dtype == "bigint":
         # TIMESTAMP(NANOS) parquet read via nanosAsLong → convert to µs
         # timestamp exactly like DuckDB does (truncating division).
         df = df.withColumn("ts", F.timestamp_micros(
             F.expr("ts div 1000")))
-    elif name == "events" and dict(df.dtypes).get("ts") == "timestamp_ntz":
+    elif dtype == "timestamp_ntz":
         # µs parquet inferred as NTZ (the session was built before
         # tune_session could pin inferTimestampNTZ=false).  The NTZ→LTZ
         # cast reinterprets the wall clock in the SESSION timezone, so it

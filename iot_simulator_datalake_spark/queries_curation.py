@@ -1551,9 +1551,7 @@ def streaming_quality_filter(spark: "SparkSession", sf_dir: str
     import uuid
     from .queries_streaming import _stream_source
     from .streaming.runner import run_stream_available_now
-    from .queries import raw_schema
-    stream = _stream_source(spark, raw_schema(spark, sf_dir, "documents"),
-                            sf_dir, table="documents")
+    stream = _stream_source(spark, sf_dir, table="documents")
     toks = tokens(F.col("text"))
     w_sum = F.aggregate(
         F.transform(toks, lambda t: _w_milli(t)),

@@ -101,9 +101,7 @@ def engine_pipeline_fact_streaming(spark: "SparkSession",
     (README_DBT.md:213).  Must produce the identical fact table."""
     workdir = _export_landing(spark, sf_dir)
     eng = Engine(spark, build_registry(streaming=True),
-                 config={"iot_events_path": str(workdir / "landing"),
-                         "warehouse": str(workdir / "wh"),
-                         "schema_store": str(workdir / "schema.json")},
+                 config={"iot_events_path": str(workdir / "landing")},
                  warehouse=workdir / "wh")
     eng.run()
     return eng.table("gold.fact_iot_events")

@@ -17,7 +17,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .functions.units import to_units
-from .queries import load, oavg, osum, q, raw_schema
+from .queries import load, normalize_ts, oavg, osum, q, raw_schema
 from .queries_llmprep import _o_hash_bucket
 from .session import scratch
 from .streaming.runner import run_stream_available_now
@@ -26,10 +26,11 @@ if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
 
 
-def _stream_source(spark: "SparkSession", raw_schema, sf_dir: str,
+def _stream_source(spark: "SparkSession", sf_dir: str,
                    table: str = "events"):
-    """Layout-aware file-stream source for a driver table: stream the
-    table path when it is a directory of part files (replica / lake
+    """Layout-aware file-stream source for a driver table, read with its
+    raw schema and ``events.ts`` normalized as :func:`load` does.  Stream
+    the table path when it is a directory of part files (replica / lake
     layouts); otherwise glob the single file from its parent — the file
     stream source refuses a plain-file basePath, and glob-on-parent
     alone silently matches nothing for directory layouts.
@@ -48,10 +49,10 @@ def _stream_source(spark: "SparkSession", raw_schema, sf_dir: str,
         is_dir = fs.getFileStatus(hpath).isDirectory()
     except Exception:          # missing path → let the reader error out
         is_dir = False
-    reader = spark.readStream.schema(raw_schema)
-    return (reader.parquet(path) if is_dir else
-            reader.option("pathGlobFilter", f"{table}.parquet")
-            .parquet(sf_dir))
+    reader = spark.readStream.schema(raw_schema(spark, sf_dir, table))
+    return normalize_ts(spark, reader.parquet(path) if is_dir else
+                        reader.option("pathGlobFilter", f"{table}.parquet")
+                        .parquet(sf_dir), table)
 
 
 @q("streaming_hourly_rollup", ("ST1", "ST3", "ST5", "A6"), oracle=f"""
@@ -66,11 +67,7 @@ def streaming_hourly_rollup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     execution).  Window starts equal date_trunc('hour'), so the drained
     state matches the batch oracle exactly."""
     batch = load(spark, sf_dir, "events")     # handles ns→µs conversion
-    raw_sch = raw_schema(spark, sf_dir, "events")
-    stream = _stream_source(spark, raw_sch, sf_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    stream = _stream_source(spark, sf_dir)
     agg = (stream
            .withWatermark("ts", "1 hour")
            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -111,11 +108,7 @@ def streaming_sessionization(spark: "SparkSession",
     must converge to the batch gap-based sessionization oracle.
     session_window's end is last-event+gap, so subtract the gap to get
     the oracle's MAX(ts)."""
-    raw_sch = raw_schema(spark, sf_dir, "events")
-    stream = _stream_source(spark, raw_sch, sf_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    stream = _stream_source(spark, sf_dir)
     agg = (stream
            .withWatermark("ts", "1 hour")
            .groupBy(F.session_window("ts", "30 minutes").alias("w"),
@@ -149,20 +142,14 @@ def streaming_interval_join(spark: "SparkSession",
     the emitted pairs equal the batch time-bounded self-join oracle.
     At scale, state size is bounded by (watermark + interval) × input
     rate per key, never the full history."""
-    raw_sch = raw_schema(spark, sf_dir, "events")
-
-    def stream():
-        s = _stream_source(spark, raw_sch, sf_dir)
-        if dict(s.dtypes).get("ts") == "bigint":
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return s
-
-    clicks = (stream().filter(F.col("event_type") == "click")
+    clicks = (_stream_source(spark, sf_dir)
+              .filter(F.col("event_type") == "click")
               .select(F.col("event_id").alias("click_id"),
                       F.col("user_id").alias("c_user"),
                       F.col("ts").alias("click_ts"))
               .withWatermark("click_ts", "2 hours"))
-    buys = (stream().filter(F.col("event_type") == "purchase")
+    buys = (_stream_source(spark, sf_dir)
+            .filter(F.col("event_type") == "purchase")
             .select(F.col("event_id").alias("purchase_id"),
                     F.col("user_id").alias("user_id"),
                     F.col("ts").alias("purchase_ts"))
@@ -234,11 +221,7 @@ def streaming_enriched_rollup(spark: "SparkSession",
     stream-static joins keep no join state, the static side is just
     re-probed each micro-batch, which is why this shape scales to any
     stream rate as long as the dim broadcasts."""
-    raw_sch = raw_schema(spark, sf_dir, "events")
-    stream = _stream_source(spark, raw_sch, sf_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    stream = _stream_source(spark, sf_dir)
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
     dim = (c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
@@ -274,15 +257,8 @@ def streaming_dedup_rollup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     plain ``dropDuplicates``, which never forgets.  The deduped stream
     must hash-match the batch rollup over the ORIGINAL (single-copy)
     events — duplicates in, exact semantics out."""
-    raw_sch = raw_schema(spark, sf_dir, "events")
-
-    def stream():
-        s = _stream_source(spark, raw_sch, sf_dir)
-        if dict(s.dtypes).get("ts") == "bigint":
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return s
-
-    deduped = (stream().union(stream())
+    deduped = (_stream_source(spark, sf_dir)
+               .union(_stream_source(spark, sf_dir))
                .withWatermark("ts", "1 hour")
                .dropDuplicatesWithinWatermark(["event_id"]))
     name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
@@ -321,14 +297,6 @@ def streaming_dedup_rollup_rocksdb(spark: "SparkSession",
     ``dropDuplicates``, whose state is all keys ever seen).  The
     provider conf is session-mutating, so it save/restores in a
     finally like the plan-quality family."""
-    raw_sch = raw_schema(spark, sf_dir, "events")
-
-    def stream():
-        s = _stream_source(spark, raw_sch, sf_dir)
-        if dict(s.dtypes).get("ts") == "bigint":
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return s
-
     from .stagecache import scratch_dir
     # foreachBatch → parquet append, not a memory sink: append-mode
     # dedup emits every surviving EVENT, and a memory sink would
@@ -348,7 +316,8 @@ def streaming_dedup_rollup_rocksdb(spark: "SparkSession",
     spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
                         "RocksDBStateStoreProvider")
     try:
-        deduped = (stream().union(stream())
+        deduped = (_stream_source(spark, sf_dir)
+                   .union(_stream_source(spark, sf_dir))
                    .withWatermark("ts", "1 hour")
                    .dropDuplicatesWithinWatermark(["event_id"]))
         writer = (deduped.writeStream.outputMode("append")
@@ -512,11 +481,7 @@ def streaming_hopping_rollup(spark: "SparkSession",
     rows and state linearly — keep it small (4 here) at 100 TB, or
     pre-aggregate to the slide granularity and re-window in batch.
     """
-    raw_sch = raw_schema(spark, sf_dir, "events")
-    stream = _stream_source(spark, raw_sch, sf_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    stream = _stream_source(spark, sf_dir)
     agg = (stream
            .withWatermark("ts", "1 hour")
            .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"),
@@ -563,8 +528,7 @@ def streaming_stateful_totals(spark: "SparkSession",
     tests/test_streaming.py::test_stateful_v2_import_gated.
     """
     from .streaming.stateful import quantize_micro, running_totals_micro
-    raw_sch = raw_schema(spark, sf_dir, "events")
-    stream = _stream_source(spark, raw_sch, sf_dir)
+    stream = _stream_source(spark, sf_dir)
     out = running_totals_micro(
         quantize_micro(stream, "user_id", "value").groupBy("key"))
     name = f"stream_tws_{uuid.uuid4().hex[:8]}"
@@ -607,11 +571,7 @@ def streaming_anomaly_scores(spark: "SparkSession",
                F.col("value").cast("decimal(18,4)")).cast("decimal(38,8)"))
          .cast("double").alias("s2"),
         F.count("value").cast("double").alias("n")))
-    raw_sch = raw_schema(spark, sf_dir, "events")
-    stream = _stream_source(spark, raw_sch, sf_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    stream = _stream_source(spark, sf_dir)
     v = F.col("value")
     # micro-unit z (floor(z*1e6)) + degenerate-group guard — must stay
     # in lockstep with the batch twin anomaly_zscore (shared oracle)
@@ -664,11 +624,7 @@ def streaming_topk_users_hourly(spark: "SparkSession",
     a scratch table keeps the state distributed end-to-end; the rank
     then reads it back like any other table."""
     from .stagecache import scratch_dir
-    raw_sch = raw_schema(spark, sf_dir, "events")
-    stream = _stream_source(spark, raw_sch, sf_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    stream = _stream_source(spark, sf_dir)
     agg = (stream.withWatermark("ts", "1 hour")
            .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
            .agg(F.sum(F.col("value").cast("decimal(25,4)"))
@@ -773,11 +729,7 @@ def streaming_psi_drift(spark: "SparkSession", sf_dir: str) -> "DataFrame":
                        (F.col("event_type") == _PSI_SEG["a"]))
           .select(psi_bin().alias("bin"))
           .groupBy("bin").agg(F.count("*").alias("ra")))
-    raw_sch = raw_schema(spark, sf_dir, "events")
-    stream = _stream_source(spark, raw_sch, sf_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    stream = _stream_source(spark, sf_dir)
     live = (stream.filter(F.col("value").isNotNull() &
                           (F.col("event_type") == _PSI_SEG["b"]))
             .select(psi_bin().alias("bin"))
@@ -825,11 +777,7 @@ def streaming_hll_rollup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
 
     Differs from ``streaming_hll_envelope`` (the plain envelope twin)
     by the stream≡batch consistency claim."""
-    raw_sch = raw_schema(spark, sf_dir, "events")
-    stream = _stream_source(spark, raw_sch, sf_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    stream = _stream_source(spark, sf_dir)
     daily = (stream.groupBy(F.date_trunc("day", "ts").alias("day"),
                             "event_type")
              .agg(F.hll_sketch_agg("user_id", F.lit(21)).alias("sk")))
@@ -878,11 +826,7 @@ def streaming_hll_envelope(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     hash-comparable after the sketch leaves the exact coupon regime
     (the sibling's documented ×10 FAIL)."""
     from .queries_analytics import hll_weekly_envelope
-    raw_sch = raw_schema(spark, sf_dir, "events")
-    stream = _stream_source(spark, raw_sch, sf_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    stream = _stream_source(spark, sf_dir)
     daily = (stream.groupBy(F.date_trunc("day", "ts").alias("day"),
                             "event_type")
              .agg(F.hll_sketch_agg("user_id", F.lit(21)).alias("sk")))

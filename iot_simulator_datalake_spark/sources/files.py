@@ -72,7 +72,6 @@ def read_csv_batch(spark: "SparkSession", path: str | Path,
 
 def read_csv_stream(spark: "SparkSession", path: str | Path,
                     schema_store: str | Path,
-                    max_files_per_trigger: int | None = None,
                     options: dict[str, str] | None = None,
                     evolve: bool = False) -> "DataFrame":
     """Incremental exactly-once CSV file stream (schema inferred once
@@ -83,11 +82,8 @@ def read_csv_stream(spark: "SparkSession", path: str | Path,
     streaming/runner.py's checkpointed sink."""
     schema = infer_csv_schema(spark, path, schema_store, options=options,
                               evolve=evolve)
-    reader = (spark.readStream.schema(schema)
-              .options(**{**_CSV_OPTS, **(options or {})}))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.csv(str(path))
+    return (spark.readStream.schema(schema)
+            .options(**{**_CSV_OPTS, **(options or {})}).csv(str(path)))
 
 
 def read_file_batch(spark: "SparkSession", path: str | Path,

@@ -141,13 +141,9 @@ def read_json_batch(spark: "SparkSession", path: str | Path) -> "DataFrame":
 
 def read_json_stream(spark: "SparkSession", path: str | Path,
                      schema_store: str | Path,
-                     max_files_per_trigger: int | None = None,
                      evolve: bool = False) -> "DataFrame":
     """S1 — incremental exactly-once JSON file stream (schema inferred
     once then fixed).  Pair with a checkpointed sink
     (streaming/runner.py) for the full Auto-Loader-equivalent path."""
     schema = infer_and_persist_schema(spark, path, schema_store, evolve=evolve)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(str(path))
+    return spark.readStream.schema(schema).json(str(path))

@@ -18,10 +18,7 @@ from conftest import write_iot_events
 
 def make_engine(spark, landing, warehouse):
     return Engine(spark, build_registry(streaming=True),
-                  config={"iot_events_path": str(landing),
-                          "warehouse": str(warehouse),
-                          "schema_store": str(
-                              warehouse / "_schemas" / "bronze.json")},
+                  config={"iot_events_path": str(landing)},
                   warehouse=warehouse)
 
 
