@@ -13,10 +13,11 @@ streaming table's own directory is refused (see
 the table's file list, and a rewrite without it wedges the next
 refresh.  Rewrites publish through engine/publish.py, like every other
 table write: engine-managed (symlink) tables as a new version dir —
-superseded versions persist for in-flight readers until
-``publish.vacuum_table_versions`` reclaims them (the Delta OPTIMIZE +
-VACUUM retention contract) — and plain directories through the shared
-staged swap, whose crash recovery every entry point runs first.
+the install keeps the replaced version for in-flight readers and
+reclaims the one from two installs back (one-deep VACUUM retention;
+``publish.vacuum_table_versions`` drops the previous one too once
+readers are quiet) — and plain directories through the shared staged
+swap, whose crash recovery every entry point runs first.
 """
 
 from __future__ import annotations

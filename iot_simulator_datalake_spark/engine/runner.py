@@ -13,7 +13,10 @@ Materializations (dbt_project.yml:11-19):
                         (engine/publish.py), read back with the
                         written frame's schema (so downstream reads
                         scan columnar storage with pushdown, like a
-                        real table, and no inference job runs)
+                        real table, and no inference job runs).  Each
+                        install keeps the version it replaced and
+                        reclaims the one before it, so a table holds
+                        two version dirs however often it refreshes
 - ``streaming_table`` → Structured Streaming triggered (availableNow)
                         run with a checkpoint dir → exactly-once
                         incremental append (⇔ DLT streaming table,

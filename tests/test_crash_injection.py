@@ -26,6 +26,7 @@ layout's sibling names and the seam inside engine/publish.py."""
 from __future__ import annotations
 
 import ast
+import os
 import pathlib
 
 import pytest
@@ -47,7 +48,8 @@ SWAP_STEPS = ["swap:restored", "swap:stage-cleared", "swap:staged",
 #: there must heal to the OLD state; at/after it, to the NEW state.
 SWAP_PRE_COMMIT = set(SWAP_STEPS[:6])
 
-INSTALL_STEPS = ["install:legacy-converted", "install:tmp-linked",
+INSTALL_STEPS = ["install:reclaimed", "install:prev-linked",
+                 "install:legacy-converted", "install:tmp-linked",
                  "install:replaced"]
 
 
@@ -158,47 +160,61 @@ def test_compact_kill_at_every_step(spark, tmp_path, step, kill_at):
 @pytest.mark.parametrize("step", INSTALL_STEPS)
 @pytest.mark.parametrize("legacy_start", [False, True])
 def test_install_kill_at_every_step(tmp_path, step, legacy_start, kill_at):
-    final = tmp_path / "tbl"
-    v1 = tmp_path / "tbl.v1"
-    v1.mkdir()
-    (v1 / "data.txt").write_text("v1")
+    """Version install under a kill at every step, with one-deep
+    retention: the path resolves to a complete version, the replaced
+    version and the new one both survive the kill, and the next install
+    leaves exactly the current and the previous installed version —
+    plus the killed install's dir when it never became current (a
+    never-installed dir is indistinguishable from a concurrent
+    writer's staged one, so no install may reclaim it)."""
+    final, prev = tmp_path / "tbl", tmp_path / "tbl.prev"
+
+    def version(tag: str):
+        d = tmp_path / f"tbl.v-{tag}"
+        d.mkdir()
+        (d / "data.txt").write_text(tag)
+        return d
+
     if legacy_start:
         # pre-symlink layout: final is a REAL directory
         final.mkdir()
         (final / "data.txt").write_text("v1")
     else:
-        _install_version(v1, final)
+        # two installs, so the killed one has a two-back version to reclaim
+        _install_version(version("v0"), final)
+        _install_version(version("v1"), final)
 
-    v2 = tmp_path / "tbl.v2"
-    v2.mkdir()
-    (v2 / "data.txt").write_text("v2")
+    v2 = version("v2")
     kill_at(step)
     with pytest.raises(SimulatedCrash):
         _install_version(v2, final)
     publish._STEP_HOOK = None
+    committed = step == "install:replaced"
 
     # -- read healing: if the path resolves at all it must resolve to
     # a COMPLETE version (the documented exception: the one-time
     # legacy-dir conversion has a brief ENOENT window)
     if final.exists():
-        seen = (final / "data.txt").read_text()
-        assert seen == ("v2" if step == "install:replaced" else "v1")
+        assert (final / "data.txt").read_text() == \
+            ("v2" if committed else "v1")
     else:
         assert legacy_start and step in ("install:legacy-converted",
                                          "install:tmp-linked")
-    # -- no data loss, ever: both version payloads still exist on disk
-    assert (v1 / "data.txt").read_text() == "v1"
+    # -- no data loss, ever: the replaced and the new version survive
+    holders = [d for d in (final, *tmp_path.glob("tbl.v-*"))
+               if d.is_dir() and not d.is_symlink()]
+    assert "v1" in {(d / "data.txt").read_text() for d in holders}
     assert (v2 / "data.txt").read_text() == "v2"
-    if legacy_start:
-        legacies = list(tmp_path.glob("tbl.v-legacy-*"))
-        assert any((d / "data.txt").read_text() == "v1" for d in legacies)
 
-    # -- write healing: the next install wins regardless of debris
-    v3 = tmp_path / "tbl.v3"
-    v3.mkdir()
-    (v3 / "data.txt").write_text("v3")
-    _install_version(v3, final)
+    # -- write healing: the next install wins regardless of debris and
+    # reclaims down to current + previous (+ v2 if never installed)
+    _install_version(version("v3"), final)
     assert (final / "data.txt").read_text() == "v3"
+    left = {p.name for p in tmp_path.glob("tbl.v-*")}
+    assert left == {"tbl.v-v3", os.readlink(prev)} | (
+        set() if committed else {"tbl.v-v2"})
+    assert (tmp_path / os.readlink(prev) / "data.txt").read_text() == \
+        ("v2" if committed else "v1")
 
 
 def test_streaming_sink_crash_windows_exactly_once(spark, tmp_path):
@@ -317,7 +333,8 @@ def test_every_call_site_is_registered():
 
 #: the publish layout's sibling suffixes (``<name><suffix>``), current
 #: and retired
-SIBLING_SUFFIXES = (".staging", ".old", ".compacting", ".precompact")
+SIBLING_SUFFIXES = (".staging", ".old", ".prev", ".compacting",
+                    ".precompact")
 SIBLING_PREFIXES = (".v-", ".ln-")
 
 
