@@ -100,7 +100,6 @@ def main(argv: list[str] | None = None) -> int:
     from .pipeline import attach_reference_checks, build_registry
     from .session import get_spark
 
-    spark = get_spark("iot-lake-cli")
     if args.project:
         from .engine.sqlproject import load_sql_project, load_sql_tests
         registry = load_sql_project(
@@ -108,7 +107,12 @@ def main(argv: list[str] | None = None) -> int:
             config_vars={"iot_events_path": args.landing})
     else:
         registry = build_registry(streaming=not args.batch)
-    eng = Engine(spark, registry,
+    try:
+        registry.toposort(args.select)
+    except ValueError as e:     # e.g. a mistyped --select
+        print(f"{args.cmd}: {e}", file=sys.stderr)
+        return 2
+    eng = Engine(get_spark("iot-lake-cli"), registry,
                  config={"iot_events_path": args.landing},
                  warehouse=args.warehouse)
     log = attach_event_log(

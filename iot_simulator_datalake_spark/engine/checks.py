@@ -251,6 +251,15 @@ def freshness(relation: str, ts_column: str, max_lag_seconds: int,
 
 # -- inline expectations (P9) ---------------------------------------------
 
+def _violates(condition) -> "Column":
+    """The violation predicate every expectation helper shares: a row
+    violates unless its condition is TRUE, so a NULL condition counts
+    as a violation (and DROP drops it) — SQL's ``WHERE`` keeps only
+    TRUE rows, and so do the conforming outputs."""
+    cond = condition if not isinstance(condition, str) else F.expr(condition)
+    return ~F.coalesce(cond, F.lit(False))
+
+
 def expect(df: "DataFrame", name: str, condition,
            on_violation: OnViolation = OnViolation.WARN,
            metrics: dict[str, int] | None = None) -> "DataFrame":
@@ -260,22 +269,23 @@ def expect(df: "DataFrame", name: str, condition,
     DROP: returns only conforming rows.
     FAIL: raises if any row violates.
 
-    Metric counting is an action; at 100 TB you'd route it through a
-    streaming observation (``df.observe``) instead of a count — we use
-    ``observe`` when available so no extra scan is triggered.
+    A row whose condition is NULL violates (see :func:`_violates`).
+    The metric is a ``filter().count()`` — one extra scan; for a
+    scan-free count that rides the caller's own action use
+    :func:`expect_observed`.
     """
-    cond = condition if not isinstance(condition, str) else F.expr(condition)
+    violates = _violates(condition)
     if metrics is not None:
-        n_bad = df.filter(~cond).count()
+        n_bad = df.filter(violates).count()
         metrics[name] = n_bad
         if n_bad and on_violation is OnViolation.FAIL:
             raise ValueError(f"expectation {name}: {n_bad} violating rows")
     elif on_violation is OnViolation.FAIL:
-        bad = df.filter(~cond).limit(1).collect()
-        if bad:
-            raise ValueError(f"expectation {name}: violation {bad[0]}")
+        rows = df.filter(violates).limit(1).collect()
+        if rows:
+            raise ValueError(f"expectation {name}: violation {rows[0]}")
     if on_violation is OnViolation.DROP:
-        return df.filter(cond)
+        return df.filter(~violates)
     return df
 
 
@@ -300,13 +310,13 @@ def expect_observed(df: "DataFrame", name: str, condition,
             "expect_observed cannot enforce FAIL (metrics ride the "
             "caller's action; rows are not gated) — use expect() for "
             "FAIL semantics")
-    cond = condition if not isinstance(condition, str) else F.expr(condition)
+    violates = _violates(condition)
     obs = Observation(name)
     observed = df.observe(
-        obs, F.sum(F.when(~cond, 1).otherwise(0)).alias("n_violations"),
+        obs, F.sum(F.when(violates, 1).otherwise(0)).alias("n_violations"),
         F.count(F.lit(1)).alias("n_rows"))
     if on_violation is OnViolation.DROP:
-        observed = observed.filter(cond)
+        observed = observed.filter(~violates)
     return observed, obs
 
 
@@ -325,9 +335,9 @@ def expect_or_quarantine(df: "DataFrame", name: str, condition
     quarantine frame appends ``_failed_expectation`` and
     ``_quarantined_at`` audit columns.
     """
-    cond = condition if not isinstance(condition, str) else F.expr(condition)
-    good = df.filter(cond)
-    bad = (df.filter(~cond | cond.isNull())
+    violates = _violates(condition)
+    good = df.filter(~violates)
+    bad = (df.filter(violates)
            .withColumn("_failed_expectation", F.lit(name))
            .withColumn("_quarantined_at", F.current_timestamp()))
     return good, bad

@@ -12,12 +12,14 @@ streaming table's own directory is refused (see
 :func:`_refuse_streaming_table`): its ``_spark_metadata`` sink log is
 the table's file list, and a rewrite without it wedges the next
 refresh.  Rewrites publish through engine/publish.py, like every other
-table write: engine-managed (symlink) tables as a new version dir —
-the install keeps the replaced version for in-flight readers and
-reclaims the one from two installs back (one-deep VACUUM retention;
-``publish.vacuum_table_versions`` drops the previous one too once
-readers are quiet) — and plain directories through the shared staged
-swap, whose crash recovery every entry point runs first.
+table write: engine-managed (symlink) tables as a new logged version
+dir — the install keeps the table's retention depth (its model's
+``snapshot_keep``, recorded in the log; 2 by default), so older
+versions stay readable for in-flight readers and time travel and the
+ones beyond the depth are reclaimed (``publish.vacuum_table_versions``
+drops all but the current one once readers are quiet) — and plain
+directories through the shared staged swap, whose crash recovery
+every entry point runs first.
 """
 
 from __future__ import annotations

@@ -51,8 +51,10 @@ class Model:
     #: (n_buckets, col, ...) — hash-bucket the table sink so later joins/
     #: aggs on these cols co-locate without a shuffle (table mat. only)
     bucket_by: tuple = ()
-    #: keep the last N versions of the table sink (snapshots.py) and
-    #: register the newest; None → plain overwrite (table mat. only)
+    #: how many versions of the table sink its install log retains
+    #: (≥ 1; None → 2); engine/snapshots.py reads the history, and
+    #: installs that do not come from the model (compact, cluster,
+    #: zorder) keep the same depth (table mat. only)
     snapshot_keep: int | None = None
     #: dbt-style ENFORCED model contract: {column: spark_type_string}.
     #: Checked against the builder's output schema before any write —
@@ -68,6 +70,10 @@ class Model:
             raise ValueError(
                 f"model {self.name}: materialization must be one of "
                 f"{MATERIALIZATIONS}, got {self.materialization!r}")
+        if self.snapshot_keep is not None and self.snapshot_keep < 1:
+            raise ValueError(
+                f"model {self.name}: snapshot_keep must be >= 1, got "
+                f"{self.snapshot_keep}")
 
     @property
     def qualified_name(self) -> str:
@@ -166,6 +172,8 @@ class Registry:
         - ``name+`` — additionally every DOWNSTREAM model (and each
           downstream's own upstream closure) — the "rebuild everything
           this change affects" selector
+
+        A selector naming no model raises ``ValueError``.
         """
         graph = {qn: set(m.depends_on) for qn, m in self._models.items()}
         for qn, deps in graph.items():
@@ -174,6 +182,12 @@ class Registry:
                 raise ValueError(f"model {qn} depends on unknown {missing}")
         order = list(TopologicalSorter(graph).static_order())
         if select is not None:
+            select = list(select)
+            unknown = [t for t in select if t.strip("+") not in graph]
+            if unknown:
+                raise ValueError(
+                    f"unknown selector(s) {unknown}: no such model "
+                    f"(have: {sorted(graph)})")
             children: dict[str, set[str]] = {qn: set() for qn in graph}
             for qn, deps in graph.items():
                 for d in deps:
@@ -181,15 +195,14 @@ class Registry:
             roots: list[str] = []
             for token in select:
                 if token.endswith("+"):
-                    base = token[:-1].lstrip("+")
-                    desc = [base]
+                    desc = [token.strip("+")]
                     while desc:
                         qn = desc.pop()
                         if qn not in roots:
                             roots.append(qn)
                             desc.extend(children[qn])
                 else:
-                    roots.append(token.lstrip("+"))
+                    roots.append(token.strip("+"))
             keep: set[str] = set()
             stack = list(roots)
             while stack:
@@ -204,9 +217,10 @@ class Registry:
         """Toposort grouped into parallelizable waves — models in one wave
         have no edges among themselves, so they materialize concurrently
         (⇔ dbt ``threads: 8``, profiles.yml:14)."""
-        selected = {m.qualified_name for m in self.toposort(select)}
+        ordered = self.toposort(select)
+        selected = {m.qualified_name for m in ordered}
         depth: dict[str, int] = {}
-        for m in self.toposort(select):
+        for m in ordered:
             deps = [d for d in m.depends_on if d in selected]
             depth[m.qualified_name] = 1 + max((depth[d] for d in deps), default=-1)
         waves: dict[int, list[Model]] = {}

@@ -14,9 +14,11 @@ Materializations (dbt_project.yml:11-19):
                         written frame's schema (so downstream reads
                         scan columnar storage with pushdown, like a
                         real table, and no inference job runs).  Each
-                        install keeps the version it replaced and
-                        reclaims the one before it, so a table holds
-                        two version dirs however often it refreshes
+                        install is logged and reclaims the logged
+                        versions beyond ``snapshot_keep`` (None: 2), so
+                        a table holds that many version dirs however
+                        often it refreshes, and engine/snapshots.py
+                        reads its history
 - ``streaming_table`` → Structured Streaming triggered (availableNow)
                         run with a checkpoint dir → exactly-once
                         incremental append (⇔ DLT streaming table,
@@ -48,7 +50,7 @@ from typing import TYPE_CHECKING, Any
 
 from .checks import Check, CheckResult, count_violations
 from .model import Model, ModelContext, Registry
-from .publish import _install_version, new_version_dir
+from .publish import DEFAULT_KEEP, _install_version, new_version_dir
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -198,17 +200,6 @@ class Engine:
                 _enforce_contract(m, df)
             if m.materialization == "table":
                 path = self.table_path(m)
-                if m.snapshot_keep is not None:
-                    # versioned sink: append an immutable version dir +
-                    # atomic manifest swap; time travel via
-                    # snapshots.read_snapshot[_as_of]
-                    from .snapshots import read_snapshot, write_snapshot
-                    write_snapshot(df, path,
-                                   partition_by=m.partition_by,
-                                   keep=m.snapshot_keep)
-                    self.register(m.qualified_name,
-                                  read_snapshot(self.spark, path))
-                    return
                 writer = df.write.mode("overwrite")
                 if m.partition_by:
                     writer = writer.partitionBy(*m.partition_by)
@@ -233,11 +224,12 @@ class Engine:
                     # readers keep theirs (see _install_version)
                     vdir = new_version_dir(path)
                     writer.parquet(str(vdir))
+                    keep = m.snapshot_keep or DEFAULT_KEEP
                     if deferred is None:
-                        _install_version(vdir, path)
+                        _install_version(vdir, path, keep)
                     else:
                         # atomic-publish run: install later, all at once
-                        deferred.append((vdir, path))
+                        deferred.append((vdir, path, keep))
                     # register OUR version dir, not the symlink: this
                     # run's downstream reads stay consistent even if a
                     # concurrent run retargets the link mid-query
@@ -255,9 +247,9 @@ class Engine:
         retargeted only AFTER every model has succeeded — a failure
         anywhere leaves all published tables at their pre-run state
         (the staged version dirs are removed).  The publish step is a
-        burst of symlink renames: milliseconds, data-size-independent.
-        Snapshot-keep models commit through the OCC log as usual (their
-        history IS the isolation mechanism); streaming/bucketed sinks
+        burst of log entries and symlink renames: milliseconds,
+        data-size-independent.  ``snapshot_keep`` tables are plain
+        tables here and defer like any other; streaming/bucketed sinks
         install eagerly and are documented out of the atomic scope.
         """
         log = self.event_log
@@ -270,7 +262,7 @@ class Engine:
             while deferred:     # an installed dir leaves the list
                 _install_version(*deferred.pop(0))
         except Exception as e:
-            for vdir, _ in deferred or ():
+            for vdir, *_ in deferred or ():
                 shutil.rmtree(vdir, ignore_errors=True)
             if log is not None:
                 log.emit("run_failed", error=repr(e))
@@ -318,7 +310,9 @@ class Engine:
         partitions are left in place byte-for-byte; the predicate is
         pushed into the builder's plan, so at 100 TB the recompute
         reads only the affected input partitions (partition pruning),
-        not the history.
+        not the history.  The result installs as a new logged version,
+        so the table's retention (``snapshot_keep``) and history
+        (engine/snapshots.py) cover it like any refresh.
         """
         m = self.registry[qualified_name]
         # backfill crosses the same security boundary as run(): it reads
@@ -331,15 +325,6 @@ class Engine:
                 f"backfill targets partitioned table models; "
                 f"{qualified_name} is {m.materialization!r} "
                 f"partitioned by {m.partition_by!r}")
-        if m.snapshot_keep is not None:
-            # a snapshot table's root is a commit log + version dirs,
-            # not a partition layout — dynamic overwrite into it would
-            # corrupt the history; the snapshot path re-materializes
-            # through run() and keeps the old version for time travel
-            raise ValueError(
-                f"backfill does not support snapshot_keep models "
-                f"({qualified_name}): rerun the model instead — the "
-                f"OCC snapshot log keeps prior versions")
         ctx = ModelContext(self.spark, self, m)
         df = m.builder(ctx).filter(where)
         path = self.table_path(m)
@@ -363,7 +348,7 @@ class Engine:
              .parquet(str(vdir)))
         finally:
             self.spark.conf.set(key, prev)
-        _install_version(vdir, path)
+        _install_version(vdir, path, m.snapshot_keep or DEFAULT_KEEP)
         out = _read_back(self.spark, df.schema, vdir)
         self.register(m.qualified_name, out)
         return out

@@ -1,183 +1,51 @@
-"""Snapshot-versioned tables + time travel with an OCC commit log —
-the OSS analog of Delta table versioning the reference gets from its
-Databricks tier (README_DBT.md:103-104,227 "Automatic ... table
-history / VACUUM").
+"""Snapshot-versioned tables + time travel — the OSS analog of Delta
+table versioning the reference gets from its Databricks tier
+(README_DBT.md:103-104,227 "Automatic ... table history / VACUUM").
 
-A snapshotted table directory looks like::
+A snapshot table is an ordinary engine table: a symlink to its current
+``<table>.v-<hex>`` version dir, with a commit log beside it, all owned
+by engine/publish.py.  Every install appends one log entry naming its
+version dir, whoever writes it — :func:`write_snapshot`, an Engine run
+of a model (``snapshot_keep`` sets how many versions it retains), a
+backfill or a compaction — so this module only reads and writes that
+log: version numbers are entry numbers, and "current" is the newest
+entry.  Concurrent writers each stage a private version dir and claim
+the next entry with ``O_CREAT|O_EXCL`` (Delta's optimistic commit), so
+simultaneous commits serialize into versions N and N+1 and no reader
+sees a partial one.
 
-    <table>/
-      _commits/
-        00000000.json         {"dir": "d-1a2b3c...", "unix_ts": ...}
-        00000001.json
-      d-1a2b3c4d5e6f/*.parquet
-      d-9f8e7d6c5b4a/*.parquet
-      _MANIFEST.json          derived cache of the commit log (humans
-                              + legacy tooling; never authoritative
-                              when _commits/ exists)
-
-Commit protocol (multi-writer safe — VERDICT r2 #3):
-
-1. The writer stages data into a fresh ``d-<uuid>`` dir nobody else
-   can name.
-2. It then claims the next version number by atomically creating
-   ``_commits/<version>.json`` with ``O_CREAT|O_EXCL`` — the POSIX
-   put-if-absent.  If the create fails, another writer won that
-   version: re-read the log and retry with the next number.  This is
-   exactly Delta Lake's commit protocol (optimistic concurrency via
-   mutual exclusion on the next log entry), reduced to local files.
-3. Readers resolve versions from the commit log, so a version is
-   reachable only after its commit file exists — no reader ever
-   observes a partial write, and two concurrent ``write_snapshot``
-   calls serialize into versions N and N+1 (both survive; reads of
-   "current" see the later one — last-committer-wins, each outcome a
-   complete snapshot).
-
-Legacy tables written by the pre-OCC layout (``v=00000000`` dirs +
-manifest file only) stay readable: the log view merges legacy manifest
-entries under their original version numbers.
-
-Scale notes: data dirs are plain parquet — all scan pushdown / pruning
-applies; ``vacuum`` bounds storage to the last N versions; commit cost
-is one parquet write + one O_EXCL create + one small JSON write per
-materialization regardless of data size.  On an object store without
-atomic create (S3), step 2 swaps for a DynamoDB/conditional-put token
-— same protocol, different primitive (this is what delta-rs does).
+Scale notes: version dirs are plain parquet — all scan pushdown /
+pruning applies; retention bounds storage to the last N versions;
+commit cost is one parquet write + one small JSON create per
+materialization regardless of data size.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import time
-import uuid
 from pathlib import Path
 from typing import TYPE_CHECKING
 
+from .publish import (_install_version, new_version_dir, read_log,
+                      reclaim_versions)
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
-
-MANIFEST = "_MANIFEST.json"
-COMMITS = "_commits"
-
-#: CAS retries before giving up — only exhausted if ≥ this many other
-#: writers commit between our loop iterations.
-_MAX_CAS_RETRIES = 50
-
-
-def _manifest_path(table: Path) -> Path:
-    return table / MANIFEST
-
-
-def _commits_dir(table: Path) -> Path:
-    return table / COMMITS
-
-
-def _legacy_manifest(table: Path) -> dict:
-    p = _manifest_path(table)
-    if not p.exists():
-        return {"current": None, "versions": {}}
-    return json.loads(p.read_text())
-
-
-def read_manifest(table: str | Path) -> dict:
-    """Logical manifest: ``{"current": int|None, "versions": {str: meta}}``.
-
-    Authoritative source is the ``_commits/`` log; legacy manifest-file
-    entries (pre-OCC versions, data under ``v=%08d``) are merged in
-    under their original numbers.  ``meta["dir"]`` names the data dir
-    relative to the table root.
-    """
-    table = Path(table)
-    versions: dict[str, dict] = {}
-    legacy = _legacy_manifest(table)
-    for v, meta in legacy.get("versions", {}).items():
-        meta = dict(meta)
-        meta.setdefault("dir", f"v={int(v):08d}")
-        versions[v] = meta
-    cdir = _commits_dir(table)
-    if cdir.is_dir():
-        for f in cdir.iterdir():
-            if f.suffix == ".json" and f.stem.isdigit():
-                try:
-                    versions[str(int(f.stem))] = json.loads(f.read_text())
-                except (OSError, json.JSONDecodeError):
-                    # mid-write commit file from a concurrent writer —
-                    # treat as not-yet-committed; the writer's O_EXCL
-                    # create + single write makes this a tiny window
-                    continue
-    current = max((int(v) for v in versions), default=None)
-    return {"current": current, "versions": versions}
-
-
-def _write_manifest_cache(table: Path, manifest: dict) -> None:
-    """Best-effort derived cache for humans/legacy tooling (atomic
-    replace; never read back as authority once _commits exists)."""
-    tmp = table / (MANIFEST + f".tmp-{uuid.uuid4().hex[:8]}")
-    try:
-        tmp.write_text(json.dumps(manifest, indent=1, sort_keys=True,
-                                  default=str))
-        os.replace(tmp, _manifest_path(table))
-    except OSError:
-        tmp.unlink(missing_ok=True)
-
-
-def _version_dir(table: Path, version: int) -> Path:
-    meta = read_manifest(table)["versions"].get(str(version))
-    if meta is None:
-        raise KeyError(version)
-    return table / meta["dir"]
 
 
 def write_snapshot(df: "DataFrame", table: str | Path, *,
                    partition_by: tuple[str, ...] = (),
                    keep: int | None = None) -> int:
-    """Commit ``df`` as the next version of ``table`` via the OCC
-    protocol above; returns the committed version number.  Safe under
-    concurrent writers: each call stages a private data dir and CAS-
-    claims a version, so simultaneous commits serialize instead of
-    interleaving.  ``keep`` (≥1) vacuums all but the newest N versions
-    after the commit.
-    """
+    """Commit ``df`` as the next version of ``table``; returns the
+    committed version number.  Safe under concurrent writers.  ``keep``
+    (≥1) retains the newest N versions from this commit on; None keeps
+    every version."""
     table = Path(table)
-    cdir = _commits_dir(table)
-    cdir.mkdir(parents=True, exist_ok=True)
-
-    ddir = f"d-{uuid.uuid4().hex[:12]}"
+    vdir = new_version_dir(table)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(str(table / ddir))
-
-    meta = {
-        "dir": ddir,
-        "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "unix_ts": time.time(),
-    }
-    payload = json.dumps(meta, sort_keys=True)
-    for _ in range(_MAX_CAS_RETRIES):
-        manifest = read_manifest(table)
-        version = (manifest["current"] + 1
-                   if manifest["current"] is not None else 0)
-        try:
-            fd = os.open(cdir / f"{version:08d}.json",
-                         os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            continue          # lost the race for this version — retry
-        with os.fdopen(fd, "w") as fh:
-            fh.write(payload)
-        break
-    else:  # pragma: no cover — needs 50 concurrent commits mid-loop
-        shutil.rmtree(table / ddir, ignore_errors=True)
-        raise RuntimeError(
-            f"snapshot commit to {table} lost {_MAX_CAS_RETRIES} CAS races")
-
-    manifest["versions"][str(version)] = meta
-    manifest["current"] = version
-    _write_manifest_cache(table, manifest)
-    if keep is not None:
-        vacuum(table, keep=keep)
-    return version
+    writer.parquet(str(vdir))
+    return _install_version(vdir, table, keep=keep or 0)
 
 
 def read_snapshot(spark: "SparkSession", table: str | Path,
@@ -185,70 +53,42 @@ def read_snapshot(spark: "SparkSession", table: str | Path,
     """Read a table version (default: current).  Negative versions
     index back from current (-1 = previous)."""
     table = Path(table)
-    manifest = read_manifest(table)
-    if manifest["current"] is None:
+    log = read_log(table)
+    if not log:
         raise FileNotFoundError(f"no snapshots at {table}")
     if version is None:
-        version = manifest["current"]
+        version = max(log)
     elif version < 0:
-        version = manifest["current"] + version
-    meta = manifest["versions"].get(str(version))
-    if meta is None:
-        raise KeyError(
-            f"version {version} not in "
-            f"{sorted(int(v) for v in manifest['versions'])} "
-            f"(vacuumed or never written)")
-    return spark.read.parquet(str(table / meta["dir"]))
+        version = max(log) + version
+    if version not in log:
+        raise KeyError(f"version {version} not in {sorted(log)} "
+                       f"(reclaimed or never written)")
+    return spark.read.parquet(str(table.with_name(log[version]["dir"])))
 
 
 def read_snapshot_as_of(spark: "SparkSession", table: str | Path,
                         unix_ts: float) -> "DataFrame":
     """Time travel: the newest version committed at or before
     ``unix_ts`` (⇔ ``TIMESTAMP AS OF``)."""
-    manifest = read_manifest(Path(table))
-    eligible = [int(v) for v, meta in manifest["versions"].items()
-                if meta["unix_ts"] <= unix_ts]
+    eligible = [v for v, e in read_log(table).items()
+                if e["unix_ts"] <= unix_ts]
     if not eligible:
         raise KeyError(f"no version at or before {unix_ts}")
     return read_snapshot(spark, table, max(eligible))
 
 
 def versions(table: str | Path) -> list[int]:
-    return sorted(int(v) for v in read_manifest(Path(table))["versions"])
+    return sorted(read_log(table))
 
 
 def vacuum(table: str | Path, keep: int = 2) -> list[int]:
-    """Drop all but the newest ``keep`` versions; returns the dropped
-    version numbers.  The commit file (what makes a version reachable)
-    is removed FIRST, then its data dir — a reader that already
-    resolved the version may still be scanning, so real deployments
-    add a retention delay before the data delete (Delta's
+    """Drop all but the newest ``keep`` versions (the current one
+    always stays); returns the dropped version numbers.  A reader that
+    already resolved a dropped version may still be scanning it, so
+    real deployments add a retention delay before the delete (Delta's
     ``deletedFileRetentionDuration``); locally the test suite owns
     read/vacuum ordering."""
-    table = Path(table)
-    manifest = read_manifest(table)
-    vs = sorted(int(v) for v in manifest["versions"])
-    drop = vs[:-keep] if keep > 0 else []
-    if not drop:
-        return []
-    cdir = _commits_dir(table)
-    legacy = _legacy_manifest(table)
-    legacy_changed = False
-    for v in drop:
-        (cdir / f"{v:08d}.json").unlink(missing_ok=True)
-        if str(v) in legacy.get("versions", {}):
-            del legacy["versions"][str(v)]
-            legacy_changed = True
-    if legacy_changed and legacy.get("versions") is not None:
-        legacy["current"] = max(
-            (int(v) for v in legacy["versions"]), default=None)
-        _write_manifest_cache(table, legacy)
-    for v in drop:
-        shutil.rmtree(table / manifest["versions"][str(v)]["dir"],
-                      ignore_errors=True)
-    # refresh the derived cache to the post-vacuum view
-    _write_manifest_cache(table, read_manifest(table))
-    return drop
+    return reclaim_versions(table, keep)
 
 
 def snapshot_diff(spark: "SparkSession", table: str | Path,

@@ -87,7 +87,8 @@ _IF_INCR_BLOCK_RE = re.compile(
 def render_sql(text: str, name_to_view: dict[str, str],
                config_vars: dict[str, Any], *,
                incremental: bool = False,
-               this_view: str | None = None) -> tuple[str, list[str]]:
+               this_view: str | None = None
+               ) -> tuple[str, list[str], list[tuple[str, str, str]]]:
     """Render a model body to executable Spark SQL; returns
     ``(sql, referenced_model_names, landing_views)`` where each landing
     view is a ``(view_name, path, format)`` triple the builder must
@@ -158,6 +159,29 @@ def load_project_yml(project_root: str | Path) -> dict[str, Any]:
     return {"vars": doc.get("vars") or {}, "layer_defaults": layer_defaults}
 
 
+def effective_schema(cfg: dict[str, Any], layer: str,
+                     layer_defaults: dict[str, dict]) -> str:
+    """A model's schema: its config ``meta.target_schema`` > its layer's
+    ``+schema`` default > the layer.  ``Engine.register`` names a
+    relation ``<schema>.<stem>`` (temp view ``<schema>__<stem>``), so
+    depends_on edges, rendered view names and test bindings must all
+    use this, not the directory layer — building them from the layer
+    broke every schema-routed project (unknown dependency at toposort,
+    or TABLE_OR_VIEW_NOT_FOUND at run)."""
+    return ((cfg.get("meta") or {}).get("target_schema")
+            or layer_defaults.get(layer, {}).get("schema") or layer)
+
+
+def _stem_schemas(project_root: Path,
+                  layer_defaults: dict[str, dict]) -> dict[str, str]:
+    """``{stem: effective schema}`` for every model file of a project."""
+    models_dir = project_root / "models"
+    return {p.stem: effective_schema(parse_config(p.read_text()),
+                                     p.relative_to(models_dir).parts[0],
+                                     layer_defaults)
+            for p in sorted(models_dir.glob("**/*.sql"))}
+
+
 def load_sql_project(models_dir: str | Path,
                      config_vars: dict[str, Any] | None = None,
                      registry: Registry | None = None) -> Registry:
@@ -186,21 +210,14 @@ def load_sql_project(models_dir: str | Path,
         files[p.stem] = (layer, p)
 
     reg = registry or Registry()
-    # Resolve every model's EFFECTIVE schema (config meta target_schema
-    # > layer +schema default > layer) up front: Engine.register names
-    # relations/temp views by Model.qualified_name = "<schema>.<stem>",
-    # so depends_on edges AND the rendered view names must use the
-    # routed schema, not the directory layer — building them from the
-    # layer broke every schema-routed project (unknown-dependency at
-    # toposort, or TABLE_OR_VIEW_NOT_FOUND at run).
+    # resolve every model's effective schema up front: refs to a model
+    # render its routed view name, whatever its directory layer
     parsed: dict[str, dict] = {}
     eff_schema: dict[str, str] = {}
     for stem, (layer, path) in files.items():
-        cfg = parse_config(path.read_text())
-        parsed[stem] = cfg
-        lay_def = layer_defaults.get(layer, {})
-        eff_schema[stem] = ((cfg.get("meta") or {}).get("target_schema")
-                            or lay_def.get("schema") or layer)
+        parsed[stem] = parse_config(path.read_text())
+        eff_schema[stem] = effective_schema(parsed[stem], layer,
+                                            layer_defaults)
     # a model's temp view name is its qualified name with dots → __
     # (Engine.register's rule), qualified = "<schema>.<stem>"
     name_to_view = {stem: f"{eff_schema[stem]}__{stem}"
@@ -220,8 +237,6 @@ def load_sql_project(models_dir: str | Path,
         note = ""
         if mat == "streaming_table":
             mat, note = "table", " [streaming_table rendered as batch]"
-        schema = ((cfg.get("meta") or {}).get("target_schema")
-                  or lay_def.get("schema"))
         # union refs from BOTH renders: the batch render strips
         # {% if is_incremental() %} blocks BEFORE ref extraction, so a
         # ref appearing only inside one (e.g. a watermark lookup) would
@@ -270,7 +285,7 @@ def load_sql_project(models_dir: str | Path,
             builder = make_builder(sql, landings)
         reg.add(Model(
             name=stem, layer=layer, builder=builder,
-            materialization=mat, depends_on=deps, schema=schema,
+            materialization=mat, depends_on=deps, schema=eff_schema[stem],
             description=f"loaded from {path.name}{note}",
             meta={"sql": sql}))
     return reg
@@ -301,19 +316,11 @@ def load_sql_tests(project_root: str | Path, engine,
 
     root = Path(project_root)
     models_dir = root / "models"
-    # same effective-schema resolution as load_sql_project: a test must
-    # bind to the relation the Engine actually registered, which for
-    # schema-routed models (meta target_schema / +schema default) is
-    # NOT "<layer>.<stem>"
+    # a test binds to the relation the Engine registered, which for a
+    # schema-routed model is NOT "<layer>.<stem>"
     proj = load_project_yml(root)
-    stem_to_qn: dict[str, str] = {}
-    for p in sorted(models_dir.glob("**/*.sql")):
-        layer = p.relative_to(models_dir).parts[0]
-        cfg = parse_config(p.read_text())
-        lay_def = proj["layer_defaults"].get(layer, {})
-        schema = ((cfg.get("meta") or {}).get("target_schema")
-                  or lay_def.get("schema") or layer)
-        stem_to_qn[p.stem] = f"{schema}.{p.stem}"
+    stem_to_qn = {stem: f"{schema}.{stem}" for stem, schema
+                  in _stem_schemas(root, proj["layer_defaults"]).items()}
     view_of = name_to_view or {
         s: qn.replace(".", "__") for s, qn in stem_to_qn.items()}
 
@@ -377,20 +384,9 @@ def load_snapshots(project_root: str | Path, engine,
     root = Path(project_root)
     proj = load_project_yml(root)
     config_vars = {**proj["vars"], **(config_vars or {})}
-    models_dir = root / "models"
-    # effective-schema resolution, same as load_sql_project /
-    # load_sql_tests: a snapshot's ref() must render the temp view the
-    # Engine actually registered — for schema-routed models (meta
-    # target_schema / +schema layer default) that is NOT
-    # "<layer>__<stem>"
-    name_to_view: dict[str, str] = {}
-    for p in sorted(models_dir.glob("**/*.sql")):
-        layer = p.relative_to(models_dir).parts[0]
-        cfg = parse_config(p.read_text())
-        lay_def = proj["layer_defaults"].get(layer, {})
-        schema = ((cfg.get("meta") or {}).get("target_schema")
-                  or lay_def.get("schema") or layer)
-        name_to_view[p.stem] = f"{schema}__{p.stem}"
+    # a snapshot's ref() renders the temp view the Engine registered
+    name_to_view = {stem: f"{schema}__{stem}" for stem, schema
+                    in _stem_schemas(root, proj["layer_defaults"]).items()}
 
     out: dict[str, SnapshotTable] = {}
     snap_dir = root / "snapshots"

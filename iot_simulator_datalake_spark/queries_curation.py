@@ -1548,9 +1548,8 @@ def streaming_quality_filter(spark: "SparkSession", sf_dir: str
     the micro-batch.  Result set equals the batch classifier (same
     oracle recipe), which is the equivalence the gate certifies.
     """
-    import uuid
     from .queries_streaming import _stream_source
-    from .streaming.runner import run_stream_available_now
+    from .streaming.runner import drain_to_memory
     stream = _stream_source(spark, sf_dir, table="documents")
     toks = tokens(F.col("text"))
     w_sum = F.aggregate(
@@ -1564,11 +1563,7 @@ def streaming_quality_filter(spark: "SparkSession", sf_dir: str
                       (w_sum.cast("double") / (n * 1000.0))
                       .alias("mean_weight"),
                       (w_sum > 0).alias("keep")))
-    name = f"stream_qfilter_{uuid.uuid4().hex[:8]}"
-    writer = (scored.writeStream.outputMode("append")
-              .format("memory").queryName(name))
-    run_stream_available_now(writer)
-    return spark.table(name)
+    return drain_to_memory(scored, "append", "stream_qfilter")
 
 
 # =========================================================================

@@ -101,13 +101,13 @@ FROM v0 JOIN v1 USING (order_id) WHERE v1.status <> v0.status
 def snapshot_changes(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     """End-to-end snapshot versioning + change-data-feed: commit two
     deterministic versions of an orders slice through the snapshot
-    store (immutable version dirs, atomic manifest swap), then read
+    store (immutable version dirs, one commit-log entry each), then read
     the row-level changes back with
     :func:`engine.snapshots.snapshot_diff` keyed on order_id.
 
     The oracle reconstructs both versions relationally and states the
     CDF semantics from first principles (key-scoped insert / delete /
-    update pre+postimage) — so manifest bugs, version mix-ups, or
+    update pre+postimage) — so commit-log bugs, version mix-ups, or
     misclassification all surface as value mismatches.
 
     Scale: the diff is two exceptAll shuffles over the changed-rows

@@ -10,7 +10,6 @@ instead of the weaker rows-only check.
 
 from __future__ import annotations
 
-import uuid
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Window as W
@@ -20,7 +19,7 @@ from .functions.units import to_units
 from .queries import load, normalize_ts, oavg, osum, q, raw_schema
 from .queries_llmprep import _o_hash_bucket
 from .session import scratch
-from .streaming.runner import run_stream_available_now
+from .streaming.runner import drain_to_memory, run_stream_available_now
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -74,11 +73,7 @@ def streaming_hourly_rollup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.sum(F.col("value").cast("decimal(25,4)"))
                 .cast("double").alias("total_value")))
-    name = f"stream_rollup_{uuid.uuid4().hex[:8]}"
-    writer = (agg.writeStream.outputMode("complete")
-              .format("memory").queryName(name))
-    run_stream_available_now(writer)
-    return (spark.table(name)
+    return (drain_to_memory(agg, "complete", "stream_rollup")
             .select(F.col("w.start").alias("hour"), "event_type",
                     "n_events", "total_value"))
 
@@ -114,11 +109,7 @@ def streaming_sessionization(spark: "SparkSession",
            .groupBy(F.session_window("ts", "30 minutes").alias("w"),
                     "user_id")
            .agg(F.count(F.lit(1)).alias("n_events")))
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    writer = (agg.writeStream.outputMode("complete")
-              .format("memory").queryName(name))
-    run_stream_available_now(writer)
-    return (spark.table(name)
+    return (drain_to_memory(agg, "complete", "stream_sess")
             .select("user_id",
                     F.col("w.start").alias("session_start"),
                     (F.col("w.end") - F.expr("INTERVAL 30 MINUTES"))
@@ -159,13 +150,9 @@ def streaming_interval_join(spark: "SparkSession",
         (F.col("c_user") == F.col("user_id")) &
         (F.col("purchase_ts") >= F.col("click_ts")) &
         (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")))
-    name = f"stream_ij_{uuid.uuid4().hex[:8]}"
-    writer = (joined.select("click_id", "purchase_id", "user_id",
-                            "click_ts", "purchase_ts")
-              .writeStream.outputMode("append")
-              .format("memory").queryName(name))
-    run_stream_available_now(writer)
-    return spark.table(name)
+    return drain_to_memory(
+        joined.select("click_id", "purchase_id", "user_id",
+                      "click_ts", "purchase_ts"), "append", "stream_ij")
 
 
 @q("sessionization", ("W1", "A6"), bench=True, oracle="""
@@ -233,11 +220,7 @@ def streaming_enriched_rollup(spark: "SparkSession",
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.sum(F.col("value").cast("decimal(25,4)"))
                 .cast("double").alias("total_value")))
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    writer = (agg.writeStream.outputMode("complete")
-              .format("memory").queryName(name))
-    run_stream_available_now(writer)
-    return spark.table(name)
+    return drain_to_memory(agg, "complete", "stream_enrich")
 
 
 @q("streaming_dedup_rollup", ("ST1", "ST3", "ST4", "A6", "W2"), oracle=f"""
@@ -261,11 +244,7 @@ def streaming_dedup_rollup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
                .union(_stream_source(spark, sf_dir))
                .withWatermark("ts", "1 hour")
                .dropDuplicatesWithinWatermark(["event_id"]))
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    writer = (deduped.writeStream.outputMode("append")
-              .format("memory").queryName(name))
-    run_stream_available_now(writer)
-    return (spark.table(name)
+    return (drain_to_memory(deduped, "append", "stream_dedup")
             .groupBy(F.date_trunc("hour", F.col("ts")).alias("hour"),
                      "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"),
@@ -437,21 +416,17 @@ def streaming_interval_join_left(spark: "SparkSession",
         (F.col("purchase_ts") >= F.col("click_ts")) &
         (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
         "left_outer")
-    name = f"stream_ij_left_{uuid.uuid4().hex[:8]}"
-    writer = (joined.filter(F.col("click_id") >= 0)
-              .select("click_id", "purchase_id",
-                      F.col("c_user").alias("user_id"),
-                      "click_ts", "purchase_ts")
-              .writeStream.outputMode("append")
-              .format("memory").queryName(name))
+    out = (joined.filter(F.col("click_id") >= 0)
+           .select("click_id", "purchase_id",
+                   F.col("c_user").alias("user_id"),
+                   "click_ts", "purchase_ts"))
     policy_key = "spark.sql.streaming.multipleWatermarkPolicy"
     prev = spark.conf.get(policy_key, "min")
     spark.conf.set(policy_key, "max")
     try:
-        run_stream_available_now(writer)
+        return drain_to_memory(out, "append", "stream_ij_left")
     finally:
         spark.conf.set(policy_key, prev)
-    return spark.table(name)
 
 
 @q("streaming_hopping_rollup", ("ST5", "A6"), oracle=f"""
@@ -489,11 +464,7 @@ def streaming_hopping_rollup(spark: "SparkSession",
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.sum(F.col("value").cast("decimal(25,4)"))
                 .cast("double").alias("total_value")))
-    name = f"stream_hop_{uuid.uuid4().hex[:8]}"
-    writer = (agg.writeStream.outputMode("complete")
-              .format("memory").queryName(name))
-    run_stream_available_now(writer)
-    return (spark.table(name)
+    return (drain_to_memory(agg, "complete", "stream_hop")
             .select(F.col("w.start").alias("window_start"), "event_type",
                     "n_events", "total_value"))
 
@@ -531,11 +502,7 @@ def streaming_stateful_totals(spark: "SparkSession",
     stream = _stream_source(spark, sf_dir)
     out = running_totals_micro(
         quantize_micro(stream, "user_id", "value").groupBy("key"))
-    name = f"stream_tws_{uuid.uuid4().hex[:8]}"
-    writer = (out.writeStream.outputMode("update")
-              .format("memory").queryName(name))
-    run_stream_available_now(writer)
-    final = (spark.table(name)
+    final = (drain_to_memory(out, "update", "stream_tws")
              .withColumn("rn", F.row_number().over(
                  W.partitionBy("key").orderBy(F.col("n_events").desc())))
              .where("rn = 1"))
@@ -583,11 +550,7 @@ def streaming_anomaly_scores(spark: "SparkSession",
               .select("event_id", "user_id", "value", z_u.alias("z_u"))
               .filter((F.col("z_u") > 1_500_000)
                       | (F.col("z_u") < -1_500_000)))
-    name = f"stream_zscore_{uuid.uuid4().hex[:8]}"
-    writer = (scored.writeStream.outputMode("append")
-              .format("memory").queryName(name))
-    run_stream_available_now(writer)
-    return spark.table(name)
+    return drain_to_memory(scored, "append", "stream_zscore")
 
 
 @q("streaming_topk_users_hourly", ("ST5", "W3", "A6"), oracle=f"""
@@ -734,11 +697,8 @@ def streaming_psi_drift(spark: "SparkSession", sf_dir: str) -> "DataFrame":
                           (F.col("event_type") == _PSI_SEG["b"]))
             .select(psi_bin().alias("bin"))
             .groupBy("bin").agg(F.count("*").alias("rb")))
-    name = f"stream_psi_{uuid.uuid4().hex[:8]}"
-    writer = (live.writeStream.outputMode("complete")
-              .format("memory").queryName(name))
-    run_stream_available_now(writer)
-    return psi_from_bin_counts(spark, ga, spark.table(name))
+    return psi_from_bin_counts(
+        spark, ga, drain_to_memory(live, "complete", "stream_psi"))
 
 
 @q("streaming_hll_rollup", ("ST5", "A8", "A6"), oracle="""
@@ -781,12 +741,8 @@ def streaming_hll_rollup(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     daily = (stream.groupBy(F.date_trunc("day", "ts").alias("day"),
                             "event_type")
              .agg(F.hll_sketch_agg("user_id", F.lit(21)).alias("sk")))
-    name = f"stream_hll_{uuid.uuid4().hex[:8]}"
-    writer = (daily.writeStream.outputMode("complete")
-              .format("memory").queryName(name))
-    run_stream_available_now(writer)
     week = F.date_trunc("week", "day").alias("week")
-    est_s = (spark.table(name)
+    est_s = (drain_to_memory(daily, "complete", "stream_hll")
              .groupBy(week, "event_type")
              .agg(F.hll_sketch_estimate(F.hll_union_agg("sk"))
                   .alias("est_s")))
@@ -830,12 +786,9 @@ def streaming_hll_envelope(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     daily = (stream.groupBy(F.date_trunc("day", "ts").alias("day"),
                             "event_type")
              .agg(F.hll_sketch_agg("user_id", F.lit(21)).alias("sk")))
-    name = f"stream_hllenv_{uuid.uuid4().hex[:8]}"
-    writer = (daily.writeStream.outputMode("complete")
-              .format("memory").queryName(name))
-    run_stream_available_now(writer)
-    return hll_weekly_envelope(spark.table(name),
-                               load(spark, sf_dir, "events"))
+    return hll_weekly_envelope(
+        drain_to_memory(daily, "complete", "stream_hllenv"),
+        load(spark, sf_dir, "events"))
 
 
 @q("streaming_incremental_join_rollup", ("ST1", "ST2", "ST3", "A6", "J1"),
@@ -1127,11 +1080,7 @@ def streaming_late_data_drop(spark: "SparkSession",
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.sum(F.col("value").cast("decimal(25,4)"))
                 .cast("double").alias("total_value")))
-    name = f"stream_late_{uuid.uuid4().hex[:8]}"
-    writer = (agg.writeStream.outputMode("append")
-              .format("memory").queryName(name)
-              .option("checkpointLocation", f"{land}/_checkpoint"))
-    run_stream_available_now(writer)
-    return (spark.table(name)
+    return (drain_to_memory(agg, "append", "stream_late",
+                            checkpoint=f"{land}/_checkpoint")
             .select(F.col("w.start").alias("hour"),
                     "n_events", "total_value"))

@@ -22,6 +22,7 @@ the micro-batch plan's statistics, so no job runs.
 
 from __future__ import annotations
 
+import uuid
 from pathlib import Path
 from typing import TYPE_CHECKING
 
@@ -48,6 +49,23 @@ def run_stream_available_now(writer: "DataStreamWriter",
         if q.isActive:
             q.stop()
     return q
+
+
+def drain_to_memory(stream_df: "DataFrame", output_mode: str,
+                    prefix: str, checkpoint: str | None = None
+                    ) -> "DataFrame":
+    """Drain a streaming DataFrame (availableNow) into a fresh in-memory
+    table named ``<prefix>_<8 hex>`` and return a batch DataFrame over
+    it — how a query reads a stream's complete result.  ``output_mode``
+    is the sink's (append / complete / update); ``checkpoint`` pins the
+    query's checkpoint dir (default: a temporary one)."""
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    writer = (stream_df.writeStream.outputMode(output_mode)
+              .format("memory").queryName(name))
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    run_stream_available_now(writer)
+    return stream_df.sparkSession.table(name)
 
 
 def materialize_streaming_table(spark: "SparkSession", stream_df: "DataFrame",

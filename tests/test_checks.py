@@ -74,6 +74,27 @@ def test_expectation_policies(spark):
     assert expect(df, "v_pos", "v > 0", OnViolation.DROP).count() == 2
 
 
+def test_expectations_count_null_condition_as_violation(spark):
+    """A row whose condition is NULL is a violation for every helper:
+    DROP drops it, the metric counts it, FAIL raises on it, and
+    expect_observed and expect_or_quarantine agree."""
+    from iot_simulator_datalake_spark.engine import expect_observed
+    from iot_simulator_datalake_spark.engine.checks import (
+        expect_or_quarantine)
+    df = spark.createDataFrame([(1.0,), (-1.0,), (None,)], "value double")
+    cond = F.col("value") > 0
+    metrics: dict[str, int] = {}
+    kept = expect(df, "pos", cond, OnViolation.DROP, metrics)
+    assert kept.count() == 1 and metrics["pos"] == 2
+    with pytest.raises(ValueError, match="pos"):
+        expect(df.where("value IS NULL"), "pos", cond, OnViolation.FAIL)
+    out, obs = expect_observed(df, "pos", cond, OnViolation.DROP)
+    assert out.count() == 1
+    assert obs.get == {"n_violations": 2, "n_rows": 3}
+    good, bad = expect_or_quarantine(df, "pos", "value > 0")
+    assert (good.count(), bad.count()) == (1, 2)
+
+
 def test_expect_observed_scan_free_metrics(spark):
     from iot_simulator_datalake_spark.engine import expect_observed
     df = spark.createDataFrame([(1,), (2,), (-3,), (-4,)], ["v"])

@@ -116,3 +116,15 @@ def test_cli_test_writes_event_log(spark, tmp_path, capsys):
     assert kinds.count("model_materialized") == 5
     assert kinds.count("check_result") == 11
     assert kinds.count("run_finished") == 1
+
+
+def test_run_with_unknown_selector_exits_2(tmp_path, capsys):
+    """``run --select`` with a mistyped model prints the error and exits
+    2, as ``optimize`` does, before any model runs."""
+    rc = main(["run", "--batch", "--warehouse", str(tmp_path / "wh"),
+               "--landing", str(tmp_path / "landing"),
+               "--select", "gold.fact_iot_event"])
+    assert rc == 2
+    err = capsys.readouterr().err
+    assert "unknown selector" in err and "gold.fact_iot_event" in err
+    assert not (tmp_path / "wh").exists()

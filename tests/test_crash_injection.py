@@ -48,9 +48,9 @@ SWAP_STEPS = ["swap:restored", "swap:stage-cleared", "swap:staged",
 #: there must heal to the OLD state; at/after it, to the NEW state.
 SWAP_PRE_COMMIT = set(SWAP_STEPS[:6])
 
-INSTALL_STEPS = ["install:reclaimed", "install:prev-linked",
-                 "install:legacy-converted", "install:tmp-linked",
-                 "install:replaced"]
+INSTALL_STEPS = ["install:legacy-converted", "install:adopted",
+                 "install:logged", "install:tmp-linked",
+                 "install:replaced", "install:reclaimed"]
 
 
 class SimulatedCrash(RuntimeError):
@@ -160,14 +160,15 @@ def test_compact_kill_at_every_step(spark, tmp_path, step, kill_at):
 @pytest.mark.parametrize("step", INSTALL_STEPS)
 @pytest.mark.parametrize("legacy_start", [False, True])
 def test_install_kill_at_every_step(tmp_path, step, legacy_start, kill_at):
-    """Version install under a kill at every step, with one-deep
-    retention: the path resolves to a complete version, the replaced
-    version and the new one both survive the kill, and the next install
-    leaves exactly the current and the previous installed version —
-    plus the killed install's dir when it never became current (a
-    never-installed dir is indistinguishable from a concurrent
+    """Version install under a kill at every step, with the default
+    retention depth of 2: the path resolves to a complete version, the
+    log names no missing dir, the replaced version and the new one both
+    survive the kill, and the next install leaves exactly the versions
+    its log retains — the newest two entries plus the version it
+    replaced — plus the killed install's dir when it was never logged
+    (a never-logged dir is indistinguishable from a concurrent
     writer's staged one, so no install may reclaim it)."""
-    final, prev = tmp_path / "tbl", tmp_path / "tbl.prev"
+    final = tmp_path / "tbl"
 
     def version(tag: str):
         d = tmp_path / f"tbl.v-{tag}"
@@ -175,21 +176,29 @@ def test_install_kill_at_every_step(tmp_path, step, legacy_start, kill_at):
         (d / "data.txt").write_text(tag)
         return d
 
+    def logged() -> list[str]:
+        log = publish.read_log(final)
+        return [log[n]["dir"] for n in sorted(log)]
+
     if legacy_start:
         # pre-symlink layout: final is a REAL directory
         final.mkdir()
         (final / "data.txt").write_text("v1")
+        v1 = "tbl.v-legacy"         # the name the conversion gives it
     else:
         # two installs, so the killed one has a two-back version to reclaim
         _install_version(version("v0"), final)
         _install_version(version("v1"), final)
+        v1 = "tbl.v-v1"
 
     v2 = version("v2")
     kill_at(step)
     with pytest.raises(SimulatedCrash):
         _install_version(v2, final)
     publish._STEP_HOOK = None
-    committed = step == "install:replaced"
+    at = INSTALL_STEPS.index(step)
+    committed = at >= INSTALL_STEPS.index("install:replaced")
+    is_logged = at >= INSTALL_STEPS.index("install:logged")
 
     # -- read healing: if the path resolves at all it must resolve to
     # a COMPLETE version (the documented exception: the one-time
@@ -198,8 +207,10 @@ def test_install_kill_at_every_step(tmp_path, step, legacy_start, kill_at):
         assert (final / "data.txt").read_text() == \
             ("v2" if committed else "v1")
     else:
-        assert legacy_start and step in ("install:legacy-converted",
-                                         "install:tmp-linked")
+        assert legacy_start and not committed
+    # -- the log names no missing dir, and names v2 once it is logged
+    assert all((tmp_path / d).is_dir() for d in logged())
+    assert ("tbl.v-v2" in logged()) == is_logged
     # -- no data loss, ever: the replaced and the new version survive
     holders = [d for d in (final, *tmp_path.glob("tbl.v-*"))
                if d.is_dir() and not d.is_symlink()]
@@ -207,14 +218,15 @@ def test_install_kill_at_every_step(tmp_path, step, legacy_start, kill_at):
     assert (v2 / "data.txt").read_text() == "v2"
 
     # -- write healing: the next install wins regardless of debris and
-    # reclaims down to current + previous (+ v2 if never installed)
+    # reclaims down to the retained logged versions (+ v2 if never
+    # logged)
     _install_version(version("v3"), final)
     assert (final / "data.txt").read_text() == "v3"
+    replaced = "tbl.v-v2" if committed else v1
+    newest = {"tbl.v-v3", "tbl.v-v2" if is_logged else v1}
+    assert set(logged()) == newest | {replaced}
     left = {p.name for p in tmp_path.glob("tbl.v-*")}
-    assert left == {"tbl.v-v3", os.readlink(prev)} | (
-        set() if committed else {"tbl.v-v2"})
-    assert (tmp_path / os.readlink(prev) / "data.txt").read_text() == \
-        ("v2" if committed else "v1")
+    assert left == set(logged()) | (set() if is_logged else {"tbl.v-v2"})
 
 
 def test_streaming_sink_crash_windows_exactly_once(spark, tmp_path):
@@ -296,6 +308,7 @@ REGISTERED_SITES = {
     ("runner.py", "run", "_install_version"),         # view fallback
     ("runner.py", "backfill", "_install_version"),
     ("maintenance.py", "_atomic_rewrite", "_install_version"),
+    ("snapshots.py", "write_snapshot", "_install_version"),
     ("maintenance.py", "_atomic_rewrite", "_atomic_swap_write"),
 }
 
@@ -333,7 +346,7 @@ def test_every_call_site_is_registered():
 
 #: the publish layout's sibling suffixes (``<name><suffix>``), current
 #: and retired
-SIBLING_SUFFIXES = (".staging", ".old", ".prev", ".compacting",
+SIBLING_SUFFIXES = (".staging", ".old", ".log", ".prev", ".compacting",
                     ".precompact")
 SIBLING_PREFIXES = (".v-", ".ln-")
 

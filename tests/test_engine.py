@@ -152,9 +152,7 @@ def test_backfill_rewrites_only_selected_partitions(spark, tmp_path):
 def test_backfill_preserves_reader_snapshot(spark, tmp_path):
     """backfill must stage a NEW version dir and symlink-swap like any
     other write — never mutate the live version dir an in-flight
-    reader resolved (the _install_version guarantee).  Also: snapshot
-    tables refuse (their root is a commit log, not a partition
-    layout)."""
+    reader resolved (the _install_version guarantee)."""
     src = {"rows": [("a", 1), ("b", 10)]}
     r = Registry()
 
@@ -179,14 +177,6 @@ def test_backfill_preserves_reader_snapshot(spark, tmp_path):
     assert {(x.p, x.v)
             for x in spark.read.parquet(str(table_dir)).collect()} \
         == {("a", 99), ("b", 10)}
-
-    @model(r, name="snap", layer="gold", materialization="table",
-           partition_by=("p",), snapshot_keep=3)
-    def snap(ctx):
-        return ctx.spark.createDataFrame(src["rows"], "p string, v long")
-    eng.run(select=["gold.snap"])
-    with pytest.raises(ValueError, match="snapshot_keep"):
-        eng.backfill("gold.snap", "p = 'a'")
 
 
 def test_concurrent_engine_runs_serialize(spark, tmp_path):
@@ -314,3 +304,14 @@ def test_select_graph_operators():
     # '+name' is accepted as an explicit spelling of the default
     explicit = {m.qualified_name for m in r.toposort(["+silver.mid"])}
     assert explicit == plain
+
+
+def test_unknown_selector_is_a_value_error():
+    """A mistyped selector names itself in a ValueError (it used to
+    surface as a bare KeyError from the graph walk)."""
+    r = make_registry()
+    for sel in (["gold.lefty"], ["silver.midd+"], ["silver.mid", "+nope"]):
+        with pytest.raises(ValueError, match="unknown selector"):
+            r.toposort(sel)
+    with pytest.raises(ValueError, match="gold.lefty"):
+        r.levels(["gold.lefty"])

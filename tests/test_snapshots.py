@@ -1,6 +1,8 @@
-"""Snapshot versioning + time travel: immutable versions, atomic
-manifest commit, negative indexing, as-of lookup, vacuum retention,
-and the Engine's snapshot_keep materialization path."""
+"""Snapshot versioning + time travel: immutable versions, the OCC
+commit log, negative indexing, as-of lookup, vacuum retention, and the
+Engine's snapshot_keep tables — ordinary engine tables whose install
+log is their history, so they are path-readable, compactable,
+backfillable and deferred under ``atomic_publish``."""
 
 from __future__ import annotations
 
@@ -128,27 +130,6 @@ def test_concurrent_snapshot_writers_both_commit(spark, tmp_path):
     assert len(cur) == 1
 
 
-def test_legacy_manifest_table_still_readable(spark, tmp_path):
-    """Pre-OCC layout (v=%08d dirs + manifest file, no _commits/) keeps
-    working, and the next OCC write continues its version numbering."""
-    import json
-    from iot_simulator_datalake_spark.engine.snapshots import (
-        read_snapshot, versions, write_snapshot)
-    tbl = tmp_path / "t"
-    (tbl / "v=00000000").mkdir(parents=True)
-    spark.createDataFrame([(1, "old")], ["id", "tag"]) \
-        .write.mode("overwrite").parquet(str(tbl / "v=00000000"))
-    (tbl / "_MANIFEST.json").write_text(json.dumps(
-        {"current": 0, "versions": {"0": {"unix_ts": 1.0}}}))
-
-    assert read_snapshot(spark, tbl, 0).collect()[0]["tag"] == "old"
-    v = write_snapshot(
-        spark.createDataFrame([(2, "new")], ["id", "tag"]), tbl)
-    assert v == 1 and versions(tbl) == [0, 1]
-    assert read_snapshot(spark, tbl).collect()[0]["tag"] == "new"
-    assert read_snapshot(spark, tbl, 0).collect()[0]["tag"] == "old"
-
-
 def test_occ_eight_writer_fuzz(spark, tmp_path):
     """Commit-protocol fuzz: 8 concurrent writers × 2 rounds each must
     yield 16 distinct consecutive versions, each a complete snapshot of
@@ -176,3 +157,114 @@ def test_occ_eight_writer_fuzz(spark, tmp_path):
         rows = read_snapshot(spark, tbl, v).collect()
         assert len(rows) == 50
         assert len({r["tag"] for r in rows}) == 1  # one writer's payload
+
+
+def _tags(df) -> set[str]:
+    return {r["tag"] for r in df.select("tag").distinct().collect()}
+
+
+def test_snapshot_model_reads_its_prior_version(spark, tmp_path):
+    """``ctx.this()`` of a snapshot_keep model is its published table:
+    None before the first run, the previous run's rows on the next."""
+    reg, seen = Registry(), []
+
+    @model(reg, name="t", layer="gold", materialization="table",
+           snapshot_keep=3)
+    def t(ctx):
+        prior = ctx.this()
+        seen.append(None if prior is None else _tags(prior))
+        return _df(ctx.spark, 5, f"run{len(seen)}")
+
+    eng = Engine(spark, reg, warehouse=tmp_path / "wh")
+    eng.run()
+    eng.run()
+    assert seen == [None, {"run1"}]
+
+
+def test_snapshot_table_is_path_readable_and_compactable(spark, tmp_path):
+    """A snapshot_keep=3 table reads by path, compacts, and keeps 3
+    versions through installs that do not come from the model."""
+    from iot_simulator_datalake_spark.engine.maintenance import (
+        compact, table_file_stats)
+    reg, state = Registry(), {"n": 0}
+
+    @model(reg, name="t", layer="gold", materialization="table",
+           snapshot_keep=3)
+    def t(ctx):
+        state["n"] += 1
+        return _df(ctx.spark, 40, f"run{state['n']}").repartition(4)
+
+    eng = Engine(spark, reg, warehouse=tmp_path / "wh")
+    path = eng.table_path(reg["gold.t"])
+    for _ in range(3):
+        eng.run()
+    assert _tags(spark.read.parquet(str(path))) == {"run3"}
+    assert compact(spark, path, target_file_bytes=1 << 30) == 1
+    assert versions(path) == [1, 2, 3]
+    eng.run()
+    assert compact(spark, path, target_file_bytes=1 << 30) == 1
+    assert versions(path) == [3, 4, 5]
+    assert len(list(path.parent.glob("t.v-*"))) == 3
+    assert table_file_stats(path)[0] == 1
+    assert spark.read.parquet(str(path)).count() == 40
+    assert _tags(read_snapshot(spark, path, -2)) == {"run3"}
+
+
+def test_backfill_of_snapshot_model_is_a_new_version(spark, tmp_path):
+    """Backfilling a partitioned snapshot_keep model installs a new
+    version; the pre-backfill table stays readable as version -1."""
+    src = {"rows": [("a", 1), ("b", 10)]}
+    reg = Registry()
+
+    @model(reg, name="snap", layer="gold", materialization="table",
+           partition_by=("p",), snapshot_keep=3)
+    def snap(ctx):
+        return ctx.spark.createDataFrame(src["rows"], "p string, v long")
+
+    eng = Engine(spark, reg, warehouse=tmp_path / "wh")
+    eng.run()
+    src["rows"] = [("a", 99), ("b", 10)]
+    eng.backfill("gold.snap", "p = 'a'")
+    path = eng.table_path(reg["gold.snap"])
+
+    def rows(df):
+        return {(r["p"], r["v"]) for r in df.collect()}
+
+    assert versions(path) == [0, 1]
+    assert rows(read_snapshot(spark, path)) == {("a", 99), ("b", 10)}
+    assert rows(read_snapshot(spark, path, -1)) == {("a", 1), ("b", 10)}
+
+
+def test_failed_atomic_run_leaves_snapshot_versions(spark, tmp_path):
+    """A failing ``run(atomic_publish=True)`` commits no version of a
+    snapshot_keep table: it is deferred like every other table."""
+    reg, state = Registry(), {"tag": "first", "fail": False}
+
+    @model(reg, name="t", layer="gold", materialization="table",
+           snapshot_keep=3)
+    def t(ctx):
+        return _df(ctx.spark, 5, state["tag"])
+
+    @model(reg, name="after", layer="gold", materialization="table",
+           depends_on=("gold.t",))
+    def after(ctx):
+        if state["fail"]:
+            raise RuntimeError("boom")
+        return ctx.ref("gold.t")
+
+    eng = Engine(spark, reg, warehouse=tmp_path / "wh")
+    eng.run(atomic_publish=True)
+    path = eng.table_path(reg["gold.t"])
+    state.update(tag="second", fail=True)
+    with pytest.raises(RuntimeError, match="boom"):
+        eng.run(atomic_publish=True)
+    assert versions(path) == [0]
+    assert _tags(read_snapshot(spark, path)) == {"first"}
+    assert len(list(path.parent.glob("t.v-*"))) == 1
+
+
+def test_snapshot_keep_must_be_positive():
+    from iot_simulator_datalake_spark.engine.model import Model
+    with pytest.raises(ValueError, match="snapshot_keep"):
+        Model(name="t", layer="gold", builder=lambda ctx: None,
+              materialization="table", snapshot_keep=0)

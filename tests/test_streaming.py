@@ -400,7 +400,8 @@ def test_streams_drain_only_through_runner():
     ``streaming/runner.run_stream_available_now``, which raises when the
     query does not drain in time.  A bare ``awaitTermination(t)``
     returns False on a timeout and, if unchecked, lets a caller read a
-    partial sink while the query still runs."""
+    partial sink while the query still runs.  A memory sink is built
+    only by ``streaming/runner.drain_to_memory``."""
     import ast
     from pathlib import Path
 
@@ -413,8 +414,13 @@ def test_streams_drain_only_through_runner():
         if path == runner:
             continue
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
-            if (isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr in ("awaitTermination", "trigger")):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)):
+                continue
+            memory_sink = (node.func.attr == "format" and node.args
+                           and isinstance(node.args[0], ast.Constant)
+                           and node.args[0].value == "memory")
+            if (node.func.attr in ("awaitTermination", "trigger")
+                    or memory_sink):
                 sites.append(f"{path.relative_to(root)}:{node.lineno}")
     assert sites == []

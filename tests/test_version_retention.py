@@ -1,8 +1,8 @@
-"""Bounded, compact lake footprint: version install keeps one deep
-(the current version and the one it replaced, named by ``<name>.prev``)
-and every engine write is zstd parquet.  Each test here fails under
-unbounded retention, snappy writes, or a reclaim that deletes every
-non-current version by glob."""
+"""Bounded, compact lake footprint: version install logs every version
+in the table's commit log and keeps the newest two by default (the
+current version and the one it replaced), and every engine write is
+zstd parquet.  Each test here fails under unbounded retention, snappy
+writes, or a reclaim that deletes every non-current version by glob."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from iot_simulator_datalake_spark.engine import Engine, Registry, model
 from iot_simulator_datalake_spark.engine.publish import (
-    _install_version, new_version_dir, vacuum_table_versions)
+    _install_version, new_version_dir, read_log, vacuum_table_versions)
 from iot_simulator_datalake_spark.pipeline import build_registry
 
 from conftest import write_iot_events
@@ -32,17 +32,26 @@ def _versions(final: Path) -> set[str]:
     return {p.name for p in final.parent.glob(f"{final.name}.v-*")}
 
 
+def _logged(final: Path) -> list[str]:
+    """The version dirs the table's log names, oldest first."""
+    log = read_log(final)
+    return [log[n]["dir"] for n in sorted(log)]
+
+
 def test_staged_version_survives_other_installs(tmp_path):
     """A version dir written but not yet installed (a concurrent
     writer's) survives any number of another writer's installs, and
     installs cleanly afterwards."""
     final = tmp_path / "tbl"
     staged = _version(final, "slow")
+    installed = []
     for tag in ("a", "b", "c"):
-        _install_version(_version(final, tag), final)
+        installed.append(_version(final, tag).name)
+        _install_version(final.with_name(installed[-1]), final)
     assert (staged / "data.txt").read_text() == "slow"
-    assert _versions(final) == {staged.name, os.readlink(final),
-                                os.readlink(tmp_path / "tbl.prev")}
+    assert _logged(final) == installed[1:]
+    assert os.readlink(final) == installed[-1]
+    assert _versions(final) == {staged.name, *installed[1:]}
     _install_version(staged, final)
     assert (final / "data.txt").read_text() == "slow"
 
@@ -81,30 +90,34 @@ def test_atomic_publish_deferral_survives_concurrent_runs(spark, tmp_path):
             .collect()] == [("deferred", 50)]
     assert spark.read.parquet(str(base_p)).select("tag").distinct() \
         .collect()[0]["tag"] == "deferred"
-    assert _versions(base_p) == {os.readlink(base_p),
-                                 os.readlink(wh / "silver" / "base.prev")}
+    assert _versions(base_p) == set(_logged(base_p))
+    assert len(_logged(base_p)) == 2
+    assert _logged(base_p)[-1] == os.readlink(base_p)
 
 
 def test_install_after_vacuum_and_lost_prev_target(tmp_path):
-    """``vacuum_table_versions`` drops the ``.prev`` link with the old
-    versions; installs keep working after it, and after the ``.prev``
-    target was deleted by hand."""
-    final, prev = tmp_path / "tbl", tmp_path / "tbl.prev"
+    """``vacuum_table_versions`` drops the old versions with their log
+    entries; installs keep working after it, and after the previous
+    version's dir was deleted by hand."""
+    final = tmp_path / "tbl"
     for tag in ("a", "b", "c"):
         _install_version(_version(final, tag), final)
     assert len(vacuum_table_versions(final)) == 1
-    assert not os.path.lexists(prev)
+    assert _logged(final) == [os.readlink(final)]
     assert _versions(final) == {os.readlink(final)}
 
     _install_version(_version(final, "d"), final)
+    prev = final.with_name(_logged(final)[0])
     assert (final / "data.txt").read_text() == "d"
     assert (prev / "data.txt").read_text() == "c"
 
-    shutil.rmtree(prev.resolve())
+    shutil.rmtree(prev)
     _install_version(_version(final, "e"), final)
     assert (final / "data.txt").read_text() == "e"
+    prev = final.with_name(_logged(final)[0])
     assert (prev / "data.txt").read_text() == "d"
-    assert _versions(final) == {os.readlink(final), os.readlink(prev)}
+    assert _versions(final) == set(_logged(final)) == {
+        os.readlink(final), prev.name}
 
 
 def test_install_never_reclaims_a_foreign_link_target(tmp_path):
@@ -118,6 +131,62 @@ def test_install_never_reclaims_a_foreign_link_target(tmp_path):
         _install_version(_version(final, tag), final)
     assert external.is_dir()
     assert (final / "data.txt").read_text() == "c"
+
+
+def test_parent_layout_table_stays_bounded(tmp_path):
+    """A table published before the log existed — a symlink plus a
+    ``<name>.prev`` link to the version before — keeps refreshing with
+    two versions: its first install adopts both old versions into the
+    log, so they are reclaimed like any other, and drops ``.prev``."""
+    final, prev = tmp_path / "tbl", tmp_path / "tbl.prev"
+    a, b = _version(final, "a"), _version(final, "b")
+    os.symlink(b.name, final)
+    os.symlink(a.name, prev)
+    for tag in ("c", "d", "e", "f"):
+        _install_version(_version(final, tag), final)
+        assert (final / "data.txt").read_text() == tag
+        assert _versions(final) == set(_logged(final))
+        assert len(_logged(final)) == 2
+    assert not os.path.lexists(prev)
+
+
+def test_racing_installs_never_dangle(tmp_path):
+    """Eight threads (more than cores) install into one table with a
+    1 µs switch interval: the table resolves after every install — a
+    version claimed but not yet linked is never reclaimed by the
+    installs racing past it — and the log never names a missing dir or
+    one dir twice."""
+    import sys
+    import threading
+
+    final, claimed, dangling = tmp_path / "tbl", [], []
+
+    def writer(tag: int) -> None:
+        for r in range(25):
+            claimed.append(_install_version(_version(final, f"{tag}:{r}"),
+                                            final, 2))
+            if not final.exists():
+                dangling.append((tag, r))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer, args=(i,))
+                   for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(claimed) == 200
+    assert dangling == []
+    logged = _logged(final)
+    assert len(logged) == len(set(logged))
+    assert all(final.with_name(d).is_dir() for d in logged)
+    vacuum_table_versions(final)
+    assert _versions(final) == set(_logged(final)) == {os.readlink(final)}
 
 
 def _codecs(path: Path) -> set[str]:
@@ -145,8 +214,7 @@ def test_refreshes_keep_disk_bounded_and_zstd(spark, tmp_path, monkeypatch):
                          start=datetime(2024, 1, 1) + timedelta(days=7 * i))
         eng.run()
 
-    tables = [p for p in wh.rglob("*") if p.is_symlink()
-              and not p.name.endswith(".prev")]
+    tables = [p for p in wh.rglob("*") if p.is_symlink()]
     assert sorted(p.name for p in tables) == [
         "dim_date", "dim_locations", "fact_iot_events"]
     for t in tables:
