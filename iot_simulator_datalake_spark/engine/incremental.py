@@ -9,7 +9,7 @@ micro-batch through ``foreachBatch``:
 
     new_partials = batch.groupBy(keys).agg(partials)
     merged = (old_state ∪ new_partials).groupBy(keys).agg(combine)
-    atomically swap the state table (engine/publish.py's staged swap)
+    install merged as the state table's next version (engine/publish.py)
 
 Derived metrics (avg = sum/count) are computed in the *read view*, never
 stored — so merging stays associative and exactly-once (the foreachBatch
@@ -18,7 +18,10 @@ epoch id guards replays).
 Scale analysis: each refresh shuffles only |batch| + |state| rows where
 |state| = number of groups (bounded by the dimension cross product, not
 by fact rows) — vs. a full recompute shuffling the entire 100 TB fact
-history every run.  With Delta/Iceberg on the classpath the swap becomes
+history every run.  The state is a versioned table like every engine
+table: one commit log, retention depth 2, and a frame from ``read()``
+keeps its version across refreshes until retention reclaims it.
+With Delta/Iceberg on the classpath the install becomes
 a MERGE INTO on the group keys touched by the batch (state rows for
 untouched groups never rewrite); plain parquet rewrites the whole (small)
 state table, which is still O(groups), not O(history).
@@ -32,7 +35,7 @@ from typing import TYPE_CHECKING, Callable, Sequence
 
 from pyspark.sql import functions as F
 
-from .publish import _atomic_swap_write, read_state
+from .publish import _install_version, read_state, write_version
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -80,7 +83,7 @@ class IncrementalAggTable:
 
     def _last_epoch(self) -> int | None:
         """Epoch id folded into the CURRENT state (travels inside the
-        state dir so the epoch swaps atomically with the data)."""
+        version dir, so it is installed atomically with the data)."""
         marker = self.path / "_epoch"
         if not marker.exists():
             return None
@@ -91,14 +94,12 @@ class IncrementalAggTable:
 
     def _write_state(self, df: "DataFrame",
                      epoch_id: int | None = None) -> None:
-        # shared staged swap with crash-window recovery (engine/
-        # publish.py); the _epoch replay guard is written via finalize
-        # so it swaps atomically WITH the data
-        def _mark(tmp: Path) -> None:
-            if epoch_id is not None:
-                (tmp / "_epoch").write_text(str(epoch_id))
-
-        _atomic_swap_write(df, self.path, finalize=_mark)
+        # the _epoch replay guard goes into the version dir before its
+        # install, so it becomes visible exactly WITH the data
+        vdir = write_version(df, self.path)
+        if epoch_id is not None:
+            (vdir / "_epoch").write_text(str(epoch_id))
+        _install_version(vdir, self.path)
 
     # -- refresh ----------------------------------------------------------
 
@@ -108,34 +109,32 @@ class IncrementalAggTable:
         directly with a batch DataFrame.
 
         Replay guard (the exactly-once half foreachBatch leaves to the
-        sink): if the stream restarts after the state swap committed
+        sink): if the stream restarts after the state install committed
         but before the streaming checkpoint did, the SAME epoch is
         re-delivered — folding it again would double-count every group
         in the batch.  The last-applied epoch travels inside the state
         dir, so an ``epoch_id`` ≤ it is dropped idempotently.  Direct
         batch callers that pass no epoch_id opt out (their retries are
         their own)."""
+        # read the state first: it adopts an older layout's state dir,
+        # whose _epoch marker the guard below must see
+        state = read_state(self.spark, self.path)
+        last = self._last_epoch()
         if epoch_id is not None:
-            last = self._last_epoch()
             if last is not None and epoch_id <= last:
                 return
         else:
             # A direct batch refresh must not ERASE the replay guard: if
-            # the new state dir dropped the _epoch marker, a stream
+            # the new version dropped the _epoch marker, a stream
             # restart re-delivering the last epoch would fold it again
             # and double-count.  Carry the prior marker forward.
-            epoch_id = self._last_epoch()
+            epoch_id = last
         partials = batch.groupBy(*self.keys).agg(
             *[m.partial().alias(m.name) for m in self.metrics])
-        state = read_state(self.spark, self.path)
         if state is not None:
             partials = state.unionByName(partials)
         merged = partials.groupBy(*self.keys).agg(
             *[m.combine(m.name).alias(m.name) for m in self.metrics])
-        # localCheckpoint breaks the lineage to the state files we are
-        # about to replace (reading and overwriting the same path in one
-        # plan is undefined), at the cost of materializing O(groups) rows.
-        merged = merged.localCheckpoint(eager=True)
         self._write_state(merged, epoch_id)
 
     def read(self) -> "DataFrame":

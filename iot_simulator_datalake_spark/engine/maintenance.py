@@ -12,14 +12,14 @@ streaming table's own directory is refused (see
 :func:`_refuse_streaming_table`): its ``_spark_metadata`` sink log is
 the table's file list, and a rewrite without it wedges the next
 refresh.  Rewrites publish through engine/publish.py, like every other
-table write: engine-managed (symlink) tables as a new logged version
-dir — the install keeps the table's retention depth (its model's
-``snapshot_keep``, recorded in the log; 2 by default), so older
-versions stay readable for in-flight readers and time travel and the
-ones beyond the depth are reclaimed (``publish.vacuum_table_versions``
-drops all but the current one once readers are quiet) — and plain
-directories through the shared staged swap, whose crash recovery
-every entry point runs first.
+table write, as a new logged version dir.  The install keeps the
+table's retention depth (its model's ``snapshot_keep``, recorded in
+the log; 2 by default), so older versions stay readable for in-flight
+readers and time travel and the ones beyond the depth are reclaimed
+(``publish.vacuum_table_versions`` drops all but the current one once
+readers are quiet).  A plain directory is adopted as the table's first
+version by its first rewrite, and is a path-readable versioned table
+from then on.
 """
 
 from __future__ import annotations
@@ -27,8 +27,7 @@ from __future__ import annotations
 from pathlib import Path
 from typing import TYPE_CHECKING
 
-from .publish import (_atomic_swap_write, _install_version,
-                      _restore_crashed_swap, new_version_dir)
+from .publish import _install_version, adopt_orphan, write_version
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import SparkSession
@@ -49,9 +48,7 @@ def compact(spark: "SparkSession", path: str | Path,
     merges — it never needs to redistribute rows.  Partitioned tables
     compact per-partition automatically (coalesce preserves the
     partition columns through the rewrite's partitionBy discovery)."""
-    src = Path(path)
-    _refuse_streaming_table(src)
-    _restore_crashed_swap(src)
+    src = _source(path)
     n_files, total = table_file_stats(src)
     n_target = max(1, -(-total // target_file_bytes))
     if n_files <= n_target:
@@ -81,9 +78,7 @@ def cluster(spark: "SparkSession", path: str | Path, cols: list[str],
     size-balanced even under heavy key skew — a hash partitioner
     would put one hot key's whole mass in one file.
     """
-    src = Path(path)
-    _refuse_streaming_table(src)
-    _restore_crashed_swap(src)
+    src = _source(path)
     _, total = table_file_stats(src)
     n_target = max(1, -(-total // target_file_bytes))
     df = spark.read.parquet(str(src))
@@ -91,6 +86,16 @@ def cluster(spark: "SparkSession", path: str | Path, cols: list[str],
                  .sortWithinPartitions(*cols))
     _atomic_rewrite(src, clustered)
     return table_file_stats(src)[0]
+
+
+def _source(path: str | Path) -> Path:
+    """``path`` as a table to rewrite: a plain dir whose conversion a
+    crash cut short is renamed back (:func:`publish.adopt_orphan`), and
+    a streaming table is refused."""
+    src = Path(path)
+    adopt_orphan(src)
+    _refuse_streaming_table(src)
+    return src
 
 
 def _refuse_streaming_table(src: Path) -> None:
@@ -107,24 +112,14 @@ def _refuse_streaming_table(src: Path) -> None:
 
 
 def _atomic_rewrite(src: Path, df) -> None:
-    """Rewrite ``src`` from ``df``, preserving hive-style partition
-    columns.  An engine-managed table (a symlink) gets a new version
-    dir and a retargeted link, so the path resolves at every instant;
-    a plain directory is rewritten in place by the staged swap (it must
-    stay a real dir: ``stage_once`` layouts are read by path)."""
+    """Rewrite ``src`` from ``df`` as a new version dir and a retargeted
+    link, preserving hive-style partition columns, so the path resolves
+    at every instant (a plain directory becomes the replaced version)."""
     part_cols = sorted({seg.split("=", 1)[0]
                         for p in src.rglob("*.parquet")
                         for seg in p.relative_to(src).parts[:-1]
                         if "=" in seg})
-    if not src.is_symlink():
-        _atomic_swap_write(df, src, partition_by=part_cols)
-        return
-    vdir = new_version_dir(src)
-    writer = df.write
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(str(vdir))
-    _install_version(vdir, src)
+    _install_version(write_version(df, src, part_cols), src)
 
 
 def _morton_key(cols: list[str], bits: int = 16):
@@ -171,9 +166,7 @@ def zorder(spark: "SparkSession", path: str | Path, cols: list[str],
     """
     from pyspark.sql import functions as F
 
-    src = Path(path)
-    _refuse_streaming_table(src)
-    _restore_crashed_swap(src)
+    src = _source(path)
     _, total = table_file_stats(src)
     n_target = max(1, -(-total // target_file_bytes))
     df = spark.read.parquet(str(src))

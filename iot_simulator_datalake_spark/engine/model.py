@@ -17,6 +17,8 @@ from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 from typing import TYPE_CHECKING, Any
 
+from .publish import read_state
+
 if TYPE_CHECKING:  # pragma: no cover
     from pathlib import Path
 
@@ -129,8 +131,7 @@ class ModelContext:
     def this(self) -> "DataFrame | None":
         """``{{ this }}``: this model's currently published table, or
         ``None`` before its first run."""
-        path = self._engine.table_path(self.model)
-        return self.spark.read.parquet(str(path)) if path.exists() else None
+        return read_state(self.spark, self._engine.table_path(self.model))
 
     def state_path(self, kind: str) -> "Path":
         """This model's ``kind`` state file under the warehouse (see

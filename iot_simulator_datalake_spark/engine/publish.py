@@ -1,24 +1,26 @@
 """Table publication: how a rewritten table becomes visible and how a
 crash midway heals.  The only module that knows the on-disk publish
 layout.  Siblings are named from the table's FULL name
-(``<name>.v-<8 hex>``, ``.log``, ``.ln-<hex>``, ``.staging``,
-``.old``), so tables sharing a stem never share one.
+(``<name>.v-<8 hex>``, ``.log``, ``.ln-<hex>``), so tables sharing a
+stem never share one.
 
-- **version install** (engine tables): write a :func:`new_version_dir`,
-  then :func:`_install_version` records it in the table's commit log
-  (``<name>.log/NNNNNNNN.json``) and retargets the table's symlink.
-  The log is the table's history: ``engine/snapshots.py`` reads
-  versions, time travel and diffs from it, and each install reclaims
-  the logged versions beyond the table's retention depth, so disk
-  stays bounded over any number of refreshes.  A version dir the log
-  never named is never touched.
-- **staged swap** (state tables, plain dirs such as ``stage_once``
-  layouts, which must stay real dirs): :func:`_atomic_swap_write`;
-  every reader and writer first runs :func:`_restore_crashed_swap`.
+One protocol for every table rewrite in the package — engine models,
+backfills, snapshots, maintenance rewrites and the state tables of
+operators/scd.py and engine/incremental.py: :func:`write_version`
+writes a fresh version dir, then :func:`_install_version` records it
+in the table's commit log (``<name>.log/NNNNNNNN.json``) and
+retargets the table's symlink.  The log is the table's history:
+``engine/snapshots.py`` reads versions, time travel and diffs from it,
+and each install reclaims the logged versions beyond the table's
+retention depth, so disk stays bounded over any number of refreshes.
+A version dir the log never named is never touched.  A plain
+directory (an older layout, or a table written by path) is adopted as
+the first version by its first install.  :func:`read_state` is the one
+reader for "the published table or None".
 
 ``_STEP_HOOK`` is the crash seam (tests/test_crash_injection.py):
-called after each externally visible step of both protocols; always
-None in production.
+called after each externally visible step of the install; always None
+in production.
 """
 
 from __future__ import annotations
@@ -53,6 +55,19 @@ def _sibling(path: Path, suffix: str) -> Path:
 def new_version_dir(path: Path) -> Path:
     """A fresh ``<table>.v-<8 hex>`` dir name beside ``path``."""
     return _sibling(path, f".v-{uuid.uuid4().hex[:8]}")
+
+
+def write_version(df: "DataFrame", path: Path,
+                  partition_by: Sequence[str] = ()) -> Path:
+    """Write ``df`` as a fresh version dir of the table at ``path``
+    (optionally hive-partitioned) and return it, not yet installed:
+    the caller hands it to :func:`_install_version`, now or later."""
+    vdir = new_version_dir(path)
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(str(vdir))
+    return vdir
 
 
 def _link_target(link: Path) -> str | None:
@@ -117,6 +132,7 @@ def _append_log(final: Path, name: str, replaced: str | None,
             n += 1
             continue
         with os.fdopen(fd, "w") as fh:
+            _step("install:claimed")    # read_log skips an empty entry
             fh.write(payload)
         return n
 
@@ -190,18 +206,22 @@ def _install_version(vdir: Path, final: Path,
     writer stalled between reading the log and its claim while more
     than ``keep`` installs complete can claim a reclaimed number.
 
-    Migration: if ``final`` is a real directory from an older layout,
-    it is renamed to ``<name>.v-legacy`` first (readers of the path
-    itself see one brief ENOENT window during this one-time
-    conversion).  The first install into a table without a log adopts
-    the versions the older layout kept — the replaced version and the
-    target of the retired ``<name>.prev`` link — as its first entries,
-    so they are reclaimed like any other.
+    Migration: if ``final`` is a real directory (an older layout, or a
+    table written by path), it is renamed to ``<name>.v-legacy`` and
+    linked there first, so it becomes the version this install
+    replaces.  Readers of the path see ENOENT only between those two
+    calls; a crash there leaves no path, which the next install or
+    :func:`adopt_orphan` (run by every reader and rewriter) heals.  The first install into a table without
+    a log adopts the versions the older layout kept — the replaced
+    version and the target of the retired ``<name>.prev`` link — as
+    its first entries, so they are reclaimed like any other.
     """
     legacy = _sibling(final, ".v-legacy")
     if final.exists() and not final.is_symlink():
         try:
             os.rename(final, legacy)
+            _step("install:legacy-moved")
+            os.symlink(legacy.name, final)
         except OSError:
             pass                    # another writer already converted it
     _step("install:legacy-converted")
@@ -233,14 +253,20 @@ def _install_version(vdir: Path, final: Path,
 
 def vacuum_table_versions(path: str | Path) -> list[str]:
     """Delete every ``<table>.v-*`` version dir the current symlink does
-    not target, and the log entries naming them.  Call only when no
-    reader may still hold an older version and no writer is staging
+    not target, the log entries naming them, and any ``<table>.ln-*``
+    temp link an install killed before its rename left.  Call only when
+    no reader may still hold an older version and no writer is staging
     one — same contract as Delta VACUUM with retention 0."""
     final = Path(path)
     current = _link_target(final)
-    for n, e in read_log(final).items():
-        if e["dir"] != current:
-            _entry(_sibling(final, ".log"), n).unlink(missing_ok=True)
+    for p in final.parent.glob(f"{final.name}.ln-*"):
+        p.unlink(missing_ok=True)
+    entries = read_log(final)
+    for f in _sibling(final, ".log").glob("*.json"):
+        # an entry a killed install claimed but never wrote reads as none
+        e = entries.get(int(f.stem)) if f.stem.isdigit() else None
+        if e is None or e["dir"] != current:
+            f.unlink(missing_ok=True)
     dropped = []
     for p in final.parent.glob(f"{final.name}.v-*"):
         if p.name != current:
@@ -249,61 +275,23 @@ def vacuum_table_versions(path: str | Path) -> list[str]:
     return dropped
 
 
-def _restore_crashed_swap(path: Path) -> None:
-    """Recover from a crash INSIDE a previous staged swap: between
-    moving the live dir to ``.old`` and promoting the stage, the only
-    complete copy of the state lives at ``.old``.  Readers and writers
-    call this first — without it, the next write would ``rmtree(.old)``
-    the sole surviving copy and silently rebuild the state from one
-    batch (total tombstone/history loss)."""
-    old = _sibling(path, ".old")
-    if not (path / "_SUCCESS").exists() and (old / "_SUCCESS").exists():
-        shutil.rmtree(path, ignore_errors=True)  # absent or incomplete
-        old.rename(path)
-
-
-def _atomic_swap_write(df: "DataFrame", path: Path, finalize=None,
-                       partition_by: Sequence[str] = ()) -> None:
-    """Write ``df`` over the dir at ``path`` via the staged-rename
-    protocol (stage → move live to .old → promote stage → drop .old),
-    with crash-window recovery on entry.  ONE definition shared by the
-    state tables (operators/scd.py, engine/incremental.py) and
-    maintenance's plain-dir rewrites — the swap's failure modes are
-    subtle enough that drifting copies were themselves review
-    findings, twice.  ``finalize(tmp_dir)`` runs after the stage is
-    fully written and before it is promoted — for markers that must
-    swap atomically WITH the data (e.g. the incremental tables'
-    ``_epoch`` replay guard).  ``partition_by`` writes the stage
-    hive-partitioned."""
-    _restore_crashed_swap(path)
-    _step("swap:restored")
-    tmp = _sibling(path, ".staging")
-    shutil.rmtree(tmp, ignore_errors=True)
-    _step("swap:stage-cleared")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(str(tmp))
-    _step("swap:staged")
-    if finalize is not None:
-        finalize(tmp)
-    _step("swap:finalized")
-    old = _sibling(path, ".old")
-    shutil.rmtree(old, ignore_errors=True)
-    _step("swap:old-cleared")
-    if path.exists():
-        path.rename(old)
-    _step("swap:live-moved")
-    tmp.rename(path)
-    _step("swap:promoted")
-    shutil.rmtree(old, ignore_errors=True)
-    _step("swap:old-dropped")
+def adopt_orphan(path: Path) -> None:
+    """Rename back a table dir with no path beside it: ``<name>.old``,
+    where the retired staged swap left a state table it crashed midway
+    through, or a ``.v-legacy`` dir whose conversion crashed before its
+    link."""
+    for orphan in (_sibling(path, ".old"), _sibling(path, ".v-legacy")):
+        if not os.path.lexists(path) and (orphan / "_SUCCESS").exists():
+            orphan.rename(path)
 
 
 def read_state(spark: "SparkSession", path: Path) -> "DataFrame | None":
-    """The state table at ``path`` after crash recovery, or None if no
-    complete state was ever published."""
-    _restore_crashed_swap(path)
-    if not (path / "_SUCCESS").exists():
+    """The table published at ``path``, or None if none ever was.  The
+    link is resolved once, so the frame reads that version even after
+    later installs, until retention reclaims it.  An orphaned table dir
+    is adopted first (:func:`adopt_orphan`)."""
+    adopt_orphan(path)
+    target = path.resolve()
+    if not (target / "_SUCCESS").exists():
         return None
-    return spark.read.parquet(str(path))
+    return spark.read.parquet(str(target))

@@ -50,7 +50,8 @@ from typing import TYPE_CHECKING, Any
 
 from .checks import Check, CheckResult, count_violations
 from .model import Model, ModelContext, Registry
-from .publish import DEFAULT_KEEP, _install_version, new_version_dir
+from .publish import (DEFAULT_KEEP, _install_version, new_version_dir,
+                      write_version)
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -200,13 +201,13 @@ class Engine:
                 _enforce_contract(m, df)
             if m.materialization == "table":
                 path = self.table_path(m)
-                writer = df.write.mode("overwrite")
-                if m.partition_by:
-                    writer = writer.partitionBy(*m.partition_by)
                 if m.bucket_by:
                     # bucketed sink: catalog table (bucket metadata lives
                     # in the catalog); joins/aggs on the bucket cols then
                     # skip the shuffle entirely (co-located join)
+                    writer = df.write.mode("overwrite")
+                    if m.partition_by:
+                        writer = writer.partitionBy(*m.partition_by)
                     n, *cols = m.bucket_by
                     db = m.schema or m.layer
                     self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
@@ -222,8 +223,7 @@ class Engine:
                     # the table symlink: concurrent engine.run()s
                     # serialize to complete snapshots and in-flight
                     # readers keep theirs (see _install_version)
-                    vdir = new_version_dir(path)
-                    writer.parquet(str(vdir))
+                    vdir = write_version(df, path, m.partition_by)
                     keep = m.snapshot_keep or DEFAULT_KEEP
                     if deferred is None:
                         _install_version(vdir, path, keep)

@@ -25,8 +25,8 @@ from __future__ import annotations
 from pathlib import Path
 from typing import TYPE_CHECKING
 
-from .publish import (_install_version, new_version_dir, read_log,
-                      reclaim_versions)
+from .publish import (_install_version, read_log, reclaim_versions,
+                      write_version)
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -40,12 +40,8 @@ def write_snapshot(df: "DataFrame", table: str | Path, *,
     (≥1) retains the newest N versions from this commit on; None keeps
     every version."""
     table = Path(table)
-    vdir = new_version_dir(table)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(str(vdir))
-    return _install_version(vdir, table, keep=keep or 0)
+    return _install_version(write_version(df, table, partition_by), table,
+                            keep=keep or 0)
 
 
 def read_snapshot(spark: "SparkSession", table: str | Path,

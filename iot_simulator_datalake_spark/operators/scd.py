@@ -2,8 +2,10 @@
 README_DBT.md:103,171-182,242-244 — "CDC deduplication with
 ROW_NUMBER()", soft deletes via ``_is_deleted``), plus the continuously
 maintained variant (⇔ DLT ``APPLY CHANGES INTO``).  The stored state
-tables publish through engine/publish.py's staged swap and read back
-through its crash-recovering ``read_state``."""
+tables are versioned tables like every engine table: each fold writes
+a new version and installs it (engine/publish.py), and ``read_state``
+reads the published one, so a frame from ``read()`` keeps its version
+while the state refreshes, until retention reclaims it."""
 
 from __future__ import annotations
 
@@ -13,7 +15,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..engine.publish import _atomic_swap_write, read_state
+from ..engine.publish import _install_version, read_state, write_version
 from .dedup import window_dedup
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -75,9 +77,7 @@ class ApplyChanges:
         if self.tiebreak:
             order.append(F.col(self.tiebreak).desc())
         current = window_dedup(merged, [self.key], order)
-        current = current.localCheckpoint(eager=True)  # break lineage to
-        # the files replaced below
-        _atomic_swap_write(current, self.path)
+        _install_version(write_version(current, self.path), self.path)
 
     def read(self, include_deleted: bool = False) -> DataFrame:
         state = read_state(self.spark, self.path)
@@ -140,7 +140,7 @@ class SnapshotTable:
     one join of source against OPEN versions on the unique key + one
     union — O(source + open-versions); closed history is written back
     untouched (at lake scale the closed partition append-only splits
-    out, same shape).  Atomic swap via a staged dir rename.
+    out, same shape).  Each run installs a new version of the state.
     """
 
     def __init__(self, spark: "SparkSession", path, *, unique_key: str,
@@ -157,7 +157,7 @@ class SnapshotTable:
         self.updated_at, self.check_cols = updated_at, check_cols or []
 
     def _write(self, df: "DataFrame") -> None:
-        _atomic_swap_write(df, self.path)
+        _install_version(write_version(df, self.path), self.path)
 
     def run(self, source: "DataFrame") -> None:
         src = source.withColumn("dbt_valid_from", F.col(self.updated_at)) \
@@ -165,7 +165,7 @@ class SnapshotTable:
                                 F.lit(None).cast("timestamp"))
         state = read_state(self.spark, self.path)
         if state is None:
-            self._write(src.localCheckpoint(eager=True))
+            self._write(src)
             return
         closed = state.filter(F.col("dbt_valid_to").isNotNull())
         open_ = state.filter(F.col("dbt_valid_to").isNull())
@@ -205,7 +205,7 @@ class SnapshotTable:
             .select(*[F.col(f"s.{c}").alias(c) for c in cols])
         new_state = closed.unionByName(keep).unionByName(close) \
                           .unionByName(opened)
-        self._write(new_state.localCheckpoint(eager=True))
+        self._write(new_state)
 
     def read(self, current_only: bool = False) -> "DataFrame":
         state = read_state(self.spark, self.path)

@@ -1655,8 +1655,8 @@ def incremental_bigram_lm_equals_batch(spark: "SparkSession", sf_dir: str
                                        ) -> "DataFrame":
     """Incremental LM-model maintenance invariant: fold the corpus's
     bigram counts in TWO batches through ``IncrementalAggTable``
-    (mergeable count partials at (prev, cur) granularity, atomic state
-    swap), inject the merged model into the scorer — the result must
+    (mergeable count partials at (prev, cur) granularity, one installed
+    state version per refresh), inject the merged model into the scorer — the result must
     hash-equal the one-shot model (the batch oracle).  This is how the
     perplexity filter stays cheap on a growing corpus: new documents
     merge count partials (O(batch + model)), they never retrain

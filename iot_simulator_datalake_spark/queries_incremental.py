@@ -36,8 +36,9 @@ FROM events GROUP BY event_type
 def incremental_rollup_equals_batch(spark: "SparkSession",
                                     sf_dir: str) -> "DataFrame":
     """Incremental MV maintenance invariant: fold events in two batches
-    through IncrementalAggTable (mergeable decimal partials, atomic
-    state swap) — the merged state must hash-equal the one-shot SQL."""
+    through IncrementalAggTable (mergeable decimal partials, one
+    installed state version per refresh) — the merged state must
+    hash-equal the one-shot SQL."""
     e = load(spark, sf_dir, "events")
     t = IncrementalAggTable(
         spark, scratch("inc_rollup_") + "/state",

@@ -55,16 +55,21 @@ def data_skipping_scan(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     aggregate runs over ~range/table_range of the data.
     """
     from .engine.maintenance import cluster
+    from .engine.publish import vacuum_table_versions
     from .engine.skipping import build_stats_manifest, scan_with_skipping
 
     e = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
 
     def _build(work: Path) -> None:
-        e.repartition(8).write.mode("overwrite").parquet(str(work))
-        cluster(spark, work, ["user_id"], target_file_bytes=64 * 1024)
-        build_stats_manifest(work, ["user_id"])
+        # one level down: the table's link, log and versions then live
+        # (and are garbage-collected) inside the staged dir
+        table = work / "events"
+        e.repartition(8).write.mode("overwrite").parquet(str(table))
+        cluster(spark, table, ["user_id"], target_file_bytes=64 * 1024)
+        vacuum_table_versions(table)    # nothing reads it yet
+        build_stats_manifest(table, ["user_id"])
 
-    work = _stage_once(sf_dir, "events", "skip_scan", _build)
+    work = _stage_once(sf_dir, "events", "skip_scan", _build) / "events"
     df, n_read, n_total = scan_with_skipping(
         spark, work, "user_id", lo=_SKIP_LO, hi=_SKIP_HI)
     if n_total >= 4 and n_read * 2 > n_total:
@@ -294,18 +299,21 @@ def zorder_second_dim_scan(spark: "SparkSession", sf_dir: str) -> "DataFrame":
     and every dimension gets sub-linear scans.
     """
     from .engine.maintenance import zorder
+    from .engine.publish import vacuum_table_versions
     from .engine.skipping import build_stats_manifest, scan_with_skipping
 
     e = load(spark, sf_dir, "events").select(
         "event_id", "user_id",
         F.round(F.col("value") * 100).cast("long").alias("value_cents"))
     def _build(work: Path) -> None:
-        e.repartition(8).write.mode("overwrite").parquet(str(work))
-        zorder(spark, work, ["user_id", "value_cents"],
+        table = work / "events"     # one level down, as data_skipping_scan
+        e.repartition(8).write.mode("overwrite").parquet(str(table))
+        zorder(spark, table, ["user_id", "value_cents"],
                target_file_bytes=48 * 1024)
-        build_stats_manifest(work, ["user_id", "value_cents"])
+        vacuum_table_versions(table)
+        build_stats_manifest(table, ["user_id", "value_cents"])
 
-    work = _stage_once(sf_dir, "events", "zorder_scan", _build)
+    work = _stage_once(sf_dir, "events", "zorder_scan", _build) / "events"
     df, n_read, n_total = scan_with_skipping(
         spark, work, "value_cents", lo=_ZO["lo"], hi=_ZO["hi"])
     if n_total >= 6 and n_read >= n_total:

@@ -53,7 +53,7 @@ RUNTIME_CONFS = {
     # wall-clock values match the DuckDB oracle's naive timestamps.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     # Every parquet write inherits this codec (no write sets its own):
-    # streaming sinks, version dirs, staged swaps, stage_once layouts.
+    # streaming sinks, version dirs, stage_once layouts.
     # zstd, because on the same bronze and silver batches its files are
     # 18-47 % smaller than snappy's (the smaller share on small
     # micro-batches), and warehouse bytes are the lake's footprint.

@@ -143,18 +143,25 @@ def test_snapshot_null_updated_at_keeps_history(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["v"] == "a"   # key survived, unchanged
 
 
-def test_swap_crash_window_recovers_state(spark, tmp_path):
-    """If a previous atomic swap crashed between live→.old and
-    staging→live, the next run must RESTORE .old — not rmtree the only
-    surviving copy and rebuild the state from one batch."""
-    from iot_simulator_datalake_spark.operators.scd import ApplyChanges
+@pytest.mark.parametrize("layout", ["live", "mid-swap"])
+def test_apply_adopts_parent_layout_state(spark, tmp_path, layout):
+    """State the retired staged swap left is read and folded by the next
+    apply, tombstones intact: a real dir holding ``_SUCCESS``, or — from
+    a swap killed between moving the live dir aside and promoting its
+    stage — only ``<name>.old`` (and the never-promoted ``.staging``,
+    which holds no committed state)."""
+    schema = "k int, ts int, _is_deleted boolean"
     path = tmp_path / "state"
+    prior = spark.createDataFrame([(1, 10, False), (2, 10, True)], schema)
+    if layout == "live":
+        prior.write.parquet(str(path))
+    else:
+        prior.write.parquet(str(tmp_path / "state.old"))
+        spark.createDataFrame([(9, 15, False)], schema) \
+            .write.parquet(str(tmp_path / "state.staging"))
     ac = ApplyChanges(spark, path, key="k", order_col="ts")
-    ac.apply(spark.createDataFrame([(1, 10, False), (2, 10, False)],
-                                   "k int, ts int, _is_deleted boolean"))
-    # simulate the crash window: live moved aside, promote never ran
-    path.rename(path.with_suffix(".old"))
-    ac.apply(spark.createDataFrame([(3, 20, False)],
-                                   "k int, ts int, _is_deleted boolean"))
-    keys = sorted(r["k"] for r in ac.read().collect())
-    assert keys == [1, 2, 3]          # old state recovered, not lost
+    # k=2's tombstone (ts 10) outranks this older update (ts 5)
+    ac.apply(spark.createDataFrame([(3, 20, False), (2, 5, False)], schema))
+    assert sorted(r["k"] for r in ac.read().collect()) == [1, 3]
+    assert path.is_symlink()
+    assert not (tmp_path / "state.old").exists()

@@ -1,56 +1,72 @@
 """Generalized crash-injection harness (VERDICT r7 #6): three review
-rounds in a row found crash-window/atomicity bugs in the staged-swap
-and version-install protocols, each discovered by hand-simulating ONE
-window.  Both protocols live in engine/publish.py, the only module
-that knows the publish layout.  This harness kills them AFTER EVERY
-externally visible step (via publish's ``_STEP_HOOK`` seam) — directly,
-and through maintenance's ``compact`` on a plain partitioned dir — and
-asserts the two healing invariants after each kill:
+rounds in a row found crash-window/atomicity bugs in the table
+publication protocols, each discovered by hand-simulating ONE window.
+Every table rewrite in the package now goes through one protocol, the
+version install of engine/publish.py (``write_version`` +
+``_install_version``), the only module that knows the publish layout.
+This harness kills it AFTER EVERY externally visible step (via
+publish's ``_STEP_HOOK`` seam) — directly, and through the writers that
+use it: ``ApplyChanges.apply``, ``IncrementalAggTable.refresh`` and
+maintenance's ``compact`` on a plain partitioned dir — and asserts the
+two healing invariants after each kill:
 
-- **read healing**: a reader that runs the entry-recovery
-  (``_restore_crashed_swap`` / symlink resolution) sees a COMPLETE
-  state — the old one before the commit point, the new one after it,
-  never a partial or missing one; the incremental tables' finalize
-  marker moves atomically WITH the data.
-- **write healing**: the next writer completes normally and leaves no
-  protocol debris (``.old`` / ``.staging``).
+- **read healing**: a reader of the table path sees a COMPLETE state —
+  the old one before the commit point (``install:replaced``), the new
+  one from it on, never a partial one, and a missing one only in the
+  one-time conversion of a plain dir (``install:legacy-moved``) until
+  the next reader or rewriter renames the dir back; the incremental
+  tables' ``_epoch`` marker moves atomically WITH the data.
+- **write healing**: the next writer completes normally, and
+  ``vacuum_table_versions`` then leaves no protocol debris.
 
-The registration test enumerates every ``_atomic_swap_write`` /
-``_install_version`` call site in the package by AST: a future call
-site must be added to ``REGISTERED_SITES`` here — which is the
-reviewer's cue that it inherits this harness's guarantees (the
-protocol is what's crash-safe; a site is safe iff it calls the shared
-protocol and recovers on entry).  The source guard keeps the publish
-layout's sibling names and the seam inside engine/publish.py."""
+The registration test enumerates every ``_install_version`` call site
+in the package by AST: a future call site must be added to
+``REGISTERED_SITES`` here — the cue to check that it inherits this
+harness's guarantees (the protocol is what's crash-safe;
+a site is safe iff it installs a complete version dir through it).
+The source guards keep the publish layout's sibling names and the seam
+inside engine/publish.py, and the retired staged swap out of the
+package."""
 
 from __future__ import annotations
 
 import ast
-import os
+import inspect
 import pathlib
+import shutil
 
 import pytest
 
 from iot_simulator_datalake_spark.engine import publish
+from iot_simulator_datalake_spark.engine.incremental import (
+    IncrementalAggTable, mergeable_metrics)
 from iot_simulator_datalake_spark.engine.maintenance import (
     compact, table_file_stats)
 from iot_simulator_datalake_spark.engine.publish import (
-    _atomic_swap_write, _install_version, _restore_crashed_swap)
+    _install_version, vacuum_table_versions)
+from iot_simulator_datalake_spark.operators.scd import ApplyChanges
 
 from conftest import write_iot_events
 
 PKG = pathlib.Path(publish.__file__).resolve().parent.parent
 
-SWAP_STEPS = ["swap:restored", "swap:stage-cleared", "swap:staged",
-              "swap:finalized", "swap:old-cleared", "swap:live-moved",
-              "swap:promoted", "swap:old-dropped"]
-#: steps strictly before the commit point (tmp.rename(path)): a crash
-#: there must heal to the OLD state; at/after it, to the NEW state.
-SWAP_PRE_COMMIT = set(SWAP_STEPS[:6])
+INSTALL_STEPS = ["install:legacy-moved", "install:legacy-converted",
+                 "install:adopted", "install:claimed", "install:logged",
+                 "install:tmp-linked", "install:replaced",
+                 "install:reclaimed"]
+#: an install into a linked table converts nothing, so it never
+#: reaches the step between the plain dir's rename and its link
+LINKED_STEPS = [s for s in INSTALL_STEPS if s != "install:legacy-moved"]
+#: (legacy_start, step): every step an install from either layout
+#: reaches
+LAYOUT_STEPS = ([(False, s) for s in LINKED_STEPS]
+                + [(True, s) for s in INSTALL_STEPS])
 
-INSTALL_STEPS = ["install:legacy-converted", "install:adopted",
-                 "install:logged", "install:tmp-linked",
-                 "install:replaced", "install:reclaimed"]
+
+def _committed(step: str) -> bool:
+    """A kill at or after ``install:replaced`` lands after the commit
+    point (the link's rename)."""
+    return INSTALL_STEPS.index(step) >= INSTALL_STEPS.index("install:replaced")
 
 
 class SimulatedCrash(RuntimeError):
@@ -73,61 +89,112 @@ def _rows(spark, path) -> set:
     return {tuple(r) for r in spark.read.parquet(str(path)).collect()}
 
 
-@pytest.mark.parametrize("step", SWAP_STEPS)
-def test_swap_kill_at_every_step(spark, tmp_path, step, kill_at):
-    path = tmp_path / "state"
-    old = spark.createDataFrame([(1, "a")], "k int, v string")
-    new = spark.createDataFrame([(2, "b")], "k int, v string")
-    _atomic_swap_write(old, path)
+def _assert_vacuumed(path: pathlib.Path) -> None:
+    """After ``vacuum_table_versions`` the table is its link, its log
+    and one version dir, nothing else, and the log is the one entry
+    naming that version (a claimed-but-unwritten entry goes too)."""
+    vacuum_table_versions(path)
+    names = sorted(p.name for p in path.parent.iterdir())
+    assert names[:2] == [path.name, f"{path.name}.log"], names
+    assert len(names) == 3 and names[2].startswith(f"{path.name}.v-"), names
+    entries = list((path.parent / names[1]).iterdir())
+    assert len(entries) == 1, entries
+    assert [e["dir"] for e in publish.read_log(path).values()] == [names[2]]
 
+
+@pytest.mark.parametrize("step", LINKED_STEPS)
+def test_apply_changes_kill_at_every_step(spark, tmp_path, step, kill_at):
+    """ApplyChanges installs each fold as a new version: a kill at any
+    step leaves the previous state before the commit point and the new
+    one from it on, and the next apply (the stream's redelivery of the
+    killed batch) folds the full state."""
+    path = tmp_path / "state"
+    ac = ApplyChanges(spark, path, key="k", order_col="ts")
+
+    def batch(ts, *keys):
+        return spark.createDataFrame([(k, ts, False) for k in keys],
+                                     "k int, ts int, _is_deleted boolean")
+
+    ac.apply(batch(10, 1, 2))
+    ac.apply(batch(20, 2, 3))       # two installs: one to reclaim
     kill_at(step)
     with pytest.raises(SimulatedCrash):
-        _atomic_swap_write(new, path,
-                           finalize=lambda d: (d / "_epoch").touch())
+        ac.apply(batch(30, 1, 4))
     publish._STEP_HOOK = None
 
-    # -- read healing: entry recovery yields ONE complete state
-    _restore_crashed_swap(path)
-    assert (path / "_SUCCESS").exists(), f"incomplete state after {step}"
-    got = _rows(spark, path)
-    want = {(1, "a")} if step in SWAP_PRE_COMMIT else {(2, "b")}
-    assert got == want, f"crash after {step}: got {got}"
-    # the finalize marker must be visible IFF the new data is (the
-    # r7 incremental-MV invariant: _epoch swaps atomically WITH data)
-    assert (path / "_epoch").exists() == (got == {(2, "b")})
+    # -- read healing
+    got = {(r["k"], r["ts"]) for r in ac.read().collect()}
+    before = {(1, 10), (2, 20), (3, 20)}
+    after = {(1, 30), (2, 20), (3, 20), (4, 30)}
+    assert got == (after if _committed(step) else before), step
 
-    # -- write healing: next writer completes and clears all debris
-    nxt = spark.createDataFrame([(3, "c")], "k int, v string")
-    _atomic_swap_write(nxt, path)
-    assert _rows(spark, path) == {(3, "c")}
-    assert sorted(p.name for p in tmp_path.iterdir()) == ["state"]
+    # -- write healing: the redelivered batch plus the next one
+    ac.apply(batch(30, 1, 4))
+    ac.apply(batch(40, 5))
+    assert {(r["k"], r["ts"]) for r in ac.read().collect()} == \
+        after | {(5, 40)}
+    _assert_vacuumed(path)
 
 
-def test_swap_siblings_are_per_table(spark, tmp_path, kill_at):
-    """Tables sharing a stem (``s.a``, ``s.c``) must not share swap
-    siblings: with ``with_suffix`` names both used ``s.old``, so a
-    reader of the never-written ``s.c`` adopted ``s.a``'s crashed-swap
-    copy and ``s.a``'s own recovery then found nothing."""
-    a, c = tmp_path / "s.a", tmp_path / "s.c"
-    _atomic_swap_write(spark.createDataFrame([(1, "A")], "k int, v string"),
-                       a)
-    kill_at("swap:live-moved")
+@pytest.mark.parametrize("legacy_start, step", LAYOUT_STEPS)
+def test_incremental_refresh_kill_at_every_step(spark, tmp_path, step,
+                                                legacy_start, kill_at):
+    """IncrementalAggTable writes ``_epoch`` into the version dir before
+    its install: after a kill at any step the marker is visible iff the
+    new partials are, so the stream's redelivery of the killed epoch
+    folds it exactly once.  ``legacy_start`` begins from the layout the
+    retired staged swap wrote — the state and its ``_epoch`` in a plain
+    dir at the path — which the killed refresh's install converts."""
+    path = tmp_path / "state"
+    t = IncrementalAggTable(spark, path, keys=["k"],
+                            metrics=mergeable_metrics("v"))
+
+    def batch(*rows):
+        return spark.createDataFrame(list(rows), "k string, v double")
+
+    if legacy_start:
+        seed = IncrementalAggTable(spark, tmp_path / "seed" / "state",
+                                   keys=["k"], metrics=mergeable_metrics("v"))
+        seed.refresh(batch(("a", 1.0), ("b", 2.0)), epoch_id=0)
+        seed.refresh(batch(("a", 3.0)), epoch_id=1)
+        shutil.copytree(seed.path.resolve(), path)
+        shutil.rmtree(tmp_path / "seed")
+        assert not path.is_symlink() and t._last_epoch() == 1
+    else:
+        t.refresh(batch(("a", 1.0), ("b", 2.0)), epoch_id=0)
+        t.refresh(batch(("a", 3.0)), epoch_id=1)
+    kill_at(step)
     with pytest.raises(SimulatedCrash):
-        _atomic_swap_write(
-            spark.createDataFrame([(2, "B")], "k int, v string"), a)
+        t.refresh(batch(("a", 5.0), ("c", 7.0)), epoch_id=2)
     publish._STEP_HOOK = None
 
-    assert publish.read_state(spark, c) is None
-    assert not c.exists()
-    assert {tuple(r) for r in publish.read_state(spark, a).collect()} \
-        == {(1, "A")}
+    # -- read healing: the marker moves atomically WITH the data (read
+    # first: a kill between the plain dir's rename and its link leaves
+    # no path until a reader renames the dir back)
+    got = {r["k"]: r["n"] for r in t.read().collect()}
+    if _committed(step):
+        assert (got, t._last_epoch()) == ({"a": 3, "b": 1, "c": 1}, 2)
+    else:
+        assert (got, t._last_epoch()) == ({"a": 2, "b": 1}, 1)
+
+    # -- write healing: redelivering epoch 2 folds it exactly once
+    t.refresh(batch(("a", 5.0), ("c", 7.0)), epoch_id=2)
+    got = {r["k"]: (r["n"], float(r["sum"])) for r in t.read().collect()}
+    assert got == {"a": (3, 9.0), "b": (1, 2.0), "c": (1, 7.0)}
+    assert t._last_epoch() == 2
+    _assert_vacuumed(path)
+    assert (path / "_epoch").read_text() == "2"
 
 
-@pytest.mark.parametrize("step", SWAP_STEPS)
+@pytest.mark.parametrize("step", INSTALL_STEPS)
 def test_compact_kill_at_every_step(spark, tmp_path, step, kill_at):
-    """Maintenance rewrites a plain dir through the shared swap: a kill
-    at any step heals to the uncompacted layout before the commit point
-    and to the compacted one after it, partition columns intact."""
+    """Maintenance rewrites a plain partitioned dir as a logged version:
+    the first install adopts the dir as the version it replaces, so a
+    kill at any step leaves the uncompacted layout at the path before
+    the commit point and the compacted one from it on, partition
+    columns intact — except between the dir's rename and its link,
+    where the path is missing until the next reader or rewrite renames
+    the dir back."""
     from pyspark.sql import functions as F
 
     path = tmp_path / "ptbl"
@@ -144,21 +211,44 @@ def test_compact_kill_at_every_step(spark, tmp_path, step, kill_at):
         compact(spark, path, target_file_bytes=1 << 30)
     publish._STEP_HOOK = None
 
-    # -- read healing: old layout before the commit point, new after
-    _restore_crashed_swap(path)
-    n_files = table_file_stats(path)[0]
-    assert n_files == (n_before if step in SWAP_PRE_COMMIT else 2), step
-    assert _rows(spark, path) == want
-    assert sorted(p.name for p in path.glob("dt=*")) == ["dt=0", "dt=1"]
+    # -- read healing: old layout before the commit point, new from it on
+    if step == "install:legacy-moved":
+        assert not path.exists()
+        assert _rows(spark, tmp_path / "ptbl.v-legacy") == want
+    else:
+        n_files = table_file_stats(path)[0]
+        assert n_files == (2 if _committed(step) else n_before), step
+        assert _rows(spark, path) == want
+        assert sorted(p.name for p in path.glob("dt=*")) == ["dt=0", "dt=1"]
 
     # -- write healing: one file per partition value, no debris
     assert compact(spark, path, target_file_bytes=1 << 30) == 2
     assert _rows(spark, path) == want
-    assert sorted(p.name for p in tmp_path.iterdir()) == ["ptbl"]
+    _assert_vacuumed(path)
+    assert _rows(spark, path) == want
 
 
-@pytest.mark.parametrize("step", INSTALL_STEPS)
-@pytest.mark.parametrize("legacy_start", [False, True])
+@pytest.mark.parametrize("orphan", [".old", ".v-legacy"])
+def test_adoption_is_per_table(spark, tmp_path, orphan):
+    """``read_state`` renames back a table dir with no path beside it —
+    the retired staged swap's mid-swap ``.old``, or a ``.v-legacy`` a
+    crash left between the legacy conversion's rename and its link —
+    and only for its own table: with ``with_suffix`` names ``s.a`` and
+    ``s.c`` would both use ``s.old``, so a reader of the never-written
+    ``s.c`` would adopt ``s.a``'s copy and ``s.a`` would find nothing."""
+    a, c = tmp_path / "s.a", tmp_path / "s.c"
+    spark.createDataFrame([(1, "A")], "k int, v string") \
+        .write.parquet(str(tmp_path / f"s.a{orphan}"))
+
+    assert publish.read_state(spark, c) is None
+    assert not c.exists()
+    assert {tuple(r) for r in publish.read_state(spark, a).collect()} \
+        == {(1, "A")}
+    assert not a.is_symlink() and sorted(
+        p.name for p in tmp_path.iterdir()) == ["s.a"]
+
+
+@pytest.mark.parametrize("legacy_start, step", LAYOUT_STEPS)
 def test_install_kill_at_every_step(tmp_path, step, legacy_start, kill_at):
     """Version install under a kill at every step, with the default
     retention depth of 2: the path resolves to a complete version, the
@@ -227,6 +317,13 @@ def test_install_kill_at_every_step(tmp_path, step, legacy_start, kill_at):
     assert set(logged()) == newest | {replaced}
     left = {p.name for p in tmp_path.glob("tbl.v-*")}
     assert left == set(logged()) | (set() if is_logged else {"tbl.v-v2"})
+    # -- the full cleanup leaves the link, its log and v3: a kill at
+    # install:tmp-linked left a temp link, which vacuum removes too
+    vacuum_table_versions(final)
+    assert sorted(p.name for p in tmp_path.iterdir()) == \
+        ["tbl", "tbl.log", "tbl.v-v3"]
+    assert [p.name for p in (tmp_path / "tbl.log").iterdir()] == \
+        [f"{publish.read_log(final).popitem()[0]:08d}.json"]
 
 
 def test_streaming_sink_crash_windows_exactly_once(spark, tmp_path):
@@ -296,21 +393,29 @@ def test_streaming_sink_crash_windows_exactly_once(spark, tmp_path):
     assert drain().count() == 350
 
 
-#: every (file, enclosing function) that invokes a swap/install
-#: protocol.  A NEW call site fails the registration test until added
-#: here — the cue that it must (a) call the SHARED protocol, never a
-#: copy, and (b) run the entry recovery before reading state.
+#: every (file, enclosing function) that installs a version.  A NEW
+#: call site fails the registration test until added here — the cue
+#: that it must install a complete version dir (``write_version``)
+#: through the SHARED protocol, never a copy.
 REGISTERED_SITES = {
-    ("scd.py", "apply", "_atomic_swap_write"),        # ApplyChanges
-    ("scd.py", "_write", "_atomic_swap_write"),       # SnapshotTable
-    ("incremental.py", "_write_state", "_atomic_swap_write"),
+    ("scd.py", "apply", "_install_version"),          # ApplyChanges
+    ("scd.py", "_write", "_install_version"),         # SnapshotTable
+    ("incremental.py", "_write_state", "_install_version"),
     ("runner.py", "_materialize", "_install_version"),
-    ("runner.py", "run", "_install_version"),         # view fallback
+    ("runner.py", "run", "_install_version"),   # atomic_publish deferral
     ("runner.py", "backfill", "_install_version"),
     ("maintenance.py", "_atomic_rewrite", "_install_version"),
     ("snapshots.py", "write_snapshot", "_install_version"),
-    ("maintenance.py", "_atomic_rewrite", "_atomic_swap_write"),
 }
+
+
+def _calls(tree):
+    """``(call node, called name)`` for every call in ``tree``."""
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call):
+            f = n.func
+            yield n, (f.id if isinstance(f, ast.Name)
+                      else f.attr if isinstance(f, ast.Attribute) else None)
 
 
 def test_every_call_site_is_registered():
@@ -329,19 +434,14 @@ def test_every_call_site_is_registered():
                     best = (name, a)
             return best[0] if best else "<module>"
 
-        for n in ast.walk(tree):
-            if not isinstance(n, ast.Call):
-                continue
-            f = n.func
-            fname = (f.id if isinstance(f, ast.Name)
-                     else f.attr if isinstance(f, ast.Attribute) else None)
-            if fname in ("_atomic_swap_write", "_install_version"):
+        for n, fname in _calls(tree):
+            if fname == "_install_version":
                 found.add((p.name, enc(n.lineno), fname))
     assert found == REGISTERED_SITES, (
-        f"unregistered swap/install call sites: "
+        f"unregistered install call sites: "
         f"{found - REGISTERED_SITES} / removed: "
         f"{REGISTERED_SITES - found} — register them here AND make sure "
-        f"they use the shared protocol with entry recovery")
+        f"they install a complete version through the shared protocol")
 
 
 #: the publish layout's sibling suffixes (``<name><suffix>``), current
@@ -366,4 +466,27 @@ def test_publish_layout_has_one_home():
                        or c.startswith(SIBLING_PREFIXES))
         if named or "_STEP_HOOK" in text:
             offenders.append((str(p.relative_to(PKG)), named))
+    assert offenders == []
+
+
+def test_one_publication_protocol():
+    """The staged swap is retired: no module names it or its entry
+    recovery, and nothing hands a ``finalize=`` hook to engine.publish —
+    a marker that must become visible with the data is written into
+    the version dir before its install."""
+    publish_funcs = {n for n, v in vars(publish).items()
+                     if inspect.isfunction(v)
+                     and v.__module__ == publish.__name__}
+    assert not any("finalize" in inspect.signature(getattr(publish, n))
+                   .parameters for n in publish_funcs)
+    offenders = []
+    for p in sorted(PKG.rglob("*.py")):
+        text = p.read_text()
+        for name in ("_atomic_swap_write", "_restore_crashed_swap"):
+            if name in text:
+                offenders.append((p.name, name))
+        for n, fname in _calls(ast.parse(text)):
+            if fname in publish_funcs and any(
+                    k.arg == "finalize" for k in n.keywords):
+                offenders.append((p.name, f"{fname}(finalize=...)"))
     assert offenders == []

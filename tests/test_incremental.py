@@ -143,3 +143,28 @@ def test_epochless_refresh_preserves_replay_guard(spark, tmp_path):
     # and the next real epoch still applies
     t.refresh(batch(spark, [("a", 100.0)]), epoch_id=8)
     assert {r["k"]: r["n"] for r in t.read().collect()}["a"] == 3
+
+
+@pytest.mark.parametrize("layout", ["live", "mid-swap"])
+def test_refresh_adopts_parent_layout_state(spark, tmp_path, layout):
+    """Partials the retired staged swap left — a real state dir holding
+    ``_SUCCESS`` and ``_epoch``, or only the ``<name>.old`` of a swap
+    killed midway — are folded by the next refresh with the replay
+    guard intact."""
+    from decimal import Decimal
+
+    t = make_table(spark, tmp_path)
+    prior = tmp_path / ("state" if layout == "live" else "state.old")
+    spark.createDataFrame(
+        [("a", 2, Decimal("3.0000"), 1.0, 2.0)],
+        "k string, n bigint, sum decimal(25,4), min double, max double") \
+        .write.parquet(str(prior))
+    (prior / "_epoch").write_text("5")
+
+    t.refresh(batch(spark, [("a", 10.0)]), epoch_id=5)    # a replay
+    t.refresh(batch(spark, [("a", 10.0)]), epoch_id=6)
+    got = {r["k"]: (r["n"], float(r["sum"]), r["min"], r["max"])
+           for r in t.read().collect()}
+    assert got == {"a": (3, 13.0, 1.0, 10.0)}
+    assert t._last_epoch() == 6
+    assert t.path.is_symlink()

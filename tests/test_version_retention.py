@@ -14,8 +14,11 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from iot_simulator_datalake_spark.engine import Engine, Registry, model
+from iot_simulator_datalake_spark.engine.incremental import (
+    IncrementalAggTable, mergeable_metrics)
 from iot_simulator_datalake_spark.engine.publish import (
     _install_version, new_version_dir, read_log, vacuum_table_versions)
+from iot_simulator_datalake_spark.operators.scd import ApplyChanges
 from iot_simulator_datalake_spark.pipeline import build_registry
 
 from conftest import write_iot_events
@@ -232,3 +235,32 @@ def test_refreshes_keep_disk_bounded_and_zstd(spark, tmp_path, monkeypatch):
                         lambda work: spark.range(100).write.parquet(str(work)))
     staged = list(layout.glob("*.parquet"))
     assert staged and set().union(*map(_codecs, staged)) == {"ZSTD"}
+
+
+def test_held_state_frames_keep_their_version(spark, tmp_path):
+    """A frame taken from a state table's ``read()`` reads the version
+    published when it was taken: one more apply/refresh installs a new
+    version beside it, and the held frames still return the
+    pre-refresh rows (the replaced version is within the depth)."""
+    ac = ApplyChanges(spark, tmp_path / "ac", key="k", order_col="ts")
+    inc = IncrementalAggTable(spark, tmp_path / "inc", keys=["k"],
+                              metrics=mergeable_metrics("v"))
+
+    def changes(*rows):
+        return spark.createDataFrame(list(rows),
+                                     "k int, ts int, _is_deleted boolean")
+
+    def facts(*rows):
+        return spark.createDataFrame(list(rows), "k string, v double")
+
+    ac.apply(changes((1, 10, False)))
+    inc.refresh(facts(("a", 1.0)))
+    held_ac, held_inc = ac.read(), inc.read()
+    ac.apply(changes((1, 20, True), (2, 20, False)))
+    inc.refresh(facts(("a", 2.0), ("b", 3.0)))
+
+    assert [(r["k"], r["ts"]) for r in held_ac.collect()] == [(1, 10)]
+    assert [(r["k"], r["n"]) for r in held_inc.collect()] == [("a", 1)]
+    assert [r["k"] for r in ac.read().collect()] == [2]
+    assert sorted((r["k"], r["n"]) for r in inc.read().collect()) == \
+        [("a", 2), ("b", 1)]
