@@ -128,7 +128,7 @@ def main(argv: list[str] | None = None) -> int:
             attach_reference_checks(eng)
         failures = 0
         for res in eng.test():
-            status = "PASS" if res.passed else f"FAIL ({res.violations}+)"
+            status = "PASS" if res.passed else f"FAIL ({res.violations})"
             print(f"  {res.name}: {status}")
             failures += 0 if res.passed else 1
         return 1 if failures else 0

@@ -22,9 +22,9 @@ grouped pass that the row-level counts ride along in
 (:func:`count_violations`).  Their counts are exact; samples are
 fetched only for checks that failed.  Every other check — singular,
 relationship, freshness, hand-built — runs alone through
-:meth:`Check.run`, whose count is bounded with ``limit(n+1)`` so it
-never scans more than it must once violations exist.  Violation
-DataFrames stay lazy and fully pushdown-optimizable.
+:meth:`Check.run`, whose ``limit(n+1)`` fetch is followed by an exact
+``count()`` only when it overflows the sample.  Violation DataFrames
+stay lazy and fully pushdown-optimizable.
 """
 
 from __future__ import annotations
@@ -52,8 +52,6 @@ class OnViolation(enum.Enum):
 class CheckResult:
     name: str
     passed: bool
-    #: exact for generic checks fused by Engine.test; capped at the
-    #: sample cap + 1 for checks run alone (Check.run)
     violations: int
     sample: list[dict]
 
@@ -117,9 +115,11 @@ class Check:
         return self.builder(engine.table(self.relation))
 
     def run(self, engine: "Engine", max_sample: int = 5) -> CheckResult:
-        rows = self.violations(engine).limit(max_sample + 1).collect()
+        df = self.violations(engine)    # a passing check is one job
+        rows = df.limit(max_sample + 1).collect()
+        n = df.count() if len(rows) > max_sample else len(rows)
         return CheckResult(
-            name=self.name, passed=not rows, violations=len(rows),
+            name=self.name, passed=not rows, violations=n,
             sample=[r.asDict(recursive=True) for r in rows[:max_sample]])
 
     def result(self, engine: "Engine", violations: int,

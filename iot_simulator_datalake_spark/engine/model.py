@@ -13,7 +13,7 @@ own published table through ``ctx.this``; the engine wires the paths.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from graphlib import TopologicalSorter
 from typing import TYPE_CHECKING, Any
 
@@ -65,7 +65,6 @@ class Model:
     #: downstream consumers can rely on the declared shape.
     contract: dict[str, str] | None = None
     description: str = ""
-    meta: dict[str, Any] = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         if self.materialization not in MATERIALIZATIONS:
@@ -238,8 +237,7 @@ def model(registry: Registry, *, name: str, layer: str,
           bucket_by: Iterable = (),
           snapshot_keep: int | None = None,
           contract: dict[str, str] | None = None,
-          description: str = "",
-          **meta: Any) -> Callable:
+          description: str = "") -> Callable:
     """Decorator: register a builder function as a Model."""
 
     def wrap(fn: Callable[[ModelContext], "DataFrame"]) -> Model:
@@ -249,6 +247,6 @@ def model(registry: Registry, *, name: str, layer: str,
             depends_on=tuple(depends_on), schema=schema,
             partition_by=tuple(partition_by), bucket_by=tuple(bucket_by),
             snapshot_keep=snapshot_keep, contract=contract,
-            description=description or (fn.__doc__ or ""), meta=meta))
+            description=description or (fn.__doc__ or "")))
 
     return wrap

@@ -1,13 +1,14 @@
 """Table publication: how a rewritten table becomes visible and how a
 crash midway heals.  The only module that knows the on-disk publish
-layout.  Siblings are named from the table's FULL name
-(``<name>.v-<8 hex>``, ``.log``, ``.ln-<hex>``), so tables sharing a
-stem never share one.
+layout, writes a version dir or renames a file into place.  Siblings
+are named from the table's FULL name (``<name>.v-<8 hex>``, ``.log``,
+``.ln-<hex>``), so tables sharing a stem never share one.
 
 One protocol for every table rewrite in the package — engine models,
 backfills, snapshots, maintenance rewrites and the state tables of
-operators/scd.py and engine/incremental.py: :func:`write_version`
-writes a fresh version dir, then :func:`_install_version` records it
+operators/scd.py and engine/incremental.py: :func:`write_version` (a
+backfill: :func:`overlay_version`) writes a fresh version dir, or
+deletes it if the write fails, then :func:`_install_version` records it
 in the table's commit log (``<name>.log/NNNNNNNN.json``) and
 retargets the table's symlink.  The log is the table's history:
 ``engine/snapshots.py`` reads versions, time travel and diffs from it,
@@ -16,7 +17,8 @@ retention depth, so disk stays bounded over any number of refreshes.
 A version dir the log never named is never touched.  A plain
 directory (an older layout, or a table written by path) is adopted as
 the first version by its first install.  :func:`read_state` is the one
-reader for "the published table or None".
+reader for "the published table or None".  :func:`write_file_atomic`
+replaces a small file (schema store, manifest, commit marker) whole.
 
 ``_STEP_HOOK`` is the crash seam (tests/test_crash_injection.py):
 called after each externally visible step of the install; always None
@@ -62,12 +64,51 @@ def write_version(df: "DataFrame", path: Path,
     """Write ``df`` as a fresh version dir of the table at ``path``
     (optionally hive-partitioned) and return it, not yet installed:
     the caller hands it to :func:`_install_version`, now or later."""
+    return _write(df, path, partition_by, overlay=False)
+
+
+def overlay_version(df: "DataFrame", path: Path,
+                    partition_by: Sequence[str]) -> Path:
+    """:func:`write_version` over a hardlink copy of the current
+    version's data, replacing only the partitions ``df`` holds: a
+    backfill never writes through the version readers resolved."""
+    return _write(df, path, partition_by, overlay=True)
+
+
+def _write(df: "DataFrame", path: Path, partition_by: Sequence[str],
+           overlay: bool) -> Path:
+    """The one version write.  A write that raises deletes its dir: no
+    log entry names it yet, so nothing else would ever reclaim it."""
     vdir = new_version_dir(path)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(str(vdir))
+    if overlay:     # a per-write option: the session's mode stays
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    try:    # an overlay copies what Spark lists as data ("_p=x" is;
+        if overlay and path.exists():   # _SUCCESS and a manifest of
+            src = str(path.resolve())   # the replaced files are not)
+            shutil.copytree(src, vdir, copy_function=os.link, ignore=(
+                lambda d, ns: [n for n in ns if d == src and (n[0] == "."
+                               or n[0] == "_" and "=" not in n)]))
+        writer.parquet(str(vdir))
+    except BaseException:
+        shutil.rmtree(vdir, ignore_errors=True)
+        raise
     return vdir
+
+
+def write_file_atomic(path: str | Path, text: str) -> None:
+    """Replace the file at ``path`` with ``text`` in one rename, so no
+    reader parses a truncated one; the temp is uuid-named (writers
+    sharing one interleave bytes) and unlinked if the write fails."""
+    tmp = _sibling(Path(path), f".tmp-{uuid.uuid4().hex[:8]}")
+    try:
+        tmp.write_text(text)
+        tmp.replace(path)
+    except BaseException:
+        tmp.unlink(missing_ok=True)
+        raise
 
 
 def _link_target(link: Path) -> str | None:
@@ -279,10 +320,13 @@ def adopt_orphan(path: Path) -> None:
     """Rename back a table dir with no path beside it: ``<name>.old``,
     where the retired staged swap left a state table it crashed midway
     through, or a ``.v-legacy`` dir whose conversion crashed before its
-    link."""
+    link.  That swap's never-promoted ``<name>.staging`` goes with the
+    ``.old`` adoption, the one place it is known to be the swap's."""
     for orphan in (_sibling(path, ".old"), _sibling(path, ".v-legacy")):
         if not os.path.lexists(path) and (orphan / "_SUCCESS").exists():
             orphan.rename(path)
+            if orphan.suffix == ".old":
+                shutil.rmtree(_sibling(path, ".staging"), ignore_errors=True)
 
 
 def read_state(spark: "SparkSession", path: Path) -> "DataFrame | None":

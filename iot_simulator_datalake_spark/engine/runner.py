@@ -8,17 +8,12 @@ do all optimization (SURVEY §4 — zero custom optimizer rules needed).
 Materializations (dbt_project.yml:11-19):
 
 - ``view``            → temp view + in-memory handle (no write)
-- ``table``           → parquet into a new version dir, published by
-                        retargeting the table's symlink
-                        (engine/publish.py), read back with the
-                        written frame's schema (so downstream reads
-                        scan columnar storage with pushdown, like a
-                        real table, and no inference job runs).  Each
-                        install is logged and reclaims the logged
-                        versions beyond ``snapshot_keep`` (None: 2), so
-                        a table holds that many version dirs however
-                        often it refreshes, and engine/snapshots.py
-                        reads its history
+- ``table``           → parquet into a new version dir, installed and
+                        retained (``snapshot_keep``) by
+                        engine/publish.py, read back with the written
+                        frame's schema (so downstream reads scan
+                        columnar storage with pushdown, like a real
+                        table, and no inference job runs)
 - ``streaming_table`` → Structured Streaming triggered (availableNow)
                         run with a checkpoint dir → exactly-once
                         incremental append (⇔ DLT streaming table,
@@ -40,7 +35,6 @@ logged ``seconds`` is its ``RunResult.seconds``.
 
 from __future__ import annotations
 
-import os
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -50,7 +44,7 @@ from typing import TYPE_CHECKING, Any
 
 from .checks import Check, CheckResult, count_violations
 from .model import Model, ModelContext, Registry
-from .publish import (DEFAULT_KEEP, _install_version, new_version_dir,
+from .publish import (DEFAULT_KEEP, _install_version, overlay_version,
                       write_version)
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -306,19 +300,17 @@ class Engine:
         rerun every lake pipeline needs, without recomputing or
         rewriting the rest of the table.
 
-        Uses Spark's dynamic partition-overwrite so untouched
-        partitions are left in place byte-for-byte; the predicate is
-        pushed into the builder's plan, so at 100 TB the recompute
-        reads only the affected input partitions (partition pruning),
-        not the history.  The result installs as a new logged version,
-        so the table's retention (``snapshot_keep``) and history
-        (engine/snapshots.py) cover it like any refresh.
+        ``publish.overlay_version`` writes the slice over a hardlink copy
+        of the current version, so untouched partitions stay in place
+        byte-for-byte; the predicate is pushed into the builder's plan,
+        so at 100 TB the recompute reads only the affected input
+        partitions (partition pruning), not the history.  The result
+        installs as a new logged version, so the table's retention
+        (``snapshot_keep``) and history cover it like any refresh.
         """
         m = self.registry[qualified_name]
-        # backfill crosses the same security boundary as run(): it reads
-        # every upstream through m.builder and rewrites target
-        # partitions, so the run_as principal needs the identical
-        # SELECT-upstreams + CREATE/MODIFY-target grants.
+        # the same grants as run(): it reads every upstream through
+        # m.builder and rewrites the target's partitions
         self._authorize(m)
         if m.materialization != "table" or not m.partition_by:
             raise ValueError(
@@ -328,26 +320,7 @@ class Engine:
         ctx = ModelContext(self.spark, self, m)
         df = m.builder(ctx).filter(where)
         path = self.table_path(m)
-        # NEVER write through the live path: the current version dir is
-        # the immutable snapshot in-flight readers resolved
-        # (_install_version's whole guarantee).  Stage a hardlink copy
-        # of the current version (metadata-only on a local fs; a
-        # server-side copy on object stores), dynamic-overwrite only
-        # the matched partitions inside the copy, then atomically
-        # retarget the symlink like any other write.
-        vdir = new_version_dir(path)
-        if path.exists():
-            shutil.copytree(path.resolve(), vdir,
-                            copy_function=os.link)
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(key, "static")
-        self.spark.conf.set(key, "dynamic")
-        try:
-            (df.write.mode("overwrite")
-             .partitionBy(*m.partition_by)
-             .parquet(str(vdir)))
-        finally:
-            self.spark.conf.set(key, prev)
+        vdir = overlay_version(df, path, m.partition_by)
         _install_version(vdir, path, m.snapshot_keep or DEFAULT_KEEP)
         out = _read_back(self.spark, df.schema, vdir)
         self.register(m.qualified_name, out)
@@ -368,10 +341,9 @@ class Engine:
         ``unique``) are fused per relation: one aggregate pass for the
         row-level ones, one grouped pass per ``unique`` key, with the
         row-level counts riding along in the first
-        (:func:`~.checks.count_violations`).  Their ``violations`` is
-        the exact count, and a sample is fetched only for a failed
-        check.  Every other check runs alone through ``Check.run``,
-        its count capped at ``max_sample + 1``.
+        (:func:`~.checks.count_violations`), and a sample is fetched
+        only for a failed check.  Every other check runs alone through
+        ``Check.run``.  Every ``violations`` is exact.
 
         With an ``event_log`` attached, each result is also appended to
         it as a ``check_result`` event (⇔ dbt's test-result artifacts),

@@ -18,6 +18,8 @@ full key range, so nothing skips).
 The manifest is rebuilt after compaction/clustering (both rewrite the
 directory); writers that append incrementally add rows for new files
 only — footers are read once per file ever, not once per query.
+Builds replace the manifest whole (``publish.write_file_atomic``); a
+backfilled version starts without one (``publish.overlay_version``).
 """
 
 from __future__ import annotations
@@ -25,6 +27,8 @@ from __future__ import annotations
 import json
 from pathlib import Path
 from typing import TYPE_CHECKING
+
+from .publish import write_file_atomic
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -77,9 +81,8 @@ def build_stats_manifest(path: str | Path, cols: list[str]) -> int:
                 stats[c] = [_norm(lo), _norm(hi)]
         entries[str(f.relative_to(root))] = stats
     out = {"columns": cols, "files": entries}
-    tmp = root / (STATS_MANIFEST + ".tmp")
-    tmp.write_text(json.dumps(out, indent=1, sort_keys=True))
-    tmp.replace(root / STATS_MANIFEST)
+    write_file_atomic(root / STATS_MANIFEST,
+                      json.dumps(out, indent=1, sort_keys=True))
     return len(entries)
 
 
@@ -251,9 +254,8 @@ def build_bloom_manifest(path: str | Path, cols: list[str], *,
             per_col[c] = {"bits": m,
                           "bitmap": hex(int.from_bytes(buf, "little"))}
         manifest["bloom"]["files"][rel] = per_col
-    tmp = root / (STATS_MANIFEST + ".tmp")
-    tmp.write_text(json.dumps(manifest, indent=1, sort_keys=True))
-    tmp.replace(root / STATS_MANIFEST)
+    write_file_atomic(root / STATS_MANIFEST,
+                      json.dumps(manifest, indent=1, sort_keys=True))
     return len(manifest["bloom"]["files"])
 
 

@@ -286,8 +286,7 @@ def load_sql_project(models_dir: str | Path,
         reg.add(Model(
             name=stem, layer=layer, builder=builder,
             materialization=mat, depends_on=deps, schema=eff_schema[stem],
-            description=f"loaded from {path.name}{note}",
-            meta={"sql": sql}))
+            description=f"loaded from {path.name}{note}"))
     return reg
 
 

@@ -6,7 +6,8 @@ STREAM read_files(path, format => 'json')`` with inferred schema
 README_DBT.md:96-97).  OSS Structured Streaming requires an explicit
 schema for streaming JSON, so we use the standard substitute
 (SURVEY §1.2): infer once from a bounded batch sample, persist the
-schema JSON next to the checkpoint, and feed it to ``readStream``.
+schema JSON next to the checkpoint (replaced whole through
+``engine.publish.write_file_atomic``), and feed it to ``readStream``.
 Re-runs reuse the persisted schema (stable contract); an explicit
 ``evolve=True`` re-infers and unions the schemas (ST6 schema-evolution
 support, README_DBT.md:97).
@@ -18,11 +19,12 @@ full scan of a 100 TB landing volume.
 from __future__ import annotations
 
 import json
-import uuid
 from pathlib import Path
 from typing import TYPE_CHECKING
 
 from pyspark.sql import types as T
+
+from ..engine.publish import write_file_atomic
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -100,24 +102,7 @@ def infer_persist_schema_core(path: str | Path,
         inferred = T.StructType(merged)
 
     store.parent.mkdir(parents=True, exist_ok=True)
-    # atomic publish (tmp + rename): a crash mid-write_text would leave
-    # a truncated store that every later run json.loads-fails on — the
-    # source would be wedged until someone hand-deleted the file.  The
-    # tmp name is uuid-suffixed because concurrent sessions inferring
-    # the same store otherwise share ONE tmp path: writer B truncates
-    # while A is mid-write and A renames interleaved garbage into
-    # place (or the loser's rename dies on a vanished tmp).
-    tmp = store.with_suffix(
-        store.suffix + f".tmp-{uuid.uuid4().hex[:8]}")
-    try:
-        tmp.write_text(json.dumps(inferred.jsonValue()))
-        tmp.replace(store)
-    except BaseException:
-        # each attempt uses a fresh uuid, so a failed write would
-        # otherwise strand a distinct orphan .tmp-* next to the store
-        # on every retry, forever
-        tmp.unlink(missing_ok=True)
-        raise
+    write_file_atomic(store, json.dumps(inferred.jsonValue()))
     return inferred
 
 

@@ -13,7 +13,8 @@ txnAppId/txnVersion, Kafka transactional producer wrappers) does;
 here it is explicit and testable.
 
 Scale: the commit log is one tiny file per batch (object-store
-friendly, no read-modify-write races — presence IS the commit); the
+friendly, no read-modify-write races — presence IS the commit),
+written whole through :func:`engine.publish.write_file_atomic`; the
 data write itself is whatever the batch function does, unchanged.
 """
 
@@ -24,6 +25,8 @@ import shutil
 import time
 from pathlib import Path
 from typing import TYPE_CHECKING, Callable
+
+from ..engine.publish import write_file_atomic
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -77,12 +80,8 @@ class IdempotentBatchSink:
         except Exception:
             rows = None                          # non-parquet write_fn
         staging.replace(out)                     # atomic dir rename
-        marker = self._marker(batch_id)
-        tmp = marker.with_suffix(".tmp")
-        tmp.write_text(json.dumps({"batch_id": batch_id,
-                                   "rows": rows,
-                                   "ts": time.time()}))
-        tmp.replace(marker)                      # commit point
+        write_file_atomic(self._marker(batch_id), json.dumps(  # commit point
+            {"batch_id": batch_id, "rows": rows, "ts": time.time()}))
         self.written.append(batch_id)
 
 

@@ -149,7 +149,7 @@ def test_apply_adopts_parent_layout_state(spark, tmp_path, layout):
     apply, tombstones intact: a real dir holding ``_SUCCESS``, or — from
     a swap killed between moving the live dir aside and promoting its
     stage — only ``<name>.old`` (and the never-promoted ``.staging``,
-    which holds no committed state)."""
+    which holds no committed state and goes with the adoption)."""
     schema = "k int, ts int, _is_deleted boolean"
     path = tmp_path / "state"
     prior = spark.createDataFrame([(1, 10, False), (2, 10, True)], schema)
@@ -165,3 +165,4 @@ def test_apply_adopts_parent_layout_state(spark, tmp_path, layout):
     assert sorted(r["k"] for r in ac.read().collect()) == [1, 3]
     assert path.is_symlink()
     assert not (tmp_path / "state.old").exists()
+    assert not (tmp_path / "state.staging").exists()

@@ -69,7 +69,15 @@ def test_fused_count_is_exact_above_the_sample_cap(dirty):
     [nn, av] = dirty.test(max_sample=0)
     assert (nn.passed, nn.violations, nn.sample) == (False, 1, [])
     assert (av.violations, av.sample) == (4, [])
-    assert dirty.checks[1].run(dirty, max_sample=1).violations == 2
+    assert dirty.checks[1].run(dirty, max_sample=1).violations == 4
+
+
+def test_singular_count_is_exact_above_the_sample_cap(dirty):
+    """A check run alone reports every violation, not its sample size
+    plus one, and still samples at most ``max_sample`` rows."""
+    dirty.add_check(singular("any_row", "silver.ev", lambda df: df))
+    [res] = dirty.test(max_sample=2)
+    assert (res.passed, res.violations, len(res.sample)) == (False, 5, 2)
 
 
 @pytest.fixture(scope="module")

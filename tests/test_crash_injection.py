@@ -24,9 +24,9 @@ in the package by AST: a future call site must be added to
 ``REGISTERED_SITES`` here — the cue to check that it inherits this
 harness's guarantees (the protocol is what's crash-safe;
 a site is safe iff it installs a complete version dir through it).
-The source guards keep the publish layout's sibling names and the seam
-inside engine/publish.py, and the retired staged swap out of the
-package."""
+The source guards keep the publish layout's sibling names, the seam,
+version-dir creation and file renames inside engine/publish.py, and
+the retired staged swap out of the package."""
 
 from __future__ import annotations
 
@@ -466,6 +466,34 @@ def test_publish_layout_has_one_home():
                        or c.startswith(SIBLING_PREFIXES))
         if named or "_STEP_HOOK" in text:
             offenders.append((str(p.relative_to(PKG)), named))
+    assert offenders == []
+
+
+def test_publish_writes_every_published_file():
+    """Only engine/publish.py creates version dirs and renames files
+    into place: no other module imports ``new_version_dir`` or builds a
+    ``.tmp`` file name (stagecache's ``.tmp-`` staged dir, promoted by
+    its own marker, is the one exception), and nothing under engine/
+    sets a session conf — a write's option belongs on that write."""
+    offenders = []
+    for p in sorted(PKG.rglob("*.py")):
+        if p == pathlib.Path(publish.__file__).resolve():
+            continue
+        rel = str(p.relative_to(PKG))
+        tree = ast.parse(p.read_text())
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and any(
+                    a.name == "new_version_dir" for a in n.names):
+                offenders.append((rel, "new_version_dir"))
+            if (rel != "stagecache.py" and isinstance(n, ast.Constant)
+                    and isinstance(n.value, str) and ".tmp" in n.value):
+                offenders.append((rel, n.value))
+        if rel.startswith("engine/"):
+            for n, fname in _calls(tree):
+                if (fname == "set" and isinstance(n.func, ast.Attribute)
+                        and isinstance(n.func.value, ast.Attribute)
+                        and n.func.value.attr == "conf"):
+                    offenders.append((rel, "conf.set"))
     assert offenders == []
 
 

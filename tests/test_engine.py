@@ -110,6 +110,14 @@ def test_config_vars(spark, tmp_path):
     assert eng.table("bronze.v").count() == 7
 
 
+def test_misspelled_model_keyword_raises():
+    """A keyword the decorator does not know is an error, never silent
+    metadata: ``materialisation`` would otherwise register a view."""
+    r = Registry()
+    with pytest.raises(TypeError):
+        model(r, name="t", layer="gold", materialisation="table")
+
+
 def test_backfill_rewrites_only_selected_partitions(spark, tmp_path):
     """Backfill recomputes one partition; sibling partition files stay
     byte-identical (dynamic partition overwrite)."""

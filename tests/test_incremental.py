@@ -149,17 +149,21 @@ def test_epochless_refresh_preserves_replay_guard(spark, tmp_path):
 def test_refresh_adopts_parent_layout_state(spark, tmp_path, layout):
     """Partials the retired staged swap left — a real state dir holding
     ``_SUCCESS`` and ``_epoch``, or only the ``<name>.old`` of a swap
-    killed midway — are folded by the next refresh with the replay
-    guard intact."""
+    killed midway, beside its never-promoted ``<name>.staging`` — are
+    folded by the next refresh with the replay guard intact, and the
+    stale stage is deleted."""
     from decimal import Decimal
 
     t = make_table(spark, tmp_path)
     prior = tmp_path / ("state" if layout == "live" else "state.old")
-    spark.createDataFrame(
-        [("a", 2, Decimal("3.0000"), 1.0, 2.0)],
-        "k string, n bigint, sum decimal(25,4), min double, max double") \
-        .write.parquet(str(prior))
+    schema = "k string, n bigint, sum decimal(25,4), min double, max double"
+    spark.createDataFrame([("a", 2, Decimal("3.0000"), 1.0, 2.0)],
+                          schema).write.parquet(str(prior))
     (prior / "_epoch").write_text("5")
+    if layout == "mid-swap":
+        spark.createDataFrame([("z", 1, Decimal("9.0000"), 9.0, 9.0)],
+                              schema).write.parquet(
+            str(tmp_path / "state.staging"))
 
     t.refresh(batch(spark, [("a", 10.0)]), epoch_id=5)    # a replay
     t.refresh(batch(spark, [("a", 10.0)]), epoch_id=6)
@@ -168,3 +172,4 @@ def test_refresh_adopts_parent_layout_state(spark, tmp_path, layout):
     assert got == {"a": (3, 13.0, 1.0, 10.0)}
     assert t._last_epoch() == 6
     assert t.path.is_symlink()
+    assert not (tmp_path / "state.staging").exists()
