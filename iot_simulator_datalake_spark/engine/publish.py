@@ -294,14 +294,20 @@ def _install_version(vdir: Path, final: Path,
 
 def vacuum_table_versions(path: str | Path) -> list[str]:
     """Delete every ``<table>.v-*`` version dir the current symlink does
-    not target, the log entries naming them, and any ``<table>.ln-*``
-    temp link an install killed before its rename left.  Call only when
-    no reader may still hold an older version and no writer is staging
-    one — same contract as Delta VACUUM with retention 0."""
+    not target, the log entries naming them, any ``<table>.ln-*`` temp
+    link an install killed before its rename left, and the retired
+    staged swap's leftovers: ``<table>.staging``, and a ``<table>.old``
+    beside a live ``<table>`` (alone, :func:`adopt_orphan` adopts it).
+    Call only when no reader may still hold an older version and no
+    writer is staging one — same contract as Delta VACUUM with
+    retention 0."""
     final = Path(path)
     current = _link_target(final)
     for p in final.parent.glob(f"{final.name}.ln-*"):
         p.unlink(missing_ok=True)
+    shutil.rmtree(_sibling(final, ".staging"), ignore_errors=True)
+    if os.path.lexists(final):
+        shutil.rmtree(_sibling(final, ".old"), ignore_errors=True)
     entries = read_log(final)
     for f in _sibling(final, ".log").glob("*.json"):
         # an entry a killed install claimed but never wrote reads as none

@@ -20,6 +20,9 @@ directory); writers that append incrementally add rows for new files
 only — footers are read once per file ever, not once per query.
 Builds replace the manifest whole (``publish.write_file_atomic``); a
 backfilled version starts without one (``publish.overlay_version``).
+Per-file Bloom entries have one form, ``{bits, bitmap}`` sized per
+file by :func:`build_bloom_manifest`; :func:`prune_files_eq` keeps a
+file whose entry has any other form.
 """
 
 from __future__ import annotations
@@ -158,7 +161,7 @@ def scan_with_skipping(spark: "SparkSession", path: str | Path, col: str,
 # opens entirely.  False positives cost a wasted file read; false
 # negatives are impossible (the correctness contract).
 
-BLOOM_BITS = 8192       # floor (and the pinned size of legacy manifests)
+BLOOM_BITS = 8192       # floor of the per-file size
 BLOOM_HASHES = 4
 #: auto-size target: m = 8 bits/key with k=4 ⇒ fpp = (1−e^−km/m)^k ≈ 2.4%.
 #: A FIXED size is the classic bloom failure mode — the ×10-replica
@@ -197,21 +200,17 @@ def _bloom_positions(value, bits: int, k: int) -> list[int]:
     return out
 
 
-def build_bloom_manifest(path: str | Path, cols: list[str], *,
-                         bits: int | None = None,
-                         hashes: int = BLOOM_HASHES,
-                         bits_per_key: int = BLOOM_BITS_PER_KEY) -> int:
+def build_bloom_manifest(path: str | Path, cols: list[str]) -> int:
     """Add per-file Bloom bitmaps for ``cols`` to the stats manifest
     (which must already exist; blooms extend, not replace, min/max).
 
-    Sizing: by default each (file, col) bloom is auto-sized to the
-    next power of two ≥ ``bits_per_key`` × its distinct count (floored
-    at ``BLOOM_BITS``) and the size rides the manifest entry — a fixed
-    global size saturates as file row counts grow (measured: 8192 bits
-    vs 1.25 M keys/file at the ×10 replica = zero skipping), while
-    per-file sizing keeps the false-positive rate flat at any scale.
-    Pass ``bits`` to pin a single global size (the legacy format,
-    which ``prune_files_eq`` still reads).
+    Sizing: each (file, col) bloom is auto-sized to the next power of
+    two ≥ ``BLOOM_BITS_PER_KEY`` × its distinct count (floored at
+    ``BLOOM_BITS``) and the size rides the manifest entry as
+    ``{bits, bitmap}`` — a fixed global size saturates as file row
+    counts grow (measured: 8192 bits vs 1.25 M keys/file at the ×10
+    replica = zero skipping), while per-file sizing keeps the
+    false-positive rate flat at any scale.
 
     Driver-side with pyarrow here (reads only the indexed columns);
     at 10⁶ files this is the same mapPartitions-over-file-list Spark
@@ -221,9 +220,7 @@ def build_bloom_manifest(path: str | Path, cols: list[str], *,
 
     root = Path(path)
     manifest = read_stats_manifest(root)
-    manifest["bloom"] = {"hashes": hashes, "files": {}}
-    if bits is not None:
-        manifest["bloom"]["bits"] = bits
+    manifest["bloom"] = {"hashes": BLOOM_HASHES, "files": {}}
     for rel in manifest["files"]:
         f = root / rel
         # intersect with the file's own schema first: pyarrow raises on
@@ -236,8 +233,7 @@ def build_bloom_manifest(path: str | Path, cols: list[str], *,
         for c in present:
             vals = {v for v in set(table.column(c).to_pylist())
                     if v is not None}
-            m = bits if bits is not None else \
-                _pow2ceil(max(BLOOM_BITS, len(vals) * bits_per_key))
+            m = _pow2ceil(max(BLOOM_BITS, len(vals) * BLOOM_BITS_PER_KEY))
             # Accumulate in a bytearray, not a Python int: `big |= 1
             # << pos` copies the WHOLE bitmap per set bit — O(keys ×
             # m/8 bytes), which at replica scale (7.5 M keys × 64
@@ -249,7 +245,7 @@ def build_bloom_manifest(path: str | Path, cols: list[str], *,
             # manifests are unaffected.
             buf = bytearray((m + 7) >> 3)
             for v in vals:
-                for pos in _bloom_positions(v, m, hashes):
+                for pos in _bloom_positions(v, m, BLOOM_HASHES):
                     buf[pos >> 3] |= 1 << (pos & 7)
             per_col[c] = {"bits": m,
                           "bitmap": hex(int.from_bytes(buf, "little"))}
@@ -261,12 +257,12 @@ def build_bloom_manifest(path: str | Path, cols: list[str], *,
 
 def prune_files_eq(path: str | Path, col: str, value) -> list[str]:
     """Files that may contain ``col = value``: min/max range test AND
-    Bloom membership (when a bloom exists for the file+column).  Files
-    lacking stats or blooms are conservatively kept."""
+    Bloom membership (when a ``{bits, bitmap}`` bloom exists for the
+    file+column).  Files lacking stats or such a bloom are
+    conservatively kept."""
     root = Path(path)
     manifest = read_stats_manifest(root)
     bloom = manifest.get("bloom") or {}
-    global_bits = bloom.get("bits", BLOOM_BITS)
     hashes = bloom.get("hashes", BLOOM_HASHES)
     pos_cache: dict[int, list[int]] = {}
     kept = []
@@ -277,14 +273,11 @@ def prune_files_eq(path: str | Path, col: str, value) -> list[str]:
             if not (fmin <= _norm(value) <= fmax):
                 continue
         ent = (bloom.get("files", {}).get(rel) or {}).get(col)
-        if ent is not None:
-            if isinstance(ent, dict):      # per-file auto-sized bloom
-                m, bm_hex = ent["bits"], ent["bitmap"]
-            else:                          # legacy single-global-size
-                m, bm_hex = global_bits, ent
+        if isinstance(ent, dict):
+            m = ent["bits"]
             if m not in pos_cache:
                 pos_cache[m] = _bloom_positions(value, m, hashes)
-            bitmap = int(bm_hex, 16)
+            bitmap = int(ent["bitmap"], 16)
             if not all(bitmap >> p & 1 for p in pos_cache[m]):
                 continue
         kept.append(str(root / rel))

@@ -21,9 +21,10 @@ use, rendered with regex + literal-eval — no Jinja engine needed):
   path is ``ModelContext.stream`` from a streaming_table model)
 - ``STREAM read_files('<path>', format => '<fmt>')`` (Databricks Auto
   Loader table function, `bronze_iot_events.sql:12-15`) → a landing
-  view the model's builder materializes on first run via the engine's
-  infer-once sources (sources/json_source.py / files.py) — the OSS
-  Auto Loader substitute, applied INSIDE the SQL dialect
+  view the model's builder registers on every run through its
+  format's batch reader (sources/json_source.py, files.py: json, csv,
+  text, parquet, orc), which infers a json/csv schema afresh on each
+  run — not the stream readers' infer-once contract
 
 Materializations map: ``view``/``table`` as-is; ``streaming_table`` →
 ``table`` under batch rendering (noted in the model description);
@@ -247,13 +248,13 @@ def load_sql_project(models_dir: str | Path,
 
         def make_builder(rendered_sql: str, landing_views: list):
             def builder(ctx):
+                from ..sources import files, json_source
                 for view, lpath, fmt in landing_views:
-                    if fmt == "json":
-                        from ..sources.json_source import read_json_batch
-                        df = read_json_batch(ctx.spark, lpath)
-                    else:
-                        from ..sources.files import read_file_batch
-                        df = read_file_batch(ctx.spark, lpath, fmt)
+                    read = {"json": json_source.read_json_batch,
+                            "csv": files.read_csv_batch,
+                            "text": files.read_text_batch}.get(fmt)
+                    df = read(ctx.spark, lpath) if read else \
+                        files.read_file_batch(ctx.spark, lpath, fmt)
                     df.createOrReplaceTempView(view)
                 return ctx.spark.sql(rendered_sql)
             return builder

@@ -174,6 +174,78 @@ def _band_key_col(n_hashes: int, bands: int) -> Column:
         for b in range(bands)]))
 
 
+def _lsh_index(df: DataFrame, text_col: str, key_col: str, *,
+               n_hashes: int, bands: int, shingle_n: int,
+               max_band_bucket: int | None
+               ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """One corpus side's LSH index: ``(ex, sigs, slim)`` = its cached
+    exploded (key, shingle) rows, its cached (key, sig_*, sz)
+    signatures and its (key, band) rows, hot bands past
+    ``max_band_bucket`` dropped (None keeps every band).
+
+    ``ex`` feeds the signatures AND the exact-Jaccard verification, so
+    tokenization/shingling runs once; every downstream op is a codegen
+    join/aggregate, and no shingle array ever rides a shuffle
+    (MEMORY_AND_DISK + LRU eviction keeps the cache safe on long-lived
+    sessions; its size, O(total shingles), is the operator's working
+    set).  ``sigs`` is cached because with the cap on, ``slim`` feeds
+    both the band counts and the capped join.  with_size: the Jaccard
+    denominators ride the signature shuffle as one long per key, so
+    the verify tail never re-aggregates shingle rows (optimization
+    r12, guide §2.4).
+    """
+    ex = df.select(
+        F.col(key_col).alias("key"),
+        _shingle_expr(text_col, shingle_n).alias("s")
+    ).cache()
+    sigs = _sigs_from_exploded(ex, n_hashes, with_size=True).cache()
+    slim = sigs.select("key",
+                       F.explode(_band_key_col(n_hashes, bands)).alias("band"))
+    if max_band_bucket is not None:
+        # Hot-band guard (SCALE.md): a band bucket with B members costs
+        # B² candidate pairs; buckets past the cap are boilerplate /
+        # exact-dup clusters — drop them here and route those docs
+        # through exact_dedup/fingerprint_dedup instead, keeping the
+        # worst-case pair count ≤ buckets × cap².
+        counts = slim.groupBy("band").agg(
+            F.count(F.lit(1)).alias("_bn"))
+        slim = (slim.join(counts, "band")
+                .filter(F.col("_bn") <= max_band_bucket).drop("_bn"))
+    return ex, sigs, slim
+
+
+def _verify_jaccard(cand: DataFrame, first: tuple[str, DataFrame, str],
+                    second: tuple[str, DataFrame, str],
+                    threshold: float) -> DataFrame:
+    """Exact-Jaccard tail over distinct candidate pairs: keeps the
+    pairs with jaccard ≥ threshold as ``(k1, k2, jaccard)``.
+
+    ``first``/``second`` = ``(cand key column, cached (key, s, sz)
+    rows of the candidate keys, size alias "sz_a" or "sz_b")``, joined
+    in that order.  |a∩b| comes from joining the pairs to both sides'
+    shingle rows; |a∪b| = |a| + |b| − |a∩b| (ngrams() array_distincts,
+    so shingle sets are distinct).  min(sz) is exact: sz is constant
+    per key, so per pair group both mins ARE the two sizes.
+    """
+    (k1, ex1, sz1), (k2, ex2, sz2) = first, second
+    inter = (cand
+             .join(ex1.select(F.col("key").alias(k1), "s",
+                              F.col("sz").alias(sz1)), k1)
+             .join(ex2.select(F.col("key").alias(k2), "s",
+                              F.col("sz").alias(sz2)), [k2, "s"])
+             .groupBy(k1, k2)
+             .agg(F.count(F.lit(1)).alias("inter"),
+                  F.min("sz_a").alias("sz_a"),
+                  F.min("sz_b").alias("sz_b")))
+    # raw IEEE quotient of exact ints (no ROUND): bit-identical across
+    # engines; ROUND(q, 6) was a cross-engine HALF_UP boundary hazard
+    # whenever inter/union lands exactly on a x.xxxxxx5 decimal
+    jac = (F.col("inter") /
+           (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
+    return (inter.filter(jac >= threshold)
+            .select(k1, k2, jac.alias("jaccard")))
+
+
 def minhash_lsh_pairs(df: DataFrame, text_col: str, key_col: str, *,
                       n_hashes: int = 6, bands: int = 3,
                       shingle_n: int = 3,
@@ -197,37 +269,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, key_col: str, *,
     # shingle/md5 work here is an order of magnitude heavier per row,
     # which is why the spread pays on this path.)
     from .hints import spread_if_under_split
-    spread = spread_if_under_split(df)
-    # Exploded distinct (key, shingle) rows feed BOTH the signatures and
-    # the exact-Jaccard verification — every downstream op is a codegen
-    # join/aggregate; no shingle array ever rides a shuffle and no
-    # interpreted lambda runs per candidate.
-    # The exploded relation feeds the signature aggregate AND the
-    # candidate-key semi-join — cache it so tokenization/shingling runs
-    # once, not twice.  MEMORY_AND_DISK + LRU eviction keeps this safe on
-    # long-lived sessions; size is O(total shingles), the operator's
-    # working set by definition.
-    ex = spread.select(
-        F.col(key_col).alias("key"),
-        _shingle_expr(text_col, shingle_n).alias("s")
-    ).cache()
-    # with_size: the Jaccard denominators (shingle-set sizes) ride this
-    # aggregate's existing shuffle as one long per key, so the tail
-    # never re-aggregates the candidate shingle rows (optimization r12,
-    # guide §2.4: the old size pass was a whole extra exchange).
-    sigs = _sigs_from_exploded(ex, n_hashes, with_size=True).cache()
-    slim = sigs.select("key",
-                       F.explode(_band_key_col(n_hashes, bands)).alias("band"))
-    if max_band_bucket is not None:
-        # Hot-band guard (SCALE.md): a band bucket with B members costs
-        # B² candidate pairs; buckets past the cap are boilerplate /
-        # exact-dup clusters — drop them here and route those docs
-        # through exact_dedup/fingerprint_dedup instead, keeping the
-        # worst-case pair count ≤ buckets × cap².
-        counts = slim.groupBy("band").agg(
-            F.count(F.lit(1)).alias("_bn"))
-        slim = (slim.join(counts, "band")
-                .filter(F.col("_bn") <= max_band_bucket).drop("_bn"))
+    ex, sigs, slim = _lsh_index(
+        spread_if_under_split(df), text_col, key_col, n_hashes=n_hashes,
+        bands=bands, shingle_n=shingle_n, max_band_bucket=max_band_bucket)
     cand = (slim.alias("a")
             .join(slim.alias("b"), (F.col("a.band") == F.col("b.band")) &
                   (F.col("a.key") < F.col("b.key")))
@@ -260,26 +304,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, key_col: str, *,
     # constant-per-group mins, deleting the two post-aggregate size
     # joins and their exchanges (optimization r12, guide §2.4).
     exc = ex.join(kz, "key").cache()
-    # |a∩b| by joining candidate pairs to both sides' shingle rows;
-    # |a∪b| = |a| + |b| − |a∩b| (shingle sets are distinct because
-    # ngrams() array_distincts).  min(sz) is exact: sz is constant per
-    # key, so per (key_a, key_b) group both mins ARE the two sizes.
-    ex_a = exc.select(F.col("key").alias("key_a"), "s",
-                      F.col("sz").alias("sz_a"))
-    ex_b = exc.select(F.col("key").alias("key_b"), "s",
-                      F.col("sz").alias("sz_b"))
-    inter = (cand.join(ex_a, "key_a").join(ex_b, ["key_b", "s"])
-             .groupBy("key_a", "key_b")
-             .agg(F.count(F.lit(1)).alias("inter"),
-                  F.min("sz_a").alias("sz_a"),
-                  F.min("sz_b").alias("sz_b")))
-    # raw IEEE quotient of exact ints (no ROUND): bit-identical across
-    # engines; ROUND(q, 6) was a cross-engine HALF_UP boundary hazard
-    # whenever inter/union lands exactly on a x.xxxxxx5 decimal
-    jac = (F.col("inter") /
-           (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-    return (inter.filter(jac >= threshold)
-            .select("key_a", "key_b", jac.alias("jaccard")))
+    return _verify_jaccard(cand, ("key_a", exc, "sz_a"),
+                           ("key_b", exc, "sz_b"), threshold)
 
 
 def minhash_lsh_cross_pairs(batch: DataFrame, base: DataFrame,
@@ -324,37 +350,16 @@ def minhash_lsh_cross_pairs(batch: DataFrame, base: DataFrame,
     """
     from .hints import maybe_broadcast
 
-    def prep(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-        ex = df.select(
-            F.col(key_col).alias("key"),
-            _shingle_expr(text_col, shingle_n).alias("s")
-        ).cache()
-        # Cache the signature aggregate (mirrors minhash_lsh_pairs):
-        # with the hot-band guard on, slim feeds BOTH the band counts
-        # and the capped join — without the cache the MinHash aggregate
-        # + band-key md5 would re-run over every key in the second
-        # branch (exchange reuse shares only the pre-agg shuffle).
-        # with_size: Jaccard denominators ride this shuffle (see
-        # minhash_lsh_pairs) so the tail pays no size re-aggregation.
-        sigs = _sigs_from_exploded(ex, n_hashes, with_size=True).cache()
-        slim = sigs.select(
-            "key", F.explode(_band_key_col(n_hashes, bands)).alias("band"))
-        return ex, slim, sigs
-
-    ex_b, slim_b, sigs_b = prep(batch)
-    ex_a, slim_a, sigs_a = prep(base)
-    if max_band_bucket is not None:
-        # Hot-band guard, BASE side (the unbounded one): a band bucket
-        # with B base members costs B candidates per batch doc hitting
-        # it — on template/boilerplate-heavy corpora B is corpus-sized
-        # and the candidate relation explodes (measured: the uncapped
-        # ×100 probe does not finish; see SCALE.md).  Bands past the
-        # cap are exact/near-identical clusters whose duplicate mass
-        # the md5 tier already catches (byte-identical batch docs
-        # match there regardless of this cap).
-        counts = slim_a.groupBy("band").agg(F.count(F.lit(1)).alias("_bn"))
-        slim_a = (slim_a.join(counts, "band")
-                  .filter(F.col("_bn") <= max_band_bucket).drop("_bn"))
+    ex_b, sigs_b, slim_b = _lsh_index(
+        batch, text_col, key_col, n_hashes=n_hashes, bands=bands,
+        shingle_n=shingle_n, max_band_bucket=None)
+    # The hot-band cap guards the BASE side only (the unbounded one):
+    # a bucket with B base members costs B candidates per batch doc
+    # hitting it (the uncapped ×100 probe does not finish; SCALE.md).
+    # Byte-identical batch docs still match in the md5 tier.
+    ex_a, sigs_a, slim_a = _lsh_index(
+        base, text_col, key_col, n_hashes=n_hashes, bands=bands,
+        shingle_n=shingle_n, max_band_bucket=max_band_bucket)
     bands_b = slim_b.select(F.col("key").alias("batch_key"), "band")
     if broadcast_batch is True:
         bands_b = F.broadcast(bands_b)
@@ -381,21 +386,8 @@ def minhash_lsh_cross_pairs(batch: DataFrame, base: DataFrame,
                   "key", "leftsemi"))
     exc_b = ex_b.join(kz_b, "key").cache()
     exc_a = ex_a.join(kz_a, "key").cache()
-    inter = (cand
-             .join(exc_b.select(F.col("key").alias("batch_key"), "s",
-                                F.col("sz").alias("sz_b")), "batch_key")
-             .join(exc_a.select(F.col("key").alias("base_key"), "s",
-                                F.col("sz").alias("sz_a")),
-                   ["base_key", "s"])
-             .groupBy("batch_key", "base_key")
-             .agg(F.count(F.lit(1)).alias("inter"),
-                  F.min("sz_a").alias("sz_a"),
-                  F.min("sz_b").alias("sz_b")))
-    # raw IEEE quotient of exact ints — see minhash_lsh_pairs note
-    jac = (F.col("inter") /
-           (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-    return (inter.filter(jac >= threshold)
-            .select("batch_key", "base_key", jac.alias("jaccard")))
+    return _verify_jaccard(cand, ("batch_key", exc_b, "sz_b"),
+                           ("base_key", exc_a, "sz_a"), threshold)
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str, key_col: str, *,

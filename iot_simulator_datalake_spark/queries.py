@@ -73,8 +73,9 @@ def load(spark: "SparkSession", sf_dir: str, name: str) -> "DataFrame":
 def normalize_ts(spark: "SparkSession", df: "DataFrame",
                  name: str) -> "DataFrame":
     """``events.ts`` as a µs instant, for a batch or a streaming read of
-    the raw parquet (:func:`load`, ``queries_streaming._stream_source``);
-    every other table passes through unchanged."""
+    the raw parquet (:func:`load` and every stream over it in
+    ``queries_streaming``); every other table passes through
+    unchanged."""
     dtype = dict(df.dtypes).get("ts") if name == "events" else None
     if dtype == "bigint":
         # TIMESTAMP(NANOS) parquet read via nanosAsLong → convert to µs

@@ -393,12 +393,10 @@ def streaming_interval_join_left(spark: "SparkSession",
             f"{land}/{i}_heartbeat.parquet")
 
     def stream():
-        s = (spark.readStream.schema(raw_schema)
-             .option("recursiveFileLookup", "true")
-             .option("maxFilesPerTrigger", 1).parquet(land))
-        if ts_is_long:
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return s
+        return normalize_ts(spark, spark.readStream.schema(raw_schema)
+                            .option("recursiveFileLookup", "true")
+                            .option("maxFilesPerTrigger", 1).parquet(land),
+                            "events")
 
     clicks = (stream().filter(F.col("event_type") == "click")
               .select(F.col("event_id").alias("click_id"),
@@ -477,38 +475,35 @@ FROM events GROUP BY 1
 def streaming_stateful_totals(spark: "SparkSession",
                               sf_dir: str) -> "DataFrame":
     """Custom stateful streaming operator (applyInPandasWithState,
-    streaming/stateful.py:running_totals_micro): per-user running
+    streaming/stateful.py:running_totals): per-user running
     (count, sum) maintained in keyed state across micro-batches,
     drained with Trigger.AvailableNow.
 
     Determinism: values are quantized to int64 micro-units JVM-side
-    before crossing the Arrow boundary, so the Python processor only
-    adds integers (order-independent); the final division back to
-    double and DuckDB's decimal→double cast are both correctly
-    rounded, hence bit-equal.
+    before crossing the Arrow boundary, so ``running_totals`` sums a
+    long column and the Python processor only adds integers
+    (order-independent); the final division back to double and
+    DuckDB's decimal→double cast are both correctly rounded, hence
+    bit-equal.
 
     Scale: state is O(distinct keys) in the executor state store;
     update-mode emissions are one row per key per batch.  The memory
     sink accumulates one row per (key, batch) — latest-wins dedup by
     the monotone n_events picks each key's final state, exactly the
     CDC W1 pattern.
-
-    The Spark 4 ``transformWithStateInPandas`` twin of this operator
-    (named typed state + timers) is plumbed in streaming/stateful_v2.py
-    but needs protobuf, absent from this container — see
-    tests/test_streaming.py::test_stateful_v2_import_gated.
     """
-    from .streaming.stateful import quantize_micro, running_totals_micro
+    from .streaming.stateful import quantize_micro, running_totals
     stream = _stream_source(spark, sf_dir)
-    out = running_totals_micro(
-        quantize_micro(stream, "user_id", "value").groupBy("key"))
+    out = running_totals(
+        quantize_micro(stream, "user_id", "value").groupBy("key"),
+        "key", "v_micro")
     final = (drain_to_memory(out, "update", "stream_tws")
              .withColumn("rn", F.row_number().over(
                  W.partitionBy("key").orderBy(F.col("n_events").desc())))
              .where("rn = 1"))
     return final.select(
         "key", "n_events",
-        (F.col("total_micro") / F.lit(10_000.0)).alias("total_value"))
+        (F.col("total") / F.lit(10_000.0)).alias("total_value"))
 
 
 from .queries_timeseries import ANOMALY_ZSCORE_ORACLE  # noqa: E402
@@ -641,19 +636,16 @@ def streaming_apply_changes(spark: "SparkSession",
 
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     raw_schema = raw.schema
-    ts_is_long = dict(raw.dtypes).get("ts") == "bigint"
 
     land = scratch("apply_stream_")
     for i in range(3):
         (raw.filter(F.col("event_id") % 3 == i).coalesce(1)
          .write.mode("overwrite").parquet(f"{land}/slice_{i}.parquet"))
 
-    stream = (spark.readStream.schema(raw_schema)
-              .option("recursiveFileLookup", "true")
-              .option("maxFilesPerTrigger", 1).parquet(land))
-    if ts_is_long:
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
+    stream = normalize_ts(spark, spark.readStream.schema(raw_schema)
+                          .option("recursiveFileLookup", "true")
+                          .option("maxFilesPerTrigger", 1).parquet(land),
+                          "events")
     changes = stream.select("user_id", "event_id", "ts", "event_type")
 
     ac = ApplyChanges(

@@ -20,29 +20,6 @@ if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
 
 
-def _key_type(grouped, key_col: str) -> "T.DataType":
-    """Grouping-key type taken from the grouped stream itself, so the
-    output/state schemas match whatever the caller grouped by — a
-    hardcoded LongType key made every string-keyed stream (the
-    simulator's own 'dev-0' ids!) die at Arrow conversion while the
-    signature promised generality."""
-    return grouped._df.schema[key_col].dataType
-
-
-def running_schema(key_type: "T.DataType") -> T.StructType:
-    return T.StructType([
-        T.StructField("key", key_type),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-    ])
-
-
-_STATE_SCHEMA = T.StructType([
-    T.StructField("n", T.LongType()),
-    T.StructField("total", T.DoubleType()),
-])
-
-
 def running_totals(grouped, key_col: str, value_col: str) -> "DataFrame":
     """Per-key running (count, sum) maintained across micro-batches.
 
@@ -50,61 +27,41 @@ def running_totals(grouped, key_col: str, value_col: str) -> "DataFrame":
 
         stream.groupBy("user_id") |> running_totals("user_id", "value")
 
-    Emits one updated row per key per micro-batch (update semantics).
-    Key type follows the grouped column (string/long/... all work).
+    Emits one updated ``(key, n_events, total)`` row per key per
+    micro-batch (update semantics).  Both types follow the grouped
+    stream: the key keeps its column's type (a hardcoded LongType key
+    made every string-keyed stream, the simulator's own 'dev-0' ids,
+    die at Arrow conversion), and the total keeps its value column's
+    kind, as SQL ``SUM`` does — an integral column sums exactly in
+    Python ints into a long (order-independent, hence bit-equal across
+    partitionings, batch splits and retries; ``quantize_micro`` feeds
+    this path), any other column into a double.
     """
+    schema = grouped._df.schema
+    integral = isinstance(schema[value_col].dataType, T.IntegralType)
+    num, total_type = (int, T.LongType()) if integral else \
+        (float, T.DoubleType())
 
     def update(key, pdfs: Iterator[pd.DataFrame],
                state: GroupState) -> Iterator[pd.DataFrame]:
-        n, total = state.get if state.exists else (0, 0.0)
+        n, total = state.get if state.exists else (0, num(0))
         for pdf in pdfs:
             n += len(pdf)
-            total += float(pdf[value_col].sum())
+            total += num(pdf[value_col].sum())
         state.update((n, total))
         yield pd.DataFrame({"key": [key[0]], "n_events": [n],
                             "total": [total]})
 
     return grouped.applyInPandasWithState(
-        update, outputStructType=running_schema(_key_type(grouped,
-                                                          key_col)),
-        stateStructType=_STATE_SCHEMA, outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout)
-
-
-_MICRO_STATE_SCHEMA = T.StructType([
-    T.StructField("n", T.LongType()),
-    T.StructField("total", T.LongType()),
-])
-
-
-def running_totals_micro(grouped) -> "DataFrame":
-    """Per-key running (count, Σ int64 micro-units) across batches.
-
-    Deterministic twin of ``running_totals``: expects a pre-quantized
-    ``v_micro`` int64 column (see ``quantize_micro``) so the Python
-    side only ever adds integers — order-independent, hence bit-equal
-    across partitionings, batch splits, and retries.
-    """
-
-    def update(key, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        n, total = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += int(pdf["v_micro"].sum())
-        state.update((n, total))
-        yield pd.DataFrame({"key": [key[0]], "n_events": [n],
-                            "total_micro": [total]})
-
-    out = T.StructType([
-        T.StructField("key", _key_type(grouped, "key")),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_micro", T.LongType()),
-    ])
-    return grouped.applyInPandasWithState(
-        update, outputStructType=out,
-        stateStructType=_MICRO_STATE_SCHEMA, outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout)
+        update,
+        outputStructType=T.StructType([
+            T.StructField("key", schema[key_col].dataType),
+            T.StructField("n_events", T.LongType()),
+            T.StructField("total", total_type)]),
+        stateStructType=T.StructType([
+            T.StructField("n", T.LongType()),
+            T.StructField("total", total_type)]),
+        outputMode="update", timeoutConf=GroupStateTimeout.NoTimeout)
 
 
 def quantize_micro(stream: "DataFrame", key_col: str,

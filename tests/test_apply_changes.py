@@ -166,3 +166,25 @@ def test_apply_adopts_parent_layout_state(spark, tmp_path, layout):
     assert path.is_symlink()
     assert not (tmp_path / "state.old").exists()
     assert not (tmp_path / "state.staging").exists()
+
+
+@pytest.mark.parametrize("leftover", ["state.staging", "state.old"])
+def test_vacuum_drops_swap_leftovers_beside_live_state(spark, tmp_path,
+                                                        leftover):
+    """A staged swap killed before it moved the live dir aside left
+    ``<name>.staging`` beside the live plain dir; one killed after its
+    promotion left ``<name>.old`` beside it.  Neither is ever adopted,
+    so vacuum deletes both: a dead full copy must not outlive it."""
+    from iot_simulator_datalake_spark.engine.publish import (
+        vacuum_table_versions)
+    schema = "k int, ts int, _is_deleted boolean"
+    path = tmp_path / "state"
+    spark.createDataFrame([(1, 10, False)], schema).write.parquet(str(path))
+    spark.createDataFrame([(9, 15, False)], schema) \
+        .write.parquet(str(tmp_path / leftover))
+    ac = ApplyChanges(spark, path, key="k", order_col="ts")
+    ac.apply(spark.createDataFrame([(3, 20, False)], schema))
+    vacuum_table_versions(path)
+    assert sorted(p.name for p in tmp_path.iterdir()) == \
+        ["state", "state.log", path.resolve().name]
+    assert sorted(r["k"] for r in ac.read().collect()) == [1, 3]

@@ -497,6 +497,29 @@ def test_publish_writes_every_published_file():
     assert offenders == []
 
 
+def test_one_implementation_per_operator():
+    """Each operator has one implementation, the one the queries run:
+    one ``applyInPandasWithState`` call (``stateful.running_totals``,
+    whose total keeps the value column's kind) and no
+    ``transformWithStateInPandas`` twin; one ``events.ts`` ns→µs
+    conversion (``queries.normalize_ts``); and one bloom manifest
+    format, so ``build_bloom_manifest`` takes no sizing options."""
+    from iot_simulator_datalake_spark.engine.skipping import (
+        build_bloom_manifest)
+    stateful_calls, twins, ts_convs = [], [], []
+    for p in sorted(PKG.rglob("*.py")):
+        rel, text = str(p.relative_to(PKG)), p.read_text()
+        stateful_calls += [rel for _n, f in _calls(ast.parse(text))
+                           if f == "applyInPandasWithState"]
+        twins += [rel] * text.count("transformWithStateInPandas")
+        ts_convs += [rel] * text.count("ts div 1000")
+    assert stateful_calls == ["streaming/stateful.py"]
+    assert twins == []
+    assert ts_convs == ["queries.py"]
+    assert list(inspect.signature(build_bloom_manifest).parameters) == \
+        ["path", "cols"]
+
+
 def test_one_publication_protocol():
     """The staged swap is retired: no module names it or its entry
     recovery, and nothing hands a ``finalize=`` hook to engine.publish —

@@ -148,8 +148,7 @@ def test_bloom_autosizes_per_file(spark, tmp_path):
     """Fixed-size blooms saturate as files grow (the ×10-replica sweep
     measured 8192 bits vs 1.25M keys/file = every probe positive, zero
     skipping).  The builder must size each file's bloom by its
-    distinct count so a sparse probe still prunes on big files — and
-    legacy pinned-size manifests must still be readable."""
+    distinct count so a sparse probe still prunes on big files."""
     from iot_simulator_datalake_spark.engine.skipping import (
         BLOOM_BITS, build_bloom_manifest, build_stats_manifest,
         prune_files_eq, read_stats_manifest)
@@ -171,9 +170,29 @@ def test_bloom_autosizes_per_file(spark, tmp_path):
     reads = sum(len(prune_files_eq(path, "k", 10**9 + i))
                 for i in range(64))
     assert reads <= 32, f"bloom ineffective on large files: {reads}"
-    # pinned-size mode still writes/reads (legacy global-bits path)
-    build_bloom_manifest(path, ["k"], bits=1 << 22)
-    assert len(prune_files_eq(path, "k", 123_456)) >= 1
+
+
+def test_bloom_entry_of_another_form_keeps_its_file(spark, tmp_path):
+    """The reader knows one entry form, ``{bits, bitmap}``; an entry in
+    any other form (a bare hex bitmap with no size) cannot be probed,
+    so its file is kept — pruning stays conservative."""
+    import json
+    from iot_simulator_datalake_spark.engine.skipping import (
+        STATS_MANIFEST, build_bloom_manifest, build_stats_manifest,
+        prune_files_eq, read_stats_manifest)
+    path = tmp_path / "t"
+    # two files whose ranges both hold the absent probe 101
+    for mode, keys in (("overwrite", [0, 200]), ("append", [2, 198])):
+        spark.createDataFrame([(k,) for k in keys], ["k"]).coalesce(1) \
+            .write.mode(mode).parquet(str(path))
+    build_stats_manifest(path, ["k"])
+    build_bloom_manifest(path, ["k"])
+    assert prune_files_eq(path, "k", 101) == []    # bloom prunes both
+    man = read_stats_manifest(path)
+    for per_col in man["bloom"]["files"].values():
+        per_col["k"] = "0x0"                       # bare hex, no size
+    (path / STATS_MANIFEST).write_text(json.dumps(man))
+    assert len(prune_files_eq(path, "k", 101)) == 2
 
 
 def test_range_scan_on_timestamp_column(spark, tmp_path):

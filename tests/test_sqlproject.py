@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import textwrap
 
+import pytest
 from pyspark.sql import functions as F
 
 from iot_simulator_datalake_spark.engine import Engine
@@ -70,6 +71,27 @@ def test_sql_project_end_to_end(spark, tmp_path):
     out = {r["device"]: (r["n"], r["total"])
            for r in eng.table("gold.gold_rollup").collect()}
     assert out == {"a": (1, 5.0), "b": (1, 9.0)}   # min_v=2 filter applied
+
+
+@pytest.mark.parametrize("fmt", ["csv", "text"])
+def test_read_files_csv_and_text_landings_run(spark, tmp_path, fmt):
+    """``read_files`` over a csv or text landing dir reaches that
+    format's batch reader (both used to reach the parquet/orc-only
+    reader and raise ValueError)."""
+    land = tmp_path / "land"
+    land.mkdir()
+    (land / f"part.{fmt}").write_text(
+        "device,v\na,1\nb,2\n" if fmt == "csv" else "a\nb\n")
+    root = tmp_path / "models"
+    (root / "bronze").mkdir(parents=True)
+    (root / "bronze" / "landed.sql").write_text(
+        "{{ config(materialized='table') }}\n"
+        f"select * from STREAM read_files('{land}', format => '{fmt}')")
+    eng = Engine(spark, load_sql_project(root), warehouse=tmp_path / "wh")
+    eng.run()
+    got = {tuple(r) for r in eng.table("bronze.landed").collect()}
+    assert got == ({("a", 1), ("b", 2)} if fmt == "csv"
+                   else {("a",), ("b",)})
 
 
 def test_schema_routed_project_runs(spark, tmp_path):

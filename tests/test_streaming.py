@@ -199,6 +199,9 @@ def test_stateful_running_totals(spark, tmp_path):
     res = {r["key"]: (r["n_events"], r["total"])
            for r in spark.table(name).collect()}
     assert res == {1: (2, 15.0), 2: (1, 7.0)}
+    # a double value column gives a double total
+    assert spark.table(name).schema["total"].dataType.typeName() == \
+        "double"
 
 
 def test_stateful_running_totals_string_keys(spark, tmp_path):
@@ -229,11 +232,11 @@ def test_stateful_running_totals_string_keys(spark, tmp_path):
 
 
 def test_stateful_running_totals_micro_two_waves(spark, tmp_path):
-    """Integer-state variant survives a second wave: state carries
-    across restarts via the checkpoint and totals stay exact."""
-    import uuid
+    """Over a long (micro-unit) column the total is an exact long and
+    survives a second wave: state carries across restarts via the
+    checkpoint and totals stay exact."""
     from iot_simulator_datalake_spark.streaming.stateful import (
-        quantize_micro, running_totals_micro)
+        quantize_micro, running_totals)
     src = tmp_path / "src"
     src.mkdir()
     df1 = spark.createDataFrame(
@@ -244,8 +247,9 @@ def test_stateful_running_totals_micro_two_waves(spark, tmp_path):
 
     def drain():
         stream = spark.readStream.schema(df1.schema).parquet(str(src))
-        out = running_totals_micro(
-            quantize_micro(stream, "user_id", "value").groupBy("key"))
+        out = running_totals(
+            quantize_micro(stream, "user_id", "value").groupBy("key"),
+            "key", "v_micro")
         q = (out.writeStream.outputMode("update")
              .foreachBatch(lambda df, _bid:
                            df.write.mode("append").parquet(sink))
@@ -257,45 +261,13 @@ def test_stateful_running_totals_micro_two_waves(spark, tmp_path):
     spark.createDataFrame([(2, 0.0001)], ["user_id", "value"]) \
         .coalesce(1).write.mode("append").parquet(str(src))
     drain()
+    got = spark.read.parquet(sink)
+    assert got.schema["total"].dataType.typeName() == "long"
     latest = {}
-    for r in spark.read.parquet(sink).collect():
+    for r in got.collect():
         if r["key"] not in latest or r["n_events"] > latest[r["key"]][0]:
-            latest[r["key"]] = (r["n_events"], r["total_micro"])
+            latest[r["key"]] = (r["n_events"], r["total"])
     assert latest == {1: (2, 157_500), 2: (2, 70_001)}
-
-
-def test_stateful_v2_import_gated(spark, tmp_path):
-    """The Spark 4 StatefulProcessor twin: module always imports (the
-    plumbing is real); the runtime path needs protobuf, absent here."""
-    from iot_simulator_datalake_spark.streaming.stateful_v2 import (
-        RunningTotalsProcessor, running_totals_v2)
-    assert callable(RunningTotalsProcessor.handleInputRows)
-    import pytest
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas runtime needs protobuf "
-               "(r3 audit: worker crashes importing google.protobuf."
-               "descriptor; no protobuf runtime exists on this image "
-               "and installs are disallowed — the applyInPandasWithState "
-               "twin streaming_stateful_totals carries the gated "
-               "capability instead)")
-    import uuid
-    src = tmp_path / "src"
-    src.mkdir()
-    df = spark.createDataFrame(
-        [(1, 10.0), (1, 5.0), (2, 7.0)], ["user_id", "value"])
-    df.coalesce(1).write.mode("overwrite").parquet(str(src))
-    stream = spark.readStream.schema(df.schema).parquet(str(src))
-    out = running_totals_v2(stream, "user_id", "value")
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    q = (out.writeStream.outputMode("update").format("memory")
-         .queryName(name)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    res = {r["key"]: (r["n_events"], r["total_micro"])
-           for r in spark.table(name).collect()}
-    assert res == {1: (2, 150_000), 2: (1, 70_000)}
 
 
 def test_streaming_hll_stream_matches_batch_and_envelope(spark):
