@@ -23,11 +23,21 @@ backfilled version starts without one (``publish.overlay_version``).
 Per-file Bloom entries have one form, ``{bits, bitmap}`` sized per
 file by :func:`build_bloom_manifest`; :func:`prune_files_eq` keeps a
 file whose entry has any other form.
+
+Timestamps get stats only when written as INT64 (the engine's write
+policy, ``session.RUNTIME_CONFS``, writes TIMESTAMP(MICROS); Spark's
+default INT96 has none).  Stats and probes compare in one form
+(:func:`_norm`): a timestamp that carries a timezone is converted to
+UTC and compared without one, and a date compares as its midnight, the
+way Spark compares a date with a timestamp.  A manifest written before
+that form (no ``"norm"`` key) prunes nothing on a date or timestamp
+probe: its stored strings mix forms that do not order by value.
 """
 
 from __future__ import annotations
 
 import json
+from datetime import date, datetime, time, timezone
 from pathlib import Path
 from typing import TYPE_CHECKING
 
@@ -37,15 +47,36 @@ if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
 
 STATS_MANIFEST = "_file_stats.json"
+#: the manifest's value form; manifests without it predate :func:`_norm`'s
+#: one temporal form
+NORM = 2
 
 
 def _norm(v):
-    """JSON-portable normalization for min/max values."""
+    """JSON-portable normalization for min/max values and probes.
+
+    Dates and timestamps become one fixed-width string form that orders
+    by value: naive UTC, ``YYYY-MM-DDTHH:MM:SS.ffffff``.  pyarrow
+    returns INT64 timestamp stats with a timezone while probes usually
+    have none, and date stats are plain dates: comparing their bare
+    isoformats dropped a file whose bound equals the probe."""
+    if isinstance(v, datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(timezone.utc).replace(tzinfo=None)
+        return v.isoformat(timespec="microseconds")
+    if isinstance(v, date):
+        return _norm(datetime.combine(v, time()))
     if hasattr(v, "isoformat"):
         return v.isoformat()
     if isinstance(v, bytes):
         return v.decode("utf-8", "replace")
     return v
+
+
+def _stale(manifest: dict, probe) -> bool:
+    """Whether ``manifest`` cannot prune for ``probe``: it was written
+    before :data:`NORM` and the probe is a date or timestamp."""
+    return manifest.get("norm") != NORM and isinstance(probe, date)
 
 
 def build_stats_manifest(path: str | Path, cols: list[str]) -> int:
@@ -83,7 +114,7 @@ def build_stats_manifest(path: str | Path, cols: list[str]) -> int:
             if lo is not None:
                 stats[c] = [_norm(lo), _norm(hi)]
         entries[str(f.relative_to(root))] = stats
-    out = {"columns": cols, "files": entries}
+    out = {"columns": cols, "files": entries, "norm": NORM}
     write_file_atomic(root / STATS_MANIFEST,
                       json.dumps(out, indent=1, sort_keys=True))
     return len(entries)
@@ -102,15 +133,14 @@ def prune_files(path: str | Path, col: str, lo=None, hi=None) -> list[str]:
     root = Path(path)
     manifest = read_stats_manifest(root)
     # normalize the probe bounds the same way the manifest stored its
-    # min/max (_norm: datetimes -> isoformat strings, bytes -> str) —
-    # prune_files_eq already did; the range path compared str vs
-    # datetime and crashed every timestamp-column range scan
+    # min/max (_norm); a raw str-vs-datetime comparison raises
     nlo = None if lo is None else _norm(lo)
     nhi = None if hi is None else _norm(hi)
+    stale = _stale(manifest, lo) or _stale(manifest, hi)
     kept = []
     for rel, stats in manifest["files"].items():
         rng = stats.get(col)
-        if rng is None:
+        if rng is None or stale:
             kept.append(str(root / rel))
             continue
         fmin, fmax = rng
@@ -259,18 +289,23 @@ def prune_files_eq(path: str | Path, col: str, value) -> list[str]:
     """Files that may contain ``col = value``: min/max range test AND
     Bloom membership (when a ``{bits, bitmap}`` bloom exists for the
     file+column).  Files lacking stats or such a bloom are
-    conservatively kept."""
+    conservatively kept, and so is every file of a manifest that
+    predates :data:`NORM` when ``value`` is a date or timestamp (its
+    bloom keys were hashed from the old strings too)."""
     root = Path(path)
     manifest = read_stats_manifest(root)
+    if _stale(manifest, value):
+        return [str(root / rel) for rel in manifest["files"]]
     bloom = manifest.get("bloom") or {}
     hashes = bloom.get("hashes", BLOOM_HASHES)
     pos_cache: dict[int, list[int]] = {}
+    nval = _norm(value)
     kept = []
     for rel, stats in manifest["files"].items():
         rng = stats.get(col)
         if rng is not None:
             fmin, fmax = rng
-            if not (fmin <= _norm(value) <= fmax):
+            if not (fmin <= nval <= fmax):
                 continue
         ent = (bloom.get("files", {}).get(rel) or {}).get(col)
         if isinstance(ent, dict):

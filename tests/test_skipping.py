@@ -209,20 +209,136 @@ def test_range_scan_on_timestamp_column(spark, tmp_path):
         F.col("id"),
         F.expr("timestamp'2024-01-01' + make_interval(0,0,0,id)")
         .alias("ts"))
-    # INT96 (the default output type) carries no pyarrow min/max —
-    # write micros so the manifest actually has timestamp stats
-    prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType",
-                   "TIMESTAMP_MICROS")
-    try:
-        df.repartitionByRange(4, "ts").write.parquet(str(t))
-    finally:
-        spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    # the write policy stores timestamps as INT64 micros, which carry
+    # min/max (Spark's default INT96 has none)
+    df.repartitionByRange(4, "ts").write.parquet(str(t))
     build_stats_manifest(t, ["ts"])
     out, n_read, n_total = scan_with_skipping(
         spark, t, "ts", lo=datetime(2024, 1, 20), hi=datetime(2024, 1, 30))
     assert out.count() == 11
     assert n_read < n_total            # pruning actually bit
+
+
+def _range_files(spark, path, col_expr, name, n=100, files=4):
+    """``n`` rows of ``id`` and ``name`` = ``col_expr``, range-partitioned
+    on ``name`` into ``files`` files; returns each file's (min, max) of
+    ``name`` as pyarrow reads it, in order."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    (spark.range(n).select("id", F.expr(col_expr).alias(name))
+     .repartitionByRange(files, name).write.parquet(str(path)))
+    bounds = []
+    for f in path.glob("*.parquet"):
+        mm = pc.min_max(pq.read_table(f, columns=[name])[name]).as_py()
+        bounds.append((mm["min"], mm["max"]))
+    return sorted(bounds)
+
+
+def test_timestamp_probe_equal_to_a_bound_keeps_its_file(spark, tmp_path):
+    """INT64 timestamp stats come back from pyarrow with a UTC timezone
+    and probes come without one: as bare isoformat strings a probe
+    equal to a file's min sorted below it, and the range, equality and
+    bloom paths all dropped the one file holding the row."""
+    from datetime import timezone
+    from iot_simulator_datalake_spark.engine.skipping import (
+        build_bloom_manifest, prune_files_eq, scan_with_skipping_eq)
+    t = tmp_path / "ts_table"
+    bounds = _range_files(
+        spark, t, "timestamp'2024-01-01' + make_interval(0,0,0,id)", "ts")
+    assert bounds[1][0].tzinfo is not None       # stats carry a timezone
+    probe = bounds[1][0].astimezone(timezone.utc).replace(tzinfo=None)
+    build_stats_manifest(t, ["ts"])
+    out, n_read, n_total = scan_with_skipping(spark, t, "ts",
+                                              lo=probe, hi=probe)
+    assert (out.count(), n_read, n_total) == (1, 1, 4)
+    assert len(prune_files_eq(t, "ts", probe)) == 1
+    build_bloom_manifest(t, ["ts"])
+    for p in (probe, probe.date()):              # a date probes its midnight
+        out, n_read, _ = scan_with_skipping_eq(spark, t, "ts", p)
+        assert (out.count(), n_read) == (1, 1)
+
+
+def test_date_column_probed_with_datetimes(spark, tmp_path):
+    """A date column's stats are plain dates; a datetime probe compares
+    by value (a date is its midnight, as in Spark), so a probe equal to
+    a file's max keeps that file on the range and bloom paths."""
+    from datetime import datetime, time
+    from iot_simulator_datalake_spark.engine.skipping import (
+        build_bloom_manifest, scan_with_skipping_eq)
+    t = tmp_path / "date_table"
+    bounds = _range_files(spark, t, "date'2024-01-01' + CAST(id AS INT)", "d")
+    lo = datetime.combine(bounds[0][1], time())
+    hi = datetime.combine(bounds[2][0], time())
+    build_stats_manifest(t, ["d"])
+    c = F.col("d")
+    full = spark.read.parquet(str(t))
+    for rng, cond in (((lo, None), c >= F.lit(lo)),
+                      ((None, hi), c <= F.lit(hi)),
+                      ((lo, hi), c.between(F.lit(lo), F.lit(hi)))):
+        out, _, _ = scan_with_skipping(spark, t, "d", *rng)
+        assert out.count() == full.filter(cond).count() > 0, rng
+    build_bloom_manifest(t, ["d"])
+    for p in (lo, hi, lo.date()):
+        out, n_read, _ = scan_with_skipping_eq(spark, t, "d", p)
+        assert (out.count(), n_read) == (1, 1), p
+
+
+def test_manifest_before_norm_never_drops_a_file(spark, tmp_path):
+    """A manifest written before the one temporal form (no ``norm``
+    key, timestamps stored as tz-tagged isoformat strings) cannot order
+    a timestamp probe: it keeps every file for one, range or equality,
+    and still prunes on its numeric columns."""
+    import json
+    from datetime import datetime, timezone
+    from iot_simulator_datalake_spark.engine.skipping import (
+        STATS_MANIFEST, prune_files_eq, read_stats_manifest)
+    t = tmp_path / "ts_table"
+    bounds = _range_files(
+        spark, t, "timestamp'2024-01-01' + make_interval(0,0,0,id)", "ts")
+    probe = bounds[1][0].astimezone(timezone.utc).replace(tzinfo=None)
+    build_stats_manifest(t, ["id", "ts"])
+    man = read_stats_manifest(t)
+    del man["norm"]
+    for stats in man["files"].values():
+        stats["ts"] = [datetime.fromisoformat(v).replace(
+            tzinfo=timezone.utc).isoformat() for v in stats["ts"]]
+    (t / STATS_MANIFEST).write_text(json.dumps(man))
+    assert len(prune_files(t, "ts", probe, probe)) == 4
+    assert len(prune_files_eq(t, "ts", probe)) == 4
+    out, _, _ = scan_with_skipping(spark, t, "ts", lo=probe, hi=probe)
+    assert out.count() == 1
+    assert len(prune_files(t, "id", 0, 0)) == 1
+
+
+def test_engine_silver_prunes_on_its_time_key(spark, tmp_path):
+    """Silver as the engine writes it, one file per micro-batch, prunes
+    on ``timestamp``: each batch covers its own 90 days, so a ten-day
+    range reads fewer files than silver holds and returns the same
+    rows as the unpruned filter.  INT96 timestamps carry no stats, and
+    there every file was read."""
+    from datetime import datetime, timedelta
+    from iot_simulator_datalake_spark.engine import Engine
+    from iot_simulator_datalake_spark.pipeline import build_registry
+    from conftest import write_iot_events
+
+    landing, wh = tmp_path / "landing", tmp_path / "wh"
+    eng = Engine(spark, build_registry(streaming=True),
+                 config={"iot_events_path": str(landing)}, warehouse=wh)
+    for i in range(4):
+        write_iot_events(landing, n_events=60, n_files=1, seed=200 + i,
+                         start=datetime(2024, 1, 1) + timedelta(days=100 * i))
+        eng.run()
+    silver = wh / "silver" / "iot_events"
+    n = build_stats_manifest(silver, ["timestamp"])
+    assert n >= 4
+    lo, hi = datetime(2024, 4, 20), datetime(2024, 4, 30)
+    out, n_read, n_total = scan_with_skipping(spark, silver, "timestamp",
+                                              lo=lo, hi=hi)
+    expect = eng.table("silver.iot_events").filter(
+        F.col("timestamp").between(F.lit(lo), F.lit(hi)))
+    assert n_read < n_total == n
+    rows = sorted(expect.collect())
+    assert rows and sorted(out.collect()) == rows
 
 
 def test_pruned_scan_keeps_hive_partition_columns(spark, tmp_path):

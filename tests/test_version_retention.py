@@ -1,13 +1,19 @@
 """Bounded, compact lake footprint: version install logs every version
 in the table's commit log and keeps the newest two by default (the
-current version and the one it replaced), and every engine write is
-zstd parquet.  Each test here fails under unbounded retention, snappy
-writes, or a reclaim that deletes every non-current version by glob."""
+current version and the one it replaced), and every engine write
+follows one write policy (``session.RUNTIME_CONFS``): zstd, INT64
+microsecond timestamps with min/max statistics, v2 data pages.  Each
+test here fails under unbounded retention, a write off that policy, or
+a reclaim that deletes every non-current version by glob."""
 
 from __future__ import annotations
 
+import ast
+import json
 import os
+import re
 import shutil
+from collections import Counter
 from datetime import datetime, timedelta
 from pathlib import Path
 
@@ -19,7 +25,9 @@ from iot_simulator_datalake_spark.engine.incremental import (
 from iot_simulator_datalake_spark.engine.publish import (
     _install_version, new_version_dir, read_log, vacuum_table_versions)
 from iot_simulator_datalake_spark.operators.scd import ApplyChanges
-from iot_simulator_datalake_spark.pipeline import build_registry
+from iot_simulator_datalake_spark.pipeline import (
+    attach_reference_checks, build_registry)
+from iot_simulator_datalake_spark.session import RUNTIME_CONFS
 
 from conftest import write_iot_events
 
@@ -200,22 +208,69 @@ def _codecs(path: Path) -> set[str]:
             for c in range(meta.num_columns)}
 
 
+def _timestamp_chunks(path: Path) -> list[tuple]:
+    """(column, physical type, time unit, has min/max, encodings) of each
+    row group's chunk of each timestamp column in ``path``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    f = pq.ParquetFile(path)
+    meta, arrow = f.metadata, f.schema_arrow
+    out = []
+    for c in range(meta.num_columns):
+        col = meta.schema.column(c)
+        if not pa.types.is_timestamp(arrow.field(col.name).type):
+            continue
+        unit = json.loads(col.logical_type.to_json()).get("timeUnit")
+        for g in range(meta.num_row_groups):
+            chunk = meta.row_group(g).column(c)
+            out.append((col.name, col.physical_type, unit,
+                        chunk.statistics is not None
+                        and chunk.statistics.has_min_max,
+                        chunk.encodings))
+    return out
+
+
+def _iot_engine(spark, root: Path) -> tuple[Engine, Path]:
+    landing = root / "landing"
+    eng = Engine(spark, build_registry(streaming=True),
+                 config={"iot_events_path": str(landing)},
+                 warehouse=root / "wh")
+    return eng, landing
+
+
+def _land_and_run(eng: Engine, landing: Path, rounds: range) -> None:
+    for i in rounds:
+        write_iot_events(landing, n_events=60, n_files=1, seed=100 + i,
+                         start=datetime(2024, 1, 1) + timedelta(days=7 * i))
+        eng.run()
+
+
+def _staged_layout(spark, tmp_path: Path, monkeypatch) -> list[Path]:
+    """The parquet files of one ``stage_once`` layout holding a
+    timestamp column."""
+    import tempfile
+
+    from iot_simulator_datalake_spark.stagecache import stage_once
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    src = tmp_path / "src"
+    spark.range(5).write.parquet(str(src / "t.parquet"))
+    layout = stage_once(
+        str(src), "t", "policy",
+        lambda work: spark.range(100).select(
+            "id", F.timestamp_seconds("id").alias("ts"))
+        .write.parquet(str(work)))
+    return list(layout.glob("*.parquet"))
+
+
 def test_refreshes_keep_disk_bounded_and_zstd(spark, tmp_path, monkeypatch):
     """Eight streaming refreshes of the iot DAG: each gold table keeps at
     most its current and previous version dir (the parent kept all 8),
     and every parquet file the engine wrote — streaming sinks and gold
     version dirs — and a ``stage_once`` layout are zstd, not snappy."""
-    import tempfile
-
-    from iot_simulator_datalake_spark.stagecache import stage_once
-
-    landing, wh = tmp_path / "landing", tmp_path / "wh"
-    eng = Engine(spark, build_registry(streaming=True),
-                 config={"iot_events_path": str(landing)}, warehouse=wh)
-    for i in range(8):
-        write_iot_events(landing, n_events=60, n_files=1, seed=100 + i,
-                         start=datetime(2024, 1, 1) + timedelta(days=7 * i))
-        eng.run()
+    eng, landing = _iot_engine(spark, tmp_path)
+    wh = eng.warehouse
+    _land_and_run(eng, landing, range(8))
 
     tables = [p for p in wh.rglob("*") if p.is_symlink()]
     assert sorted(p.name for p in tables) == [
@@ -228,13 +283,112 @@ def test_refreshes_keep_disk_bounded_and_zstd(spark, tmp_path, monkeypatch):
         "bronze", "silver", "gold"}
     assert set().union(*map(_codecs, files)) == {"ZSTD"}
 
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    src = tmp_path / "src"
-    spark.range(5).write.parquet(str(src / "t.parquet"))
-    layout = stage_once(str(src), "t", "codec",
-                        lambda work: spark.range(100).write.parquet(str(work)))
-    staged = list(layout.glob("*.parquet"))
+    staged = _staged_layout(spark, tmp_path, monkeypatch)
     assert staged and set().union(*map(_codecs, staged)) == {"ZSTD"}
+
+
+def test_engine_writes_int64_micros_and_v2_pages(spark, tmp_path,
+                                                  monkeypatch):
+    """Three streaming refreshes of the iot DAG, then a ``stage_once``
+    layout: every timestamp column the engine wrote is INT64
+    TIMESTAMP(MICROS) with min/max statistics (INT96 has none), and
+    silver's ``timestamp`` pages are DELTA_BINARY_PACKED (v2 pages;
+    v1 pages store them PLAIN)."""
+    eng, landing = _iot_engine(spark, tmp_path)
+    _land_and_run(eng, landing, range(3))
+    files = [p for p in eng.warehouse.rglob("*.parquet") if p.is_file()]
+    chunks = {p: _timestamp_chunks(p)
+              for p in files + _staged_layout(spark, tmp_path, monkeypatch)}
+    assert {c[:4] for cs in chunks.values() for c in cs} == {
+        ("timestamp", "INT64", "microseconds", True),
+        ("ts", "INT64", "microseconds", True)}
+    silver = [c for p, cs in chunks.items()
+              if p.relative_to(tmp_path).parts[:2] == ("wh", "silver")
+              for c in cs]
+    assert silver and all("DELTA_BINARY_PACKED" in c[4] for c in silver)
+
+
+def test_old_policy_files_upgrade_in_place(spark, tmp_path):
+    """A warehouse whose first refreshes wrote INT96 timestamps and v1
+    pages refreshes on under the current policy: silver then mixes
+    INT96 and INT64 files, holds each landed event exactly once, gold
+    equals its recomputation from the landed events, and all 11
+    reference checks pass."""
+    eng, landing = _iot_engine(spark, tmp_path)
+    attach_reference_checks(eng)
+    old = {"spark.sql.parquet.outputTimestampType": "INT96",
+           "parquet.writer.version": "v1"}
+    try:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+        _land_and_run(eng, landing, range(2))
+    finally:
+        for k in old:
+            spark.conf.set(k, RUNTIME_CONFS[k])
+    _land_and_run(eng, landing, range(2, 4))
+
+    silver_files = (eng.warehouse / "silver").rglob("*.parquet")
+    assert {c[1] for p in silver_files for c in _timestamp_chunks(p)} == {
+        "INT96", "INT64"}
+
+    events = [json.loads(line) for f in sorted(landing.glob("*.json"))
+              for line in f.read_text().splitlines()]
+    kept = [dict(e, quality_flag=e["quality_flag"].strip().lower())
+            for e in events
+            if e["quality_flag"].strip().lower() in ("good", "suspect")]
+    cols = ["device_id", "location_id", "timestamp", "sensor_type",
+            "quality_flag", "unit", "value"]
+    silver = eng.table("silver.iot_events").withColumn(
+        "timestamp", F.date_format("timestamp", "yyyy-MM-dd HH:mm:ss"))
+    assert Counter(tuple(r) for r in silver.select(*cols).collect()) == \
+        Counter(tuple(e[c] for c in cols) for e in kept)
+
+    groups: dict[tuple, list[float]] = {}
+    for e in kept:
+        ts = datetime.fromisoformat(e["timestamp"])
+        groups.setdefault((e["location_id"], e["sensor_type"],
+                           e["quality_flag"], ts.year, ts.month),
+                          []).append(e["value"])
+    gold = {tuple(r[:5]): r[5] for r in eng.table("gold.fact_iot_events")
+            .select("location_id", "sensor_type", "quality_flag", "year",
+                    "month", "avg_value").collect()}
+    assert gold.keys() == groups.keys()
+    for k, vals in groups.items():
+        assert abs(gold[k] - sum(vals) / len(vals)) < 1e-9, k
+
+    results = eng.test()
+    assert len(results) == 11
+    assert [r.name for r in results if not r.passed] == []
+
+
+#: the write-policy settings no module but session.py may set: a codec
+#: (``compression``, ``*.compression.codec``), the timestamp type, the
+#: page version
+_POLICY_KEY = re.compile(r"(^|\.)compression(\.codec)?$|outputTimestampType"
+                         r"|parquet\.writer\.version")
+
+
+def test_write_policy_is_set_only_in_session():
+    """Every parquet write inherits one policy from
+    ``session.RUNTIME_CONFS``: no other package module names a policy
+    key as a string (an ``option``, a ``conf.set``) or passes a
+    ``compression=`` argument."""
+    import iot_simulator_datalake_spark as pkg
+    root = Path(pkg.__file__).parent
+    offenders = []
+    for f in sorted(root.rglob("*.py")):
+        if f == root / "session.py":
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and _POLICY_KEY.search(node.value)) or (
+                    isinstance(node, ast.keyword)
+                    and node.arg == "compression"):
+                offenders.append(f"{f.relative_to(root)}:{node.lineno}")
+    assert offenders == []
+    assert {k for k in RUNTIME_CONFS if _POLICY_KEY.search(k)} == {
+        "spark.sql.parquet.compression.codec",
+        "spark.sql.parquet.outputTimestampType", "parquet.writer.version"}
 
 
 def test_held_state_frames_keep_their_version(spark, tmp_path):
